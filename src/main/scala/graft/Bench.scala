@@ -382,8 +382,9 @@ object Bench {
       // every line short enough that no single record can overflow a
       // line- or tail-bounded capture. Printed between the cumulative
       // line and the final short totals line so the retained suffix
-      // still ends in a parseable totals record.
-      val chunkNames = mins.keys.toSeq
+      // still ends in a parseable totals record. Sorted, so part N
+      // holds the same queries across emits and runs.
+      val chunkNames = mins.keys.toSeq.sorted
       val nparts = (chunkNames.size + 19) / 20
       chunkNames.grouped(20).zipWithIndex.foreach { case (grp, i) =>
         val part = grp.map(k => "\"" + k + "\":" + fmt2(mins(k)))

@@ -167,6 +167,23 @@ object Comparator {
       b: org.apache.spark.sql.types.DataType): Boolean =
     org.apache.spark.sql.graftshim.TypeBridge.sameTypeIgnoreNullability(a, b)
 
+  /** Column names the comparator derives on its inputs: the two row
+    * hashes, the bucket, the bag delta, the orphan row number and the
+    * orphan copy count. An input column with one of these names would
+    * be silently overwritten or consumed, so [[compare]] and
+    * [[compareAuto]] reject it (case-insensitively, as Spark resolves
+    * names).
+    */
+  val ReservedColumns: Seq[String] =
+    Seq("__h", "__h2", "__bucket", "__d", "__rn", "__copies")
+
+  private def rejectReserved(src: DataFrame, tgt: DataFrame): Unit =
+    for ((side, df) <- Seq("source" -> src, "target" -> tgt); c <- df.columns)
+      if (ReservedColumns.exists(_.equalsIgnoreCase(c)))
+        throw new IllegalArgumentException(
+          s"$side column '$c' uses a name reserved for the comparator's " +
+            s"internal columns (${ReservedColumns.mkString(", ")}); rename it")
+
   def schemaGate(src: DataFrame, tgt: DataFrame, check: SchemaCheck): Unit = {
     val (s, t) = (src.schema, tgt.schema)
     if (s.length != t.length)
@@ -288,6 +305,7 @@ object Comparator {
       src: DataFrame,
       tgt: DataFrame,
       opts: CompareOptions = CompareOptions()): DiffReport = {
+    rejectReserved(src, tgt)
     schemaGate(src, tgt, opts.schemaCheck)
     opts.progress(
       s"plan: ${opts.numBuckets} buckets over ${src.columns.length} columns (schema ${opts.schemaCheck})")
@@ -490,9 +508,13 @@ object Comparator {
     * and a repair script must replay verbatim.
     *
     * Input: an orphans frame shaped like [[DiffReport.orphans]]
-    * (`side` + data columns). Output: (side, action, dml). One narrow
-    * codegen'd projection plus one window count at the full-row grain
-    * (partitions are single rows except actual duplicates) — no
+    * (`side` + data columns). `__copies` is RESERVED: a column of
+    * that name is read as the per-row copy count that
+    * [[DiffReport.orphansWithCopies]] carries, never as data (the
+    * comparator rejects it on its inputs; see [[ReservedColumns]]).
+    * Output: (side, action, dml). One narrow codegen'd projection
+    * plus one window count at the full-row grain (partitions are
+    * single rows except actual duplicates) — no
     * corpus-wide shuffle beyond orphan volume, which the circuit
     * breaker already bounds.
     */
@@ -614,10 +636,12 @@ object Comparator {
       targetRowsPerBucket: Long = 100000L,
       opts: CompareOptions = CompareOptions(),
       srcRowsHint: Option[Long] = None,
-      tgtRowsHint: Option[Long] = None): DiffReport =
+      tgtRowsHint: Option[Long] = None): DiffReport = {
+    rejectReserved(src, tgt) // before planning, which may run a count
     compare(src, tgt,
       opts.copy(numBuckets =
         planBuckets(src, tgt, targetRowsPerBucket, srcRowsHint, tgtRowsHint)))
+  }
 
   /** The bucket count [[compareAuto]] will use — exposed so tests can
     * assert planning runs zero Spark jobs. `srcRowsHint`/`tgtRowsHint`

@@ -854,21 +854,10 @@ object Dedup {
     * edges with POINTER DOUBLING (label ← label of my label), so a
     * chain of length d converges in O(log d) rounds, not O(d) — plain
     * propagation needed ~20 rounds on chain-shaped near-dup clusters
-    * and each extra round is two shuffles. Labels are checkpointed per
-    * round: persist alone leaves the logical plan growing
-    * round-over-round, and Catalyst re-analysis of the accumulated
-    * lineage came to dominate wall time (measured: the checkpointed
-    * loop is >5× faster at 5k docs; the gap widens with rounds). No
+    * and each extra round is two shuffles. Labels are cut every round
+    * and the loop exits once a round changes no label ([[Fixpoint]]
+    * states the round-checkpoint protocol, reliable mode included). No
     * driver-side graph — both steps are shuffle joins.
-    *
-    * Checkpoint mode: when the context has a checkpoint dir set
-    * (`sc.setCheckpointDir`), rounds use RELIABLE `checkpoint()` — an
-    * executor loss mid-loop recomputes from the checkpoint files, the
-    * right trade at cluster scale. Otherwise `localCheckpoint()` (fast,
-    * but blocks pin to executors). Either way each round RELEASES the
-    * superseded round's storage (cached blocks, and the checkpoint
-    * FILES in reliable mode) once `changed` is computed, so total
-    * footprint holds at O(|V|), not O(rounds × |V|).
     */
   def connectedComponents(vertices: DataFrame, pairs: DataFrame, maxIters: Int = 20): DataFrame =
     connectedComponentsPlan(vertices, pairs, maxIters).df
@@ -884,26 +873,6 @@ object Dedup {
   def connectedComponentsPlan(vertices: DataFrame, pairs: DataFrame,
       maxIters: Int = 20): DedupPlan = {
     import org.apache.spark.sql.graftshim.CheckpointBridge
-    val sc = vertices.sparkSession.sparkContext
-    val reliable = sc.getCheckpointDir.isDefined
-    // capStats on every round's leaf: Dataset.checkpoint PRESERVES the
-    // origin plan's size estimate, so without the clamp round N's leaf
-    // inherits round N-1's join-product estimate and the digit count
-    // compounds EXPONENTIALLY in rounds — by round ~8 every stats walk
-    // is minutes of driver BigInteger math (see CheckpointBridge.capStats)
-    def ckpt(df: DataFrame): DataFrame = CheckpointBridge.capStats(
-      if (reliable) {
-        // persist first: RDD.checkpoint's file-write job otherwise
-        // RECOMPUTES the whole round's plan (compute once into cache,
-        // write from cache), then drop the pre-checkpoint cache — the
-        // checkpoint files are now the canonical copy
-        val cached = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-        val out = cached.checkpoint()
-        cached.unpersist(blocking = false)
-        out
-      } else df.localCheckpoint())
-    def release(df: DataFrame): Unit = CheckpointBridge.release(df)
-
     // SEVER the caller's pair plan once, at entry. Two reasons, both
     // measured in the 100× rehearsal: (a) the symmetrization references
     // `pairs` twice in one plan — un-severed, the caller's whole
@@ -916,7 +885,7 @@ object Dedup {
     // materialization, with every executor idle. A checkpointed edge
     // list is a LogicalRDD leaf: shallow plan, bounded stats, computed
     // once.
-    val pairsCkpt = ckpt(pairs.select(col("doc_a"), col("doc_b")))
+    val pairsCkpt = Fixpoint.cut(pairs.select(col("doc_a"), col("doc_b")))
     // PRE-PARTITIONED on v, the per-round join key: Dataset.checkpoint
     // preserves the physical plan's output partitioning on the
     // LogicalRDD leaf, so every round's edge⋈labels join re-exchanges
@@ -925,32 +894,20 @@ object Dedup {
     // establish the partitioning once); before this, each round paid a
     // full |E| exchange of sym (measured in the r16 pass: the edge
     // exchange was the largest per-round shuffle on every CC gate).
-    val sym = ckpt(pairsCkpt.select(col("doc_a").as("u"), col("doc_b").as("v"))
+    val sym = Fixpoint.cut(pairsCkpt.select(col("doc_a").as("u"), col("doc_b").as("v"))
       .unionAll(pairsCkpt.select(col("doc_b").as("u"), col("doc_a").as("v")))
       .repartition(col("v"))
       .sortWithinPartitions(col("v"))) // pre-sorted too: the checkpoint
       // leaf keeps ordering, so each round's sort-merge join skips both
       // the exchange AND the sort on the edge side
-    release(pairsCkpt) // sym holds the only copy the loop needs
+    CheckpointBridge.release(pairsCkpt) // sym holds the only copy the loop needs
     // __chg rides inside each round's checkpoint so the convergence
-    // check is a block-local aggregate over the just-materialized
+    // probe is a block-local count over the just-materialized
     // checkpoint — not an extra shuffle join per round
-    var prev = ckpt(vertices.select(col("doc_id"), col("doc_id").as("label"),
-      lit(true).as("__chg")))
-    var labels = prev.select(col("doc_id"), col("label"))
-    // ONE-ROUND GRACE on release: round N-1 is released only after round
-    // N+1 has materialized AND counted — never while any job that could
-    // still read it is in flight. (Round-3 bench tail logged a
-    // `locally checkpointed … cannot be recomputed after unpersisting`
-    // error under heavy concurrent load: eager-checkpoint materialization
-    // overlapping an immediate release of its input round is the only
-    // window where a released block could still be wanted. The grace
-    // closes that window at the cost of one extra retained round —
-    // footprint O(2|V|), still constant in rounds.)
-    var grace: DataFrame = null
-    var iter = 0
-    var changed = 1L
-    while (changed > 0 && iter < maxIters) {
+    val r = Fixpoint.run(vertices.select(col("doc_id"), col("doc_id").as("label"),
+        lit(true).as("__chg")), maxIters, Fixpoint.EachRound,
+        _.where(col("__chg")).count() == 0L) { (_, prev) =>
+      val labels = prev.select(col("doc_id"), col("label"))
       // neighbor-min FIRST (map-side-combinable, so the post-join
       // exchange carries one (doc_id, min) row per map partition×key,
       // not the raw edge-grain label stream the previous
@@ -974,27 +931,17 @@ object Dedup {
       // right side re-keys prop's own (doc_id → pl) mapping; its nmin
       // shuffle is AQE-stage-reused, so the second reference costs one
       // node-grain join, not a recompute of the edge pass.
-      val next = ckpt(prop
+      prop
         .join(prop.select(col("doc_id").as("pl"), col("pl").as("__l2")),
           Seq("pl"), "left")
         .select(col("doc_id"),
           least(col("pl"), col("__l2")).as("label"),
-          (least(col("pl"), col("__l2")) =!= col("__old")).as("__chg")))
-      changed = next.where(col("__chg")).count() // reads checkpoint blocks only
-      if (grace != null) release(grace) // round N-2: no consumer can remain
-      grace = prev
-      prev = next
-      labels = next.select(col("doc_id"), col("label"))
-      iter += 1
+          (least(col("pl"), col("__l2")) =!= col("__old")).as("__chg"))
     }
-    if (grace != null) release(grace)
-    release(sym)
-    val ownedFinal = prev // the final round checkpoint labels reads
-    DedupPlan(
-      labels.select(col("doc_id"), col("label").as("cluster_id"),
+    CheckpointBridge.release(sym)
+    r.plan(r.result.select(col("doc_id"), col("label").as("cluster_id"),
         (col("doc_id") === col("label")).as("is_keeper")),
-      "connected_components", Nil,
-      finalizers = Seq(() => release(ownedFinal)))
+      "connected_components", Nil)
   }
 
   /** Time-windowed event dedup — retry/double-delivery suppression:

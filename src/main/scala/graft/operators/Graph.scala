@@ -20,88 +20,29 @@ import org.apache.spark.sql.functions._
   * dst grain — the textbook distributed PageRank plan. Iterations
   * compose LAZILY into one Catalyst plan (no driver round trips,
   * nothing materialized between rounds); for many-iteration runs at
-  * 100 TB, checkpoint every ~5 rounds exactly as connectedComponents
-  * does to cut lineage. Node count rides in as a driver-computed
-  * literal — one COUNT, the kmeans-centroid bounded-state pattern.
+  * 100 TB, `checkpointEvery` ~5 cuts lineage ([[Fixpoint]]). Node
+  * count rides in as a driver-computed literal — one COUNT, the
+  * kmeans-centroid bounded-state pattern.
   */
 object Graph {
 
   val Scale = 1000000000000L // rank fixed-point: 1.0 == 10^12
 
   /** Materialize a managed plan's result into its OWN result-sized
-    * storage (eager local checkpoint) and release every intermediate
-    * cache/checkpoint the plan retained. This is what makes the
-    * convenience wrappers leak-free: the INPUT-sized persists (edge
-    * lists, degree tables, round checkpoints) are all gone by the time
-    * the wrapper returns; what survives is only the result's own
-    * blocks, which (a) the returned frame is itself the handle for
-    * (`CheckpointBridge.release`) and (b) — in the default
-    * localCheckpoint mode — the ContextCleaner drops automatically
-    * when the frame is garbage-collected. Neither is true of a
-    * cacheManager persist, which lives until an explicit unpersist;
-    * and (b) does NOT extend to reliable checkpoint FILES (see the
-    * storage-contract paragraph below). Cost: the plan executes at
-    * call time (the wrapper is eager, the managed `*Plan` forms stay
-    * lazy).
-    *
-    * When the context has a RELIABLE checkpoint dir configured, the
-    * result materializes through `checkpoint()` instead: the
-    * iteration rounds inside the plan already checkpointed reliably,
-    * and a localCheckpoint result on top of them would make the FINAL
-    * table the only lineage-severed block lost on executor failure —
-    * the one inconsistency in an otherwise recoverable chain. The
-    * result is persisted BEFORE the checkpoint write and unpersisted
-    * after, the same pattern every round-checkpoint helper here uses:
-    * `checkpoint()` runs one job to count and ANOTHER to write the
-    * checkpoint files, and without the persist the second job
-    * re-executes the entire (multi-iteration) lineage from scratch.
-    *
-    * Storage contract of the reliable branch: the checkpoint FILES are
-    * not dropped by the ContextCleaner when the frame is
-    * garbage-collected (that auto-drop covers localCheckpoint blocks
-    * only, unless `spark.cleaner.referenceTracking.cleanCheckpoints`
-    * is enabled) — a long-lived session that calls the eager wrappers
-    * under a checkpoint dir should release each result via
-    * `CheckpointBridge.release` when done with it, or enable
-    * `cleanCheckpoints`; otherwise each call's directory lives until
-    * application end.
+    * storage (a [[Fixpoint.cut]]) and release every intermediate the
+    * plan retained — what makes the convenience wrappers leak-free: the
+    * returned frame is the handle for its own blocks
+    * (`CheckpointBridge.release`), which in localCheckpoint mode the
+    * ContextCleaner also drops when the frame is garbage-collected.
+    * Reliable checkpoint FILES are not dropped on GC (unless
+    * `spark.cleaner.referenceTracking.cleanCheckpoints` is enabled), so
+    * a long-lived session calling the eager wrappers under a checkpoint
+    * dir releases each result when done with it.
     */
   private def eagerReleased(plan: DedupPlan): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val reliable = plan.df.sparkSession.sparkContext.getCheckpointDir.isDefined
-    // capStats: the checkpoint leaf inherits the origin plan's size
-    // estimate (possibly an astronomical join product) — clamp it so a
-    // caller composing this result can't seed compounding driver-side
-    // BigInteger stats (see CheckpointBridge.capStats)
-    val out = org.apache.spark.sql.graftshim.CheckpointBridge.capStats(
-      if (reliable) { // eager + survives executor loss
-        val cached = plan.df.persist(StorageLevel.MEMORY_AND_DISK_SER)
-        val ck = cached.checkpoint()
-        cached.unpersist(blocking = false)
-        ck
-      } else plan.df.localCheckpoint()) // eager: materializes now
+    val out = Fixpoint.cut(plan.df)
     plan.release()
     out
-  }
-
-  /** The ROUND-checkpoint protocol shared by every iterative plan
-    * (pagerank, BFS, label propagation): reliable `checkpoint()` when
-    * a checkpoint dir is set — persist-first so materialization does
-    * not execute the round twice — else `localCheckpoint()`; size
-    * stats capped either way (checkpoint PRESERVES origin estimates,
-    * and per-round estimates otherwise compound exponentially in the
-    * round count — see CheckpointBridge.capStats).
-    */
-  private def roundCkpt(df: DataFrame): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val reliable = df.sparkSession.sparkContext.getCheckpointDir.isDefined
-    org.apache.spark.sql.graftshim.CheckpointBridge.capStats(
-      if (reliable) {
-        val cached = df.persist(StorageLevel.MEMORY_AND_DISK_SER)
-        val out = cached.checkpoint()
-        cached.unpersist(blocking = false)
-        out
-      } else df.localCheckpoint())
   }
 
   /** `iters` rounds of damped PageRank over a DIRECTED edge list
@@ -137,24 +78,6 @@ object Graph {
   def componentSummary(pairs: DataFrame): DataFrame =
     eagerReleased(componentSummaryPlan(pairs))
 
-  /** Managed form: the edge list and its two tiny derivations (node
-    * set, out-degrees) are each referenced once per iteration plus the
-    * node-count job — without a persist the whole upstream (here: a
-    * full distinct over lineitem) re-executes 3·iters+ times. Cached
-    * MEMORY_AND_DISK_SER and released via the [[DedupPlan]] ownership
-    * contract, same as every other managed plan in the engine.
-    *
-    * `checkpointEvery` > 0 cuts the lazily-composed plan every that
-    * many rounds with the same checkpoint machinery
-    * [[Dedup.connectedComponents]] uses (reliable `checkpoint()` when
-    * the context has a checkpoint dir, else `localCheckpoint()`):
-    * beyond ~5 composed rounds Catalyst re-analysis of the
-    * accumulated lineage dominates, exactly the failure mode CC hit
-    * pre-checkpoint. Superseded round checkpoints are released with a
-    * one-round grace (the CC rule: never while a consumer could still
-    * be in flight); surviving checkpoint storage is owned by the
-    * returned plan's `release()`.
-    */
   /** Shared per-round edge layout for the rank walks: the edge list
     * cached PRE-PARTITIONED and PRE-SORTED on `src` (a cached frame's
     * output partitioning/ordering satisfies the per-round join's
@@ -175,40 +98,36 @@ object Graph {
       .persist(StorageLevel.MEMORY_AND_DISK_SER)
   }
 
+  /** Managed form: the edge list and its two tiny derivations (node
+    * set, out-degrees) are each referenced once per iteration plus the
+    * node-count job — without a persist the whole upstream (here: a
+    * full distinct over lineitem) re-executes 3·iters+ times. Cached
+    * MEMORY_AND_DISK_SER and released via the [[DedupPlan]] ownership
+    * contract, same as every other managed plan in the engine. Rounds
+    * compose lazily; `checkpointEvery` > 0 cuts them every that many
+    * rounds ([[Fixpoint]] states the round-checkpoint protocol).
+    */
   def pageRankPlan(edges: DataFrame, iters: Int, dampingPct: Int = 85,
                    checkpointEvery: Int = 0): DedupPlan = {
     require(iters >= 1, "need iters >= 1")
     require(dampingPct >= 0 && dampingPct <= 100, "dampingPct in [0,100]")
-    import org.apache.spark.sql.graftshim.CheckpointBridge
     import org.apache.spark.storage.StorageLevel
-    def ckpt(df: DataFrame): DataFrame = roundCkpt(df)
     val e = edgesWithDeg(edges)
     val nodes = e.select(col("src").as("id"))
       .unionAll(e.select(col("dst").as("id"))).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK_SER)
     val n = nodes.count() // one job, one long — bounded driver state
     val base = (100L - dampingPct) * Scale / (100L * n)
-    var rank = nodes.select(col("id"), lit(Scale / n).as("r"))
-    // live round checkpoints, oldest first; all but the newest are
-    // grace-held inputs of the newest and release as it supersedes them
-    var ckpts = List.empty[DataFrame]
-    (1 to iters).foreach { i =>
+    val r = Fixpoint.run(nodes.select(col("id"), lit(Scale / n).as("r")),
+        iters, Fixpoint.Lazy(checkpointEvery)) { (_, rank) =>
       val contrib = e.join(rank, e("src") === rank("id"))
         .select(col("dst").as("id"), expr("r div deg").as("c"))
         .groupBy(col("id")).agg(sum(col("c")).as("sc"))
-      rank = nodes.join(contrib, Seq("id"), "left")
+      nodes.join(contrib, Seq("id"), "left")
         .select(col("id"),
           (lit(base) + expr(s"($dampingPct * coalesce(sc, 0)) div 100")).as("r"))
-      if (checkpointEvery > 0 && i % checkpointEvery == 0 && i < iters) {
-        rank = ckpt(rank) // eager: materializes before the next round composes
-        val live = rank :: ckpts // newest + one grace round retained
-        live.drop(2).foreach(CheckpointBridge.release)
-        ckpts = live.take(2)
-      }
     }
-    val owned = ckpts
-    DedupPlan(rank, "pagerank", Seq(e, nodes),
-      finalizers = owned.map(d => () => CheckpointBridge.release(d)))
+    r.plan(r.result, "pagerank", Seq(e, nodes))
   }
 
   /** PERSONALIZED PageRank — [[pageRankPlan]] with the teleport mass
@@ -236,7 +155,6 @@ object Graph {
       checkpointEvery: Int = 0): DedupPlan = {
     require(iters >= 1, "need iters >= 1")
     require(dampingPct >= 0 && dampingPct <= 100, "dampingPct in [0,100]")
-    import org.apache.spark.sql.graftshim.CheckpointBridge
     import org.apache.spark.storage.StorageLevel
     val e = edgesWithDeg(edges)
     val sd = seeds.select(col("id")).distinct()
@@ -255,33 +173,24 @@ object Graph {
     // shuffle the seeds' expanding neighborhood, never O(|V|); the
     // full node set joins back ONCE at the end for the exact-zero
     // rows of the output contract.
-    var rank: DataFrame = sd.select(col("id"), lit(Scale / k).as("r"))
-    var ckpts = List.empty[DataFrame]
-    (1 to iters).foreach { i =>
+    val r = Fixpoint.run(sd.select(col("id"), lit(Scale / k).as("r")),
+        iters, Fixpoint.Lazy(checkpointEvery)) { (_, rank) =>
       val contrib = e.join(rank, e("src") === rank("id"))
         .select(col("dst").as("id"), expr("r div deg").as("c"))
         .groupBy(col("id")).agg(sum(col("c")).as("sc"))
-      rank = contrib.join(sd, Seq("id"), "full_outer")
+      contrib.join(sd, Seq("id"), "full_outer")
         .select(col("id"),
           (when(col("__sd").isNotNull, lit(base)).otherwise(lit(0L))
             + expr(s"($dampingPct * coalesce(sc, 0)) div 100")).as("r"))
         .where(col("r") > 0)
-      if (checkpointEvery > 0 && i % checkpointEvery == 0 && i < iters) {
-        rank = roundCkpt(rank)
-        val live = rank :: ckpts
-        live.drop(2).foreach(CheckpointBridge.release)
-        ckpts = live.take(2)
-      }
     }
     // exact zeros for everything the walk never reached — the same
     // (id, r)-for-every-node output the node-grain form returned
     val nodes = e.select(col("src").as("id"))
       .unionAll(e.select(col("dst").as("id"))).distinct()
-    val out = nodes.join(rank, Seq("id"), "left")
+    val out = nodes.join(r.result, Seq("id"), "left")
       .select(col("id"), coalesce(col("r"), lit(0L)).as("r"))
-    val owned = ckpts
-    DedupPlan(out, "personalized-pagerank", Seq(e, sd),
-      finalizers = owned.map(d => () => CheckpointBridge.release(d)))
+    r.plan(out, "personalized-pagerank", Seq(e, sd))
   }
 
   /** Triangle count over an undirected edge list given as distinct
@@ -449,21 +358,15 @@ object Graph {
     * (neighborhood queries, contamination blast radius, supply-chain
     * reach).
     *
-    * The reached set is CHECKPOINTED per round with the CC machinery
-    * (reliable `checkpoint()` when a checkpoint dir is set, else
-    * `localCheckpoint()`): each round's frontier filter, anti-join,
-    * and final output all read one flat LogicalRDD instead of a union
-    * tree that grows O(rounds²) in plan nodes — exactly the lineage
-    * failure connectedComponents hit pre-checkpoint. Superseded rounds
-    * release with a one-round grace; survivors are owned by the
-    * returned plan's `release()`. Levels are exact integers; output
-    * one row per REACHED node: (id, lvl).
+    * The reached set is cut every round ([[Fixpoint]]): each round's
+    * frontier filter, anti-join, and final output all read one flat
+    * LogicalRDD instead of a union tree that grows O(rounds²) in plan
+    * nodes. Levels are exact integers; output one row per REACHED
+    * node: (id, lvl).
     */
   def bfsLevelsPlan(edges: DataFrame, seeds: DataFrame, maxHops: Int): DedupPlan = {
     require(maxHops >= 0, "need maxHops >= 0")
-    import org.apache.spark.sql.graftshim.CheckpointBridge
     import org.apache.spark.storage.StorageLevel
-    def ckpt(df: DataFrame): DataFrame = roundCkpt(df)
     // pre-partitioned on src for the same reason as pageRankPlan: the
     // per-round frontier join requires hashpartitioning(src), and the
     // cached layout satisfies it — rounds stop re-exchanging the edges
@@ -473,23 +376,17 @@ object Graph {
       // exchange nor a sort on the (large) edge side — only the
       // node-grain table pays per-round shuffle+sort (guide §2.4)
       .persist(StorageLevel.MEMORY_AND_DISK_SER)
-    var lvl = ckpt(seeds.select(col("id")).distinct()
-      .select(col("id"), lit(0L).as("lvl")))
-    var ckpts = List(lvl) // newest first; one grace round retained
-    (1 to maxHops).foreach { h =>
+    val r = Fixpoint.run(seeds.select(col("id")).distinct()
+        .select(col("id"), lit(0L).as("lvl")), maxHops, Fixpoint.EachRound) {
+        (h, lvl) =>
       val frontier = lvl.where(col("lvl") === h - 1).select(col("id"))
       val next = e.join(frontier, e("src") === frontier("id"))
         .select(col("dst").as("id")).distinct()
         .join(lvl, Seq("id"), "left_anti")
         .select(col("id"), lit(h.toLong).as("lvl"))
-      lvl = ckpt(lvl.unionAll(next)) // eager — flattens before round h+1
-      val live = lvl :: ckpts
-      live.drop(2).foreach(CheckpointBridge.release)
-      ckpts = live.take(2)
+      lvl.unionAll(next)
     }
-    val owned = ckpts
-    DedupPlan(lvl, "bfs_levels", Seq(e),
-      finalizers = owned.map(d => () => CheckpointBridge.release(d)))
+    r.plan(r.result, "bfs_levels", Seq(e))
   }
 
   /** Component census over an undirected (u, v) pair list: component
@@ -613,10 +510,10 @@ object Graph {
     * Scale shape matches [[pageRankPlan]]: edges cached PRE-PARTITIONED
     * on src so the per-round label join never re-exchanges the edge
     * list; each round is that join + a map-side-combinable (dst,
-    * label) count + a min(struct) argmax at the node grain; round
-    * checkpoints (stats-capped) bound plan depth at high `iters`.
-    * Labels live at the node grain — O(|V|) state per round, never
-    * edge-sized.
+    * label) count + a min(struct) argmax at the node grain;
+    * `checkpointEvery` cuts bound plan depth at high `iters`
+    * ([[Fixpoint]]). Labels live at the node grain — O(|V|) state per
+    * round, never edge-sized.
     */
   def labelPropagation(edges: DataFrame, iters: Int,
       checkpointEvery: Int = 0): DataFrame =
@@ -625,9 +522,7 @@ object Graph {
   def labelPropagationPlan(edges: DataFrame, iters: Int,
       checkpointEvery: Int = 0): DedupPlan = {
     require(iters >= 1, "need iters >= 1")
-    import org.apache.spark.sql.graftshim.CheckpointBridge
     import org.apache.spark.storage.StorageLevel
-    def ckpt(df: DataFrame): DataFrame = roundCkpt(df)
     val e = edges.select(col("src"), col("dst")).repartition(col("src"))
       .sortWithinPartitions(col("src")) // cached pre-SORTED on the join
       // key too: the per-round sort-merge join then needs neither an
@@ -637,17 +532,14 @@ object Graph {
     val nodes = e.select(col("src").as("id"))
       .unionAll(e.select(col("dst").as("id"))).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK_SER)
-    var labels = nodes.select(col("id"), col("id").as("lbl"))
-    var ckpts = List.empty[DataFrame]
     // each round's label frame is consumed TWICE by the next round
-    // (vote join + keep-own coalesce) — cached, the layer computes
+    // (vote join + keep-own coalesce) — persisted, the layer computes
     // once per action instead of re-running every earlier round's
     // joins through both branches (measured 4.7 -> ~1.9 s on the q46
     // gate at sf0.1). Node-grain frames: O(iters·|V|) cached worst
-    // case; large-iters callers set checkpointEvery, which releases
-    // superseded rounds with the usual one-round grace.
-    var cached = List.empty[DataFrame]
-    (1 to iters).foreach { i =>
+    // case; large-iters callers set checkpointEvery.
+    val r = Fixpoint.run(nodes.select(col("id"), col("id").as("lbl")),
+        iters, Fixpoint.Persist(checkpointEvery)) { (_, labels) =>
       val votes = e.join(labels, e("src") === labels("id"))
         .groupBy(e("dst").as("nid"), col("lbl"))
         .agg(count(lit(1)).as("c"))
@@ -656,23 +548,10 @@ object Graph {
         .groupBy(col("nid"))
         .agg(min(struct((-col("c")).as("nc"), col("lbl").as("l"))).as("w"))
         .select(col("nid").as("id"), col("w.l").as("new_lbl"))
-      labels = labels.join(winner, Seq("id"), "left")
+      labels.join(winner, Seq("id"), "left")
         .select(col("id"), coalesce(col("new_lbl"), col("lbl")).as("lbl"))
-        .persist(StorageLevel.MEMORY_AND_DISK_SER)
-      cached ::= labels
-      if (checkpointEvery > 0 && i % checkpointEvery == 0 && i < iters) {
-        labels = ckpt(labels)
-        val live = labels :: ckpts
-        live.drop(2).foreach(CheckpointBridge.release)
-        ckpts = live.take(2)
-        // the checkpoint materialized every cached round below it —
-        // release all but the newest (still feeding the live plan)
-        cached.drop(1).foreach(_.unpersist(blocking = false))
-        cached = cached.take(1)
-      }
     }
-    DedupPlan(labels, "label-propagation", Seq(e, nodes) ++ cached,
-      finalizers = ckpts.map(d => () => CheckpointBridge.release(d)))
+    r.plan(r.result, "label-propagation", Seq(e, nodes))
   }
 
   /** Fixed-round k-CORE PEELING over an undirected (u, v) pair list —
@@ -794,7 +673,7 @@ object Graph {
     * node-grain, consumed twice (both semi-joins), and cached behind
     * the release contract exactly as [[labelPropagationPlan]] caches
     * its label frames; `checkpointEvery` bounds plan depth for deep
-    * peels with the shared round-checkpoint machinery.
+    * peels ([[Fixpoint]]).
     */
   def kCorePlan(pairs: DataFrame, k: Int, rounds: Int,
       checkpointEvery: Int = 0): DedupPlan =
@@ -804,55 +683,35 @@ object Graph {
       checkpointEvery: Int): (DedupPlan, Boolean) = {
     require(k >= 1, "need k >= 1")
     require(rounds >= 1, "need rounds >= 1")
-    import org.apache.spark.sql.graftshim.CheckpointBridge
     import org.apache.spark.storage.StorageLevel
     val e = pairs.select(col("u").as("src"), col("v").as("dst"))
       .unionAll(pairs.select(col("v").as("src"), col("u").as("dst")))
       .repartition(col("src"))
       .sortWithinPartitions(col("src")) // pre-sorted: see pageRankPlan
       .persist(StorageLevel.MEMORY_AND_DISK_SER)
-    var alive = e.select(col("src").as("id")).distinct()
-    // survivors WITH the degree that justified survival — the output
-    var core = alive.select(col("id"), lit(-1L).as("deg")) // pre-round placeholder
-    var cached = List.empty[DataFrame]
-    var ckpts = List.empty[DataFrame]
+    // materialize the round cache (its next-round consumers read it
+    // twice) and read off the survivor count: equal consecutive counts
+    // on a monotone-shrinking set ⇒ fixpoint; empty ⇒ fixpoint
     var prevN = -1L // unknown before the first peel
-    var converged = false
-    var i = 1
-    while (i <= rounds && !converged) {
-      val d = e
-        .join(alive.select(col("id").as("sid")),
+    def peeled(core: DataFrame): Boolean = {
+      val n = core.count()
+      val done = n == prevN || n == 0L
+      prevN = n
+      done
+    }
+    // round state: the survivors WITH the degree that justified
+    // survival (the output); before the first peel, every node
+    val r = Fixpoint.run(e.select(col("src").as("id")).distinct(), rounds,
+        Fixpoint.Persist(checkpointEvery), peeled) { (_, alive) =>
+      e.join(alive.select(col("id").as("sid")),
           col("src") === col("sid"), "left_semi")
         .join(alive.select(col("id").as("did")),
           col("dst") === col("did"), "left_semi")
         .groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      core = d.where(col("deg") >= k)
+        .where(col("deg") >= k)
         .select(col("src").as("id"), col("deg"))
-        .persist(StorageLevel.MEMORY_AND_DISK_SER)
-      cached ::= core
-      // materialize the round cache (its next-round consumers read it
-      // twice) and read off the survivor count: equal consecutive
-      // counts on a monotone-shrinking set ⇒ fixpoint; empty ⇒ fixpoint
-      val n = core.count()
-      converged = n == prevN || n == 0L
-      prevN = n
-      alive = core.select(col("id"))
-      if (!converged && checkpointEvery > 0 && i % checkpointEvery == 0
-          && i < rounds) {
-        val ck = roundCkpt(core)
-        alive = ck.select(col("id"))
-        core = ck
-        val live = ck :: ckpts
-        live.drop(2).foreach(CheckpointBridge.release)
-        ckpts = live.take(2)
-        cached.drop(1).foreach(_.unpersist(blocking = false))
-        cached = cached.take(1)
-      }
-      i += 1
     }
-    (DedupPlan(core, "kcore", Seq(e) ++ cached,
-      finalizers = ckpts.map(d => () => CheckpointBridge.release(d))),
-      converged)
+    (r.plan(r.result, "kcore", Seq(e)), r.converged)
   }
 
   /** WEIGHTED single-source shortest paths — min total edge weight
@@ -875,9 +734,8 @@ object Graph {
     * would not be. Per round: one src-side join of the cached
     * pre-partitioned edge list with the frontier (exchange-free by
     * layout), one map-side-combinable MIN per dst, one full-outer
-    * merge at the O(reached)-node grain. The merged frame is
-    * round-checkpointed (BFS's lineage contract) and its frontier
-    * count doubles as CONVERGENCE detection and EARLY EXIT: an empty
+    * merge at the O(reached)-node grain. The merged frame is cut
+    * every round ([[Fixpoint]]) and its frontier emptiness doubles as CONVERGENCE detection and EARLY EXIT: an empty
     * frontier is the SSSP fixpoint — remaining rounds are provable
     * no-ops and are skipped ([[ssspStatus]] reports the bit; a
     * `false` means distances are exact only for paths of <= `rounds`
@@ -893,49 +751,36 @@ object Graph {
   private def ssspImpl(edges: DataFrame, seeds: DataFrame,
       rounds: Int): (DedupPlan, Boolean) = {
     require(rounds >= 1, "need rounds >= 1")
-    import org.apache.spark.sql.graftshim.CheckpointBridge
     import org.apache.spark.storage.StorageLevel
     val e = edges.select(col("src"), col("dst"), col("w"))
       .repartition(col("src"))
       .sortWithinPartitions(col("src")) // pre-sorted: see pageRankPlan
       .persist(StorageLevel.MEMORY_AND_DISK_SER)
-    var dist = roundCkpt(seeds.select(col("id")).distinct()
-      .select(col("id"), lit(0L).as("dist")))
-    var frontier = dist // improved nodes with their just-set distances
-    var ckpts = List(dist)
-    var converged = false
-    var i = 1
-    while (i <= rounds && !converged) {
-      val offers = e.join(
-          frontier.select(col("id").as("fid"), col("dist").as("fd")),
+    // round state: every reached node's distance, `improved` marking
+    // the frontier (the seeds, before the first round); the frontier
+    // emptiness read off each cut is the convergence probe
+    val r = Fixpoint.run(seeds.select(col("id")).distinct()
+        .select(col("id"), lit(0L).as("dist"), lit(true).as("improved")),
+        rounds, Fixpoint.EachRound, _.where(col("improved")).isEmpty) {
+        (_, merged) =>
+      val offers = e.join(merged.where(col("improved"))
+            .select(col("id").as("fid"), col("dist").as("fd")),
           col("src") === col("fid"))
         .select(col("dst").as("id"), (col("fd") + col("w")).as("nd"))
         .groupBy(col("id")).agg(min(col("nd")).as("nd"))
       // full outer: an offer may reach a brand-new node (dist null) or
       // an already-reached one (keep the min); explicit CASE, not
       // least(), so null semantics are spelled out for the oracle twin
-      val merged = roundCkpt(dist.join(offers, Seq("id"), "full_outer")
+      merged.select(col("id"), col("dist")).join(offers, Seq("id"), "full_outer")
         .select(col("id"),
           when(col("dist").isNull, col("nd"))
             .when(col("nd").isNull, col("dist"))
             .when(col("nd") < col("dist"), col("nd"))
             .otherwise(col("dist")).as("dist"),
           (col("dist").isNull ||
-            (col("nd").isNotNull && col("nd") < col("dist"))).as("improved")))
-      // the checkpoint materialized the round; the frontier count read
-      // off it is the convergence probe AND the early-exit guard
-      converged = merged.where(col("improved")).isEmpty
-      dist = merged.select(col("id"), col("dist"))
-      frontier = merged.where(col("improved"))
-        .select(col("id"), col("dist"))
-      val live = merged :: ckpts
-      live.drop(2).foreach(CheckpointBridge.release)
-      ckpts = live.take(2)
-      i += 1
+            (col("nd").isNotNull && col("nd") < col("dist"))).as("improved"))
     }
-    (DedupPlan(dist, "sssp", Seq(e),
-      finalizers = ckpts.map(d => () => CheckpointBridge.release(d))),
-      converged)
+    (r.plan(r.result.select(col("id"), col("dist")), "sssp", Seq(e)), r.converged)
   }
 
   /** The q51 gate body: inverse-support shortest paths over the

@@ -142,6 +142,29 @@ class ComparatorSpec extends SparkSpec {
     }
   }
 
+  test("reserved comparator column names are rejected before any Spark job runs") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    val df = li
+    df.queryExecution.optimizedPlan // the parquet schema-inference job, outside the window
+    val withCopies = df.withColumn("__copies", lit(1L))
+    val withBucket = df.withColumn("__Bucket", lit(0L))
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val e1 = intercept[IllegalArgumentException](
+        Comparator.compare(withCopies, withCopies, CompareOptions(numBuckets = 64)))
+      assert(e1.getMessage.contains("source column '__copies'"), e1.getMessage)
+      // names resolve case-insensitively, so the check does too
+      val e2 = intercept[IllegalArgumentException](Comparator.compareAuto(df, withBucket))
+      assert(e2.getMessage.contains("target column '__Bucket'"), e2.getMessage)
+      Thread.sleep(1000) // listener bus is async
+      assert(jobs.get() == 0, s"rejection ran ${jobs.get()} Spark jobs")
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
   test("schema gate: positional type mismatch throws, ArityOnly passes") {
     val retyped = li.withColumn("l_quantity", col("l_quantity").cast("string"))
     intercept[IllegalArgumentException] {

@@ -429,4 +429,67 @@ class GraphSpec extends SparkSpec {
       == Map("z" -> 0L))
     pz.release()
   }
+
+  test("release contract: every managed iterative plan, local and reliable checkpoint modes") {
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.graftshim.CheckpointBridge
+    val e = Seq(("a", "b"), ("b", "a"), ("a", "c"), ("c", "a"), ("b", "c"),
+      ("c", "b"), ("c", "d"), ("d", "e"), ("e", "f")).toDF("src", "dst")
+    val we = e.withColumn("w", length(col("src")) + ascii(col("dst")) % 7)
+    // triangle a-b-c with the tail c-d-e-f: k=2 peels one tail node a round
+    val pairs = Seq(("a", "b"), ("a", "c"), ("b", "c"), ("c", "d"), ("d", "e"),
+      ("e", "f")).toDF("u", "v")
+    val seeds = Seq("a").toDF("id")
+    val vertices = (1L to 9L).toDF("doc_id")
+    val links = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (7L, 8L))
+      .toDF("doc_a", "doc_b")
+    // (name, managed plan with round cuts, eager reference without them)
+    val cases: Seq[(String, () => DedupPlan, () => DataFrame)] = Seq(
+      ("pageRankPlan", () => Graph.pageRankPlan(e, iters = 5, checkpointEvery = 2),
+        () => Graph.pageRank(e, iters = 5)),
+      ("personalizedPageRankPlan",
+        () => Graph.personalizedPageRankPlan(e, seeds, iters = 5, checkpointEvery = 2),
+        () => Graph.personalizedPageRank(e, seeds, iters = 5)),
+      ("bfsLevelsPlan", () => Graph.bfsLevelsPlan(e, seeds, maxHops = 4),
+        () => Graph.bfsLevels(e, seeds, maxHops = 4)),
+      ("labelPropagationPlan",
+        () => Graph.labelPropagationPlan(e, iters = 5, checkpointEvery = 2),
+        () => Graph.labelPropagation(e, iters = 5)),
+      ("kCorePlan", () => Graph.kCorePlan(pairs, k = 2, rounds = 6, checkpointEvery = 1),
+        () => Graph.kCore(pairs, k = 2, rounds = 6)),
+      ("ssspStatus", () => Graph.ssspStatus(we, seeds, rounds = 6)._1,
+        () => Graph.sssp(we, seeds, rounds = 6)),
+      ("connectedComponentsPlan", () => Dedup.connectedComponentsPlan(vertices, links),
+        () => Dedup.connectedComponents(vertices, links)))
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+    val want = cases.map { case (name, _, eager) =>
+      val out = eager()
+      val r = rows(out)
+      CheckpointBridge.release(out)
+      name -> r
+    }.toMap
+    def roundFiles(dir: java.nio.file.Path): Long = {
+      val s = java.nio.file.Files.walk(dir)
+      try s.filter(_.getFileName.toString.startsWith("rdd-")).count() finally s.close()
+    }
+    def check(reliableDir: Option[java.nio.file.Path]): Unit =
+      cases.foreach { case (name, managed, _) =>
+        val mode = if (reliableDir.isDefined) "reliable" else "local"
+        val before = spark.sparkContext.getPersistentRDDs.keySet
+        val plan = managed()
+        assert(rows(plan.df) == want(name), s"$name ($mode) differs from the eager form")
+        reliableDir.foreach(d => assert(roundFiles(d) > 0, s"$name wrote no round files"))
+        plan.release()
+        val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+        assert(leaked.isEmpty, s"$name ($mode) leaked after release: $leaked")
+        reliableDir.foreach(d =>
+          assert(roundFiles(d) == 0, s"$name left round files in the checkpoint dir"))
+      }
+    check(None)
+    val dir = java.nio.file.Files.createTempDirectory("graft-round-ckpt")
+    spark.sparkContext.setCheckpointDir(dir.toString)
+    try check(Some(dir))
+    finally spark.sparkContext.setCheckpointDir(null)
+  }
 }
