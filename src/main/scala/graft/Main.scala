@@ -74,13 +74,7 @@ object Main {
     val (src, tgt) =
       if (!spec.alignColumns) (src0, tgt0)
       else {
-        // schema-evolution mode: renames matched back, both sides
-        // projected onto the common columns, exclusions announced
-        val (s, t, srcOnly, tgtOnly) = Comparator.alignSchemas(
-          src0, Comparator.applyRenames(tgt0, spec.renames))
-        if (srcOnly.nonEmpty || tgtOnly.nonEmpty)
-          progress(s"aligned compare: excluding src-only " +
-            s"[${srcOnly.mkString(",")}] tgt-only [${tgtOnly.mkString(",")}]")
+        val (s, t, _, _) = Comparator.align(src0, tgt0, spec.renames, progress)
         (s, t)
       }
     val opts0 = spec.options

@@ -264,20 +264,11 @@ object Comparator {
       srcOnly.toIndexedSeq, tgtOnly.toIndexedSeq)
   }
 
-  /** [[compare]] after [[alignSchemas]] — the post-migration audit.
-    * Returns the aligned compare's report plus the excluded columns
-    * per side; exclusions are also announced through `opts.progress`.
-    *
-    * `renames` maps SOURCE column name → the name the migration gave
-    * it on the target (the other common schema evolution besides
-    * add/drop): the target column is matched under its old name
-    * before alignment, so a renamed column is COMPARED, not excluded.
-    */
   /** Rename target columns back to their pre-migration source names
     * (case-insensitive match on the target side); loud failure on a
     * rename naming a column the target doesn't have.
     */
-  private[graft] def applyRenames(tgt: DataFrame,
+  private def applyRenames(tgt: DataFrame,
       renames: Map[String, String]): DataFrame =
     renames.foldLeft(tgt) { case (df, (srcName, tgtName)) =>
       if (!df.columns.exists(_.equalsIgnoreCase(tgtName)))
@@ -287,14 +278,35 @@ object Comparator {
         df.columns.find(_.equalsIgnoreCase(tgtName)).get, srcName)
     }
 
+  /** The aligned compare's one pre-step, shared by [[compareAligned]]
+    * and the CLI's `align_columns` mode: `renames` matched back, then
+    * [[alignSchemas]], with the exclusions announced through
+    * `progress`. Returns what [[alignSchemas]] returns.
+    */
+  private[graft] def align(src: DataFrame, tgt: DataFrame,
+      renames: Map[String, String], progress: String => Unit)
+      : (DataFrame, DataFrame, Seq[String], Seq[String]) = {
+    val aligned @ (_, _, srcOnly, tgtOnly) = alignSchemas(src, applyRenames(tgt, renames))
+    if (srcOnly.nonEmpty || tgtOnly.nonEmpty)
+      progress(s"aligned compare: excluding src-only " +
+        s"[${srcOnly.mkString(",")}] tgt-only [${tgtOnly.mkString(",")}]")
+    aligned
+  }
+
+  /** [[compare]] after [[alignSchemas]] — the post-migration audit.
+    * Returns the aligned compare's report plus the excluded columns
+    * per side; exclusions are also announced through `opts.progress`.
+    *
+    * `renames` maps SOURCE column name → the name the migration gave
+    * it on the target (the other common schema evolution besides
+    * add/drop): the target column is matched under its old name
+    * before alignment, so a renamed column is COMPARED, not excluded.
+    */
   def compareAligned(src: DataFrame, tgt: DataFrame,
       opts: CompareOptions = CompareOptions(),
       renames: Map[String, String] = Map.empty)
       : (DiffReport, Seq[String], Seq[String]) = {
-    val (s, t, srcOnly, tgtOnly) = alignSchemas(src, applyRenames(tgt, renames))
-    if (srcOnly.nonEmpty || tgtOnly.nonEmpty)
-      opts.progress(s"aligned compare: excluding src-only " +
-        s"[${srcOnly.mkString(",")}] tgt-only [${tgtOnly.mkString(",")}]")
+    val (s, t, srcOnly, tgtOnly) = align(src, tgt, renames, opts.progress)
     (compare(s, t, opts), srcOnly, tgtOnly)
   }
 
@@ -599,9 +611,10 @@ object Comparator {
   }
 
   /** Count both sides and report the planned compare shape without
-    * executing it. The only actions are the two counts. A configured
-    * `numBuckets` (the YAML's num_buckets) overrides the heuristic —
-    * the printed plan must be the plan the real run would execute.
+    * executing it. The only actions are the two counts. The bucket
+    * count is [[compareAuto]]'s own (`planBuckets` with the same
+    * hints), or the configured `numBuckets` (the YAML's num_buckets)
+    * — the printed plan must be the plan the real run would execute.
     */
   def estimate(
       src: DataFrame,
@@ -614,9 +627,9 @@ object Comparator {
     // over the wire) — counting a JDBC side locally would pull the full
     // remote result just to print a plan
     val (s, t) = (srcRowsHint.getOrElse(src.count()), tgtRowsHint.getOrElse(tgt.count()))
-    val rows = math.max(s, t)
-    val buckets = numBuckets.getOrElse(bucketsFor(rows, targetRowsPerBucket))
-    ComparePlan(s, t, buckets, rows / math.max(1, buckets))
+    val buckets = numBuckets.getOrElse(
+      planBuckets(src, tgt, targetRowsPerBucket, srcRowsHint, tgtRowsHint))
+    ComparePlan(s, t, buckets, math.max(s, t) / math.max(1, buckets))
   }
 
   /** O13/O14 analog — the reference calibrates a per-chunk row budget

@@ -855,12 +855,16 @@ object Dedup {
     * chain of length d converges in O(log d) rounds, not O(d) — plain
     * propagation needed ~20 rounds on chain-shaped near-dup clusters
     * and each extra round is two shuffles. Labels are cut every round
-    * and the loop exits once a round changes no label ([[Fixpoint]]
-    * states the round-checkpoint protocol, reliable mode included). No
-    * driver-side graph — both steps are shuffle joins.
+    * and the loop exits once a round changes no label, after 20 rounds
+    * at the latest ([[Fixpoint]] states the round-checkpoint protocol,
+    * reliable mode included). No driver-side graph — both steps are
+    * shuffle joins.
     */
-  def connectedComponents(vertices: DataFrame, pairs: DataFrame, maxIters: Int = 20): DataFrame =
-    connectedComponentsPlan(vertices, pairs, maxIters).df
+  def connectedComponents(vertices: DataFrame, pairs: DataFrame): DataFrame =
+    connectedComponentsPlan(vertices, pairs).df
+
+  // pointer doubling doubles the reach per round: 20 rounds span ~10^6 hops
+  private val CcRounds = 20
 
   /** Managed form of [[connectedComponents]]: the returned plan's
     * `release()` also frees the FINAL round checkpoint the label table
@@ -870,8 +874,7 @@ object Dedup {
     * finalizers, so an eager materialize-then-release wrapper frees
     * every block CC created.
     */
-  def connectedComponentsPlan(vertices: DataFrame, pairs: DataFrame,
-      maxIters: Int = 20): DedupPlan = {
+  def connectedComponentsPlan(vertices: DataFrame, pairs: DataFrame): DedupPlan = {
     import org.apache.spark.sql.graftshim.CheckpointBridge
     // SEVER the caller's pair plan once, at entry. Two reasons, both
     // measured in the 100× rehearsal: (a) the symmetrization references
@@ -905,7 +908,7 @@ object Dedup {
     // probe is a block-local count over the just-materialized
     // checkpoint — not an extra shuffle join per round
     val r = Fixpoint.run(vertices.select(col("doc_id"), col("doc_id").as("label"),
-        lit(true).as("__chg")), maxIters, Fixpoint.EachRound,
+        lit(true).as("__chg")), CcRounds, Fixpoint.EachRound,
         _.where(col("__chg")).count() == 0L) { (_, prev) =>
       val labels = prev.select(col("doc_id"), col("label"))
       // neighbor-min FIRST (map-side-combinable, so the post-join

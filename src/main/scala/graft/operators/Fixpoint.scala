@@ -23,11 +23,16 @@ import org.apache.spark.storage.StorageLevel
   *    composed rounds Catalyst re-analysis of the accumulated plan
   *    dominates wall time (measured >5× on connected components at 5k
   *    docs before rounds were cut).
-  *  - '''Materialization.''' Each round is either composed lazily
-  *    ([[Lazy]]), persisted because the next round reads it twice
-  *    ([[Persist]]), or cut ([[EachRound]], which also cuts the initial
-  *    state). The first two cut every `cutEvery` rounds, never after
-  *    the last one — the caller materializes the result anyway.
+  *  - '''Materialization, chosen by the loop's shape, never by a
+  *    caller.''' A step that reads the previous round ONCE (PageRank,
+  *    personalized PageRank) runs [[Lazy]]: rounds compose into one
+  *    plan, cut every `CutEvery` rounds for lineage and fault
+  *    recovery, never after the last one — the caller materializes the
+  *    result anyway. Every other step runs [[EachRound]]: each round is
+  *    cut, the initial state included. A step that reads the previous
+  *    round twice (label propagation, k-core) must not compose — the
+  *    composed plan doubles per round, and so does every rendering and
+  *    re-analysis of it.
   *  - '''Release with a one-round grace.''' A superseded cut is
   *    released (blocks, and checkpoint FILES in reliable mode) only
   *    once the cut after it has materialized, never while a job that
@@ -35,24 +40,26 @@ import org.apache.spark.storage.StorageLevel
   *    materialization overlapping an immediate release of its input
   *    round once logged `locally checkpointed … cannot be recomputed
   *    after unpersisting` under heavy concurrent load. Footprint stays
-  *    O(2 rounds), constant in the round count. A cut also unpersists
-  *    the persisted rounds it supersedes.
+  *    O(2 rounds), constant in the round count.
   *  - '''Early exit.''' A probe reads the just-materialized round; when
   *    it reports the fixpoint, the remaining rounds are skipped.
   *  - '''Ownership.''' When the loop ends the grace round is released;
-  *    the live cut and the persisted rounds since it are handed to the
-  *    returned [[DedupPlan]], whose `release()` frees them.
+  *    the live cut is handed to the returned [[DedupPlan]], whose
+  *    `release()` frees it.
   */
 object Fixpoint {
 
   /** How each round is materialized before the next composes on it. */
   sealed trait Mode
-  /** Rounds compose into one plan; cut every `cutEvery` rounds (0: never). */
-  final case class Lazy(cutEvery: Int) extends Mode
-  /** Each round is persisted; cut every `cutEvery` rounds (0: never). */
-  final case class Persist(cutEvery: Int) extends Mode
+  /** Rounds compose into one plan, cut every `CutEvery` rounds. */
+  case object Lazy extends Mode
   /** Every round is cut, the initial state included. */
   case object EachRound extends Mode
+
+  /** Lazy rounds composed between two cuts: the depth past which
+    * re-analysis of the composed plan starts to dominate.
+    */
+  private val CutEvery = 5
 
   private val Level = StorageLevel.MEMORY_AND_DISK_SER
 
@@ -67,15 +74,15 @@ object Fixpoint {
       } else df.localCheckpoint())
 
   /** The loop's outcome: the final round, whether the probe reported the
-    * fixpoint, and the storage the managed plan must own.
+    * fixpoint, and the live cut the managed plan must own.
     */
   final case class Rounds(result: DataFrame, converged: Boolean,
-      private val persisted: Seq[DataFrame], private val live: Option[DataFrame]) {
+      private val live: Option[DataFrame]) {
     /** The managed plan over `df` (the result or a frame derived from
-      * it), retaining `inputs` plus the surviving rounds.
+      * it), retaining `inputs` plus the live cut.
       */
     def plan(df: DataFrame, strategy: String, inputs: Seq[DataFrame]): DedupPlan =
-      DedupPlan(df, strategy, inputs ++ persisted,
+      DedupPlan(df, strategy, inputs,
         finalizers = live.map(c => () => CheckpointBridge.release(c)).toSeq)
   }
 
@@ -86,38 +93,26 @@ object Fixpoint {
       probe: DataFrame => Boolean = _ => false)(
       step: (Int, DataFrame) => DataFrame): Rounds = {
     var cuts = List.empty[DataFrame] // newest first: live, then grace
-    var persisted = List.empty[DataFrame]
     def cutRound(df: DataFrame): DataFrame = {
       val c = cut(df)
       cuts ::= c
-      persisted.foreach(_.unpersist(blocking = false))
-      persisted = Nil
       c
-    }
-    val cutEvery = mode match {
-      case Lazy(n)    => n
-      case Persist(n) => n
-      case EachRound  => 0
     }
     var state = if (mode == EachRound) cutRound(init) else init
     var converged = false
     var i = 1
     while (i <= rounds && !converged) {
       val next = step(i, state)
-      val round = mode match {
-        case Lazy(_)    => next
-        case Persist(_) => val p = next.persist(Level); persisted ::= p; p
-        case EachRound  => cutRound(next)
-      }
+      val round = if (mode == EachRound) cutRound(next) else next
       converged = probe(round)
       state =
-        if (!converged && cutEvery > 0 && i % cutEvery == 0 && i < rounds) cutRound(round)
+        if (mode == Lazy && !converged && i % CutEvery == 0 && i < rounds) cutRound(round)
         else round
       cuts.drop(2).foreach(CheckpointBridge.release)
       cuts = cuts.take(2)
       i += 1
     }
     cuts.drop(1).foreach(CheckpointBridge.release)
-    Rounds(state, converged, persisted, cuts.headOption)
+    Rounds(state, converged, cuts.headOption)
   }
 }

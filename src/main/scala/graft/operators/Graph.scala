@@ -19,10 +19,10 @@ import org.apache.spark.sql.functions._
   * current O(nodes) rank table + one map-side-combinable sum at the
   * dst grain — the textbook distributed PageRank plan. Iterations
   * compose LAZILY into one Catalyst plan (no driver round trips,
-  * nothing materialized between rounds); for many-iteration runs at
-  * 100 TB, `checkpointEvery` ~5 cuts lineage ([[Fixpoint]]). Node
-  * count rides in as a driver-computed literal — one COUNT, the
-  * kmeans-centroid bounded-state pattern.
+  * nothing materialized between rounds) and [[Fixpoint]] cuts
+  * lineage every few rounds. Node count rides in as a
+  * driver-computed literal — one COUNT, the kmeans-centroid
+  * bounded-state pattern.
   */
 object Graph {
 
@@ -56,9 +56,8 @@ object Graph {
     * Long-lived sessions that want lazy composition or reliable
     * checkpoints use [[pageRankPlan]] + `release()`.
     */
-  def pageRank(edges: DataFrame, iters: Int, dampingPct: Int = 85,
-               checkpointEvery: Int = 0): DataFrame =
-    eagerReleased(pageRankPlan(edges, iters, dampingPct, checkpointEvery))
+  def pageRank(edges: DataFrame, iters: Int, dampingPct: Int = 85): DataFrame =
+    eagerReleased(pageRankPlan(edges, iters, dampingPct))
 
   /** Eager convenience form of [[triangleCountPlan]] — 1-row result,
     * all input-sized caches released before returning.
@@ -104,11 +103,9 @@ object Graph {
     * full distinct over lineitem) re-executes 3·iters+ times. Cached
     * MEMORY_AND_DISK_SER and released via the [[DedupPlan]] ownership
     * contract, same as every other managed plan in the engine. Rounds
-    * compose lazily; `checkpointEvery` > 0 cuts them every that many
-    * rounds ([[Fixpoint]] states the round-checkpoint protocol).
+    * compose lazily ([[Fixpoint.Lazy]]).
     */
-  def pageRankPlan(edges: DataFrame, iters: Int, dampingPct: Int = 85,
-                   checkpointEvery: Int = 0): DedupPlan = {
+  def pageRankPlan(edges: DataFrame, iters: Int, dampingPct: Int = 85): DedupPlan = {
     require(iters >= 1, "need iters >= 1")
     require(dampingPct >= 0 && dampingPct <= 100, "dampingPct in [0,100]")
     import org.apache.spark.storage.StorageLevel
@@ -119,7 +116,7 @@ object Graph {
     val n = nodes.count() // one job, one long — bounded driver state
     val base = (100L - dampingPct) * Scale / (100L * n)
     val r = Fixpoint.run(nodes.select(col("id"), lit(Scale / n).as("r")),
-        iters, Fixpoint.Lazy(checkpointEvery)) { (_, rank) =>
+        iters, Fixpoint.Lazy) { (_, rank) =>
       val contrib = e.join(rank, e("src") === rank("id"))
         .select(col("dst").as("id"), expr("r div deg").as("c"))
         .groupBy(col("id")).agg(sum(col("c")).as("sc"))
@@ -146,13 +143,11 @@ object Graph {
     * (a broadcast-sized join at any realistic seed count).
     */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame, iters: Int,
-      dampingPct: Int = 85, checkpointEvery: Int = 0): DataFrame =
-    eagerReleased(
-      personalizedPageRankPlan(edges, seeds, iters, dampingPct, checkpointEvery))
+      dampingPct: Int = 85): DataFrame =
+    eagerReleased(personalizedPageRankPlan(edges, seeds, iters, dampingPct))
 
   def personalizedPageRankPlan(edges: DataFrame, seeds: DataFrame,
-      iters: Int, dampingPct: Int = 85,
-      checkpointEvery: Int = 0): DedupPlan = {
+      iters: Int, dampingPct: Int = 85): DedupPlan = {
     require(iters >= 1, "need iters >= 1")
     require(dampingPct >= 0 && dampingPct <= 100, "dampingPct in [0,100]")
     import org.apache.spark.storage.StorageLevel
@@ -174,7 +169,7 @@ object Graph {
     // full node set joins back ONCE at the end for the exact-zero
     // rows of the output contract.
     val r = Fixpoint.run(sd.select(col("id"), lit(Scale / k).as("r")),
-        iters, Fixpoint.Lazy(checkpointEvery)) { (_, rank) =>
+        iters, Fixpoint.Lazy) { (_, rank) =>
       val contrib = e.join(rank, e("src") === rank("id"))
         .select(col("dst").as("id"), expr("r div deg").as("c"))
         .groupBy(col("id")).agg(sum(col("c")).as("sc"))
@@ -510,17 +505,14 @@ object Graph {
     * Scale shape matches [[pageRankPlan]]: edges cached PRE-PARTITIONED
     * on src so the per-round label join never re-exchanges the edge
     * list; each round is that join + a map-side-combinable (dst,
-    * label) count + a min(struct) argmax at the node grain;
-    * `checkpointEvery` cuts bound plan depth at high `iters`
-    * ([[Fixpoint]]). Labels live at the node grain — O(|V|) state per
-    * round, never edge-sized.
+    * label) count + a min(struct) argmax at the node grain; each
+    * round is cut ([[Fixpoint.EachRound]]). Labels live at the node
+    * grain — O(|V|) state per round, never edge-sized.
     */
-  def labelPropagation(edges: DataFrame, iters: Int,
-      checkpointEvery: Int = 0): DataFrame =
-    eagerReleased(labelPropagationPlan(edges, iters, checkpointEvery))
+  def labelPropagation(edges: DataFrame, iters: Int): DataFrame =
+    eagerReleased(labelPropagationPlan(edges, iters))
 
-  def labelPropagationPlan(edges: DataFrame, iters: Int,
-      checkpointEvery: Int = 0): DedupPlan = {
+  def labelPropagationPlan(edges: DataFrame, iters: Int): DedupPlan = {
     require(iters >= 1, "need iters >= 1")
     import org.apache.spark.storage.StorageLevel
     val e = edges.select(col("src"), col("dst")).repartition(col("src"))
@@ -533,13 +525,9 @@ object Graph {
       .unionAll(e.select(col("dst").as("id"))).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK_SER)
     // each round's label frame is consumed TWICE by the next round
-    // (vote join + keep-own coalesce) — persisted, the layer computes
-    // once per action instead of re-running every earlier round's
-    // joins through both branches (measured 4.7 -> ~1.9 s on the q46
-    // gate at sf0.1). Node-grain frames: O(iters·|V|) cached worst
-    // case; large-iters callers set checkpointEvery.
+    // (vote join + keep-own coalesce), so every round is cut
     val r = Fixpoint.run(nodes.select(col("id"), col("id").as("lbl")),
-        iters, Fixpoint.Persist(checkpointEvery)) { (_, labels) =>
+        iters, Fixpoint.EachRound) { (_, labels) =>
       val votes = e.join(labels, e("src") === labels("id"))
         .groupBy(e("dst").as("nid"), col("lbl"))
         .agg(count(lit(1)).as("c"))
@@ -577,9 +565,21 @@ object Graph {
     *
     * Eager convenience form; see [[kCorePlan]].
     */
-  def kCore(pairs: DataFrame, k: Int, rounds: Int,
-      checkpointEvery: Int = 0): DataFrame =
-    eagerReleased(kCorePlan(pairs, k, rounds, checkpointEvery))
+  def kCore(pairs: DataFrame, k: Int, rounds: Int): DataFrame =
+    eagerReleased(kCorePlan(pairs, k, rounds))
+
+  /** Managed form of [[kCore]]. Scale shape: the symmetrized edge
+    * list is cached PRE-PARTITIONED on src (the [[pageRankPlan]]
+    * layout — the per-round src-side semi-join never re-exchanges
+    * it); each round is two semi-joins against the O(|V|)-and-
+    * shrinking alive set (src side exchange-free by layout, dst side
+    * exchanges only the current — already peeled — edge subset) plus
+    * one map-side-combinable degree count. Per-round alive sets are
+    * node-grain, consumed twice (both semi-joins), and cut every round
+    * ([[Fixpoint.EachRound]]).
+    */
+  def kCorePlan(pairs: DataFrame, k: Int, rounds: Int): DedupPlan =
+    kCoreStatus(pairs, k, rounds)._1
 
   /** [[kCorePlan]] plus the CONVERGENCE bit: `true` iff the peel
     * provably reached the k-core fixpoint within `rounds`. The alive
@@ -590,16 +590,45 @@ object Graph {
     * contract applied to the shrinking-vertex-set shape; without it a
     * deep peel that hasn't converged is silently wrong-by-truncation.
     *
-    * The check rides on counts of the per-round cached survivor
-    * frames (node-grain, already persisted for the next round's two
-    * semi-joins — the count materializes what the loop consumes
-    * anyway) and doubles as EARLY EXIT: once the fixpoint is reached,
-    * remaining rounds are provable no-ops and are skipped, so
+    * The check rides on counts of the per-round survivor cuts
+    * (node-grain, already materialized for the next round's two
+    * semi-joins) and doubles as EARLY EXIT: once the fixpoint is
+    * reached, remaining rounds are provable no-ops and are skipped, so
     * over-provisioning `rounds` on a shallow graph costs nothing.
     */
-  def kCoreStatus(pairs: DataFrame, k: Int, rounds: Int,
-      checkpointEvery: Int = 0): (DedupPlan, Boolean) =
-    kCoreImpl(pairs, k, rounds, checkpointEvery)
+  def kCoreStatus(pairs: DataFrame, k: Int, rounds: Int): (DedupPlan, Boolean) = {
+    require(k >= 1, "need k >= 1")
+    require(rounds >= 1, "need rounds >= 1")
+    import org.apache.spark.storage.StorageLevel
+    val e = pairs.select(col("u").as("src"), col("v").as("dst"))
+      .unionAll(pairs.select(col("v").as("src"), col("u").as("dst")))
+      .repartition(col("src"))
+      .sortWithinPartitions(col("src")) // pre-sorted: see pageRankPlan
+      .persist(StorageLevel.MEMORY_AND_DISK_SER)
+    // read the survivor count off each round's cut: equal consecutive
+    // counts on a monotone-shrinking set ⇒ fixpoint; empty ⇒ fixpoint
+    var prevN = -1L // unknown before the first peel
+    def peeled(core: DataFrame): Boolean = {
+      val n = core.count()
+      val done = n == prevN || n == 0L
+      prevN = n
+      done
+    }
+    // round state: the survivors WITH the degree that justified
+    // survival (the output); before the first peel, every node
+    val r = Fixpoint.run(e.select(col("src").as("id")).distinct(), rounds,
+        Fixpoint.EachRound, peeled) { (_, alive) =>
+      e.join(alive.select(col("id").as("sid")),
+          col("src") === col("sid"), "left_semi")
+        .join(alive.select(col("id").as("did")),
+          col("dst") === col("did"), "left_semi")
+        .groupBy(col("src")).agg(count(lit(1)).as("deg"))
+        .where(col("deg") >= k)
+        .select(col("src").as("id"), col("deg"))
+    }
+    (r.plan(r.result, "kcore", Seq(e)), r.converged)
+  }
+
 
   /** LINK PREDICTION over an undirected (u < v) edge list: score every
     * NON-adjacent node pair at distance 2 by shared-neighborhood
@@ -663,57 +692,6 @@ object Graph {
     DedupPlan(out, "link-prediction", Seq(deg, half))
   }
 
-  /** Managed form of [[kCore]]. Scale shape: the symmetrized edge
-    * list is cached PRE-PARTITIONED on src (the [[pageRankPlan]]
-    * layout — the per-round src-side semi-join never re-exchanges
-    * it); each round is two semi-joins against the O(|V|)-and-
-    * shrinking alive set (src side exchange-free by layout, dst side
-    * exchanges only the current — already peeled — edge subset) plus
-    * one map-side-combinable degree count. Per-round alive sets are
-    * node-grain, consumed twice (both semi-joins), and cached behind
-    * the release contract exactly as [[labelPropagationPlan]] caches
-    * its label frames; `checkpointEvery` bounds plan depth for deep
-    * peels ([[Fixpoint]]).
-    */
-  def kCorePlan(pairs: DataFrame, k: Int, rounds: Int,
-      checkpointEvery: Int = 0): DedupPlan =
-    kCoreImpl(pairs, k, rounds, checkpointEvery)._1
-
-  private def kCoreImpl(pairs: DataFrame, k: Int, rounds: Int,
-      checkpointEvery: Int): (DedupPlan, Boolean) = {
-    require(k >= 1, "need k >= 1")
-    require(rounds >= 1, "need rounds >= 1")
-    import org.apache.spark.storage.StorageLevel
-    val e = pairs.select(col("u").as("src"), col("v").as("dst"))
-      .unionAll(pairs.select(col("v").as("src"), col("u").as("dst")))
-      .repartition(col("src"))
-      .sortWithinPartitions(col("src")) // pre-sorted: see pageRankPlan
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
-    // materialize the round cache (its next-round consumers read it
-    // twice) and read off the survivor count: equal consecutive counts
-    // on a monotone-shrinking set ⇒ fixpoint; empty ⇒ fixpoint
-    var prevN = -1L // unknown before the first peel
-    def peeled(core: DataFrame): Boolean = {
-      val n = core.count()
-      val done = n == prevN || n == 0L
-      prevN = n
-      done
-    }
-    // round state: the survivors WITH the degree that justified
-    // survival (the output); before the first peel, every node
-    val r = Fixpoint.run(e.select(col("src").as("id")).distinct(), rounds,
-        Fixpoint.Persist(checkpointEvery), peeled) { (_, alive) =>
-      e.join(alive.select(col("id").as("sid")),
-          col("src") === col("sid"), "left_semi")
-        .join(alive.select(col("id").as("did")),
-          col("dst") === col("did"), "left_semi")
-        .groupBy(col("src")).agg(count(lit(1)).as("deg"))
-        .where(col("deg") >= k)
-        .select(col("src").as("id"), col("deg"))
-    }
-    (r.plan(r.result, "kcore", Seq(e)), r.converged)
-  }
-
   /** WEIGHTED single-source shortest paths — min total edge weight
     * from a seed set to every node reachable within `rounds`
     * relaxation rounds, over a directed (src, dst, w) edge list with
@@ -735,20 +713,18 @@ object Graph {
     * pre-partitioned edge list with the frontier (exchange-free by
     * layout), one map-side-combinable MIN per dst, one full-outer
     * merge at the O(reached)-node grain. The merged frame is cut
-    * every round ([[Fixpoint]]) and its frontier emptiness doubles as CONVERGENCE detection and EARLY EXIT: an empty
+    * every round ([[Fixpoint.EachRound]]) and its frontier emptiness
+    * doubles as CONVERGENCE detection and EARLY EXIT: an empty
     * frontier is the SSSP fixpoint — remaining rounds are provable
     * no-ops and are skipped ([[ssspStatus]] reports the bit; a
     * `false` means distances are exact only for paths of <= `rounds`
     * edges, the BFS `maxHops` contract).
     */
   def sssp(edges: DataFrame, seeds: DataFrame, rounds: Int): DataFrame =
-    eagerReleased(ssspImpl(edges, seeds, rounds)._1)
+    eagerReleased(ssspStatus(edges, seeds, rounds)._1)
 
   /** [[sssp]] plus the convergence bit (managed-plan form). */
   def ssspStatus(edges: DataFrame, seeds: DataFrame,
-      rounds: Int): (DedupPlan, Boolean) = ssspImpl(edges, seeds, rounds)
-
-  private def ssspImpl(edges: DataFrame, seeds: DataFrame,
       rounds: Int): (DedupPlan, Boolean) = {
     require(rounds >= 1, "need rounds >= 1")
     import org.apache.spark.storage.StorageLevel

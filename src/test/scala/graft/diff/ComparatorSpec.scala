@@ -207,6 +207,10 @@ class ComparatorSpec extends SparkSpec {
     // a configured num_buckets overrides the heuristic: the printed
     // plan must match the plan the real run executes
     assert(Comparator.estimate(li, li, numBuckets = Some(512)).numBuckets == 512)
+    // without one, the bucket count is compareAuto's: planned from the
+    // same statistics, not from the exact counts the plan prints
+    assert(Comparator.estimate(li, li, targetRowsPerBucket = 10).numBuckets ==
+      Comparator.planBuckets(li, li, 10))
     assert(graft.Main.parseArgs(Array("-e")).estimate)
     assert(graft.Main.parseArgs(Array("--estimate", "-f", "x.yaml")).estimate)
   }

@@ -30,22 +30,31 @@ class GraphSpec extends SparkSpec {
     assert(re.collect().map(x => x.getString(0) -> x.getLong(1)).toMap == byId)
   }
 
-  test("pagerank: checkpointEvery cuts lineage without moving a bit (iters=10)") {
+  test("pagerank: lineage cuts past 5 rounds do not move a bit (iters=11)") {
     import spark.implicits._
-    val e = Seq(("a", "b"), ("b", "a"), ("a", "c"), ("c", "a"),
-      ("a", "d"), ("d", "a"), ("b", "c"), ("c", "b")).toDF("src", "dst")
-    val lazyPlan = Graph.pageRankPlan(e, iters = 10)
-    val ckPlan = Graph.pageRankPlan(e, iters = 10, checkpointEvery = 3)
-    val expect = lazyPlan.df.collect().map(x => x.getString(0) -> x.getLong(1)).toMap
-    val got = ckPlan.df.collect().map(x => x.getString(0) -> x.getLong(1)).toMap
-    assert(got == expect)
-    // the checkpointed plan tree must be CUT: its analyzed plan no
-    // longer contains the full 10-round join ladder
-    val depth = ckPlan.df.queryExecution.analyzed.toString.linesIterator.size
-    val lazyDepth = lazyPlan.df.queryExecution.analyzed.toString.linesIterator.size
-    assert(depth < lazyDepth / 2, s"ckpt=$depth lazy=$lazyDepth")
-    lazyPlan.release()
-    ckPlan.release() // also releases surviving round checkpoints
+    val edges = Seq(("a", "b"), ("b", "a"), ("a", "c"), ("c", "a"),
+      ("a", "d"), ("d", "a"), ("b", "c"), ("c", "b"))
+    val e = edges.toDF("src", "dst")
+    // reference in plain Scala: the same integer arithmetic, no Spark
+    val deg = edges.groupBy(_._1).map { case (s, out) => s -> out.size.toLong }
+    val ids = edges.flatMap { case (s, d) => Seq(s, d) }.distinct
+    val base = 15L * Graph.Scale / (100L * ids.size)
+    var want = ids.map(_ -> Graph.Scale / ids.size).toMap
+    (1 to 11).foreach { _ =>
+      val sc = edges.groupBy(_._2).map { case (d, in) =>
+        d -> in.map { case (s, _) => want(s) / deg(s) }.sum }
+      want = ids.map(id => id -> (base + 85L * sc.getOrElse(id, 0L) / 100L)).toMap
+    }
+    val plan = Graph.pageRankPlan(e, iters = 11)
+    assert(plan.df.collect().map(x => x.getString(0) -> x.getLong(1)).toMap == want)
+    // the plan is CUT after rounds 5 and 10: one lazy round over a cut
+    // leaf is shallower than five composed rounds
+    val five = Graph.pageRankPlan(e, iters = 5)
+    val depth = plan.df.queryExecution.analyzed.toString.linesIterator.size
+    val fiveDepth = five.df.queryExecution.analyzed.toString.linesIterator.size
+    assert(depth < fiveDepth, s"iters=11: $depth lines, iters=5: $fiveDepth")
+    plan.release()
+    five.release()
   }
 
   test("triangle count: K4 minus one edge has exactly two triangles") {
@@ -109,7 +118,7 @@ class GraphSpec extends SparkSpec {
       ("b", "c"), ("c", "b")).toDF("src", "dst")
     val pairs = Seq(("a", "b"), ("a", "c"), ("b", "c")).toDF("u", "v")
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val pr = Graph.pageRank(e, iters = 3, checkpointEvery = 2)
+    val pr = Graph.pageRank(e, iters = 3)
     val tc = Graph.triangleCount(pairs)
     val bl = Graph.bfsLevels(e, Seq("a").toDF("id"), maxHops = 2)
     val cs = Graph.componentSummary(pairs)
@@ -182,7 +191,7 @@ class GraphSpec extends SparkSpec {
         assert(s.isValidLong, s"$what leaf carries an unbounded estimate: $s")
       }
     }
-    val pr = Graph.pageRankPlan(big, iters = 3, checkpointEvery = 1)
+    val pr = Graph.pageRankPlan(big, iters = 6) // cut after round 5
     assert(pr.df.collect().nonEmpty)
     assertBounded(pr.df, "pagerank")
     pr.release()
@@ -204,10 +213,10 @@ class GraphSpec extends SparkSpec {
     // tie at 1); rounds 2-3 flood the community min everywhere
     assert(l3 == Map(1L -> 1L, 2L -> 1L, 3L -> 1L,
       10L -> 10L, 11L -> 10L, 12L -> 10L))
-    // a fixed-round checkpointed run is bit-identical to the plain one
-    val withCkpt = Graph.labelPropagation(e, iters = 3, checkpointEvery = 1)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(withCkpt == l3)
+    // the communities are a fixpoint: 12 cut rounds keep them
+    val l12 = Graph.labelPropagation(e, iters = 12).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(l12 == l3)
     // round 1 alone really is the min-neighbor vote (not yet converged)
     val l1 = Graph.labelPropagation(e, iters = 1).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -366,20 +375,38 @@ class GraphSpec extends SparkSpec {
 
   test("k-core: checkpointed run is bit-identical and cuts lineage") {
     import spark.implicits._
-    // a 16-node path peels exactly its two endpoints per round — six
-    // genuinely distinct rounds, so the early-exit never fires and the
-    // lineage comparison measures checkpointing, not convergence
+    // a 16-node path peels exactly its two endpoints per round, so
+    // after r rounds a<r>..a<15-r> survive, each with degree 2
     val p = (0 until 15).map(i => (f"a$i%02d", f"a${i + 1}%02d"))
       .toDF("u", "v")
-    val plain = Graph.kCorePlan(p, k = 2, rounds = 6)
-    val ck = Graph.kCorePlan(p, k = 2, rounds = 6, checkpointEvery = 2)
-    val expect = plain.df.collect().map(x => x.getString(0) -> x.getLong(1)).toMap
-    assert(ck.df.collect().map(x => x.getString(0) -> x.getLong(1)).toMap == expect)
-    val ckDepth = ck.df.queryExecution.analyzed.toString.linesIterator.size
-    val plainDepth = plain.df.queryExecution.analyzed.toString.linesIterator.size
-    assert(ckDepth < plainDepth / 2, s"ckpt=$ckDepth plain=$plainDepth")
-    plain.release()
-    ck.release()
+    Seq(3, 6).foreach { rounds =>
+      val plan = Graph.kCorePlan(p, k = 2, rounds = rounds)
+      val got = plan.df.collect().map(x => x.getString(0) -> x.getLong(1)).toMap
+      assert(got == (rounds to 15 - rounds).map(i => f"a$i%02d" -> 2L).toMap)
+      // the result reads one round's cut, not the composed peel
+      assert(plan.df.queryExecution.analyzed.toString.linesIterator.size <= 2)
+      plan.release()
+    }
+  }
+
+  test("label propagation and k-core: result plan depth does not grow with rounds") {
+    import spark.implicits._
+    // a 40-node path: k = 2 peels two nodes a round, so 12 rounds run
+    // without an early exit
+    val pairs = (0L until 39L).map(i => (i, i + 1)).toDF("u", "v")
+    val sym = pairs.select(col("u").as("src"), col("v").as("dst"))
+      .unionAll(pairs.select(col("v").as("src"), col("u").as("dst")))
+    def depth(plan: DedupPlan): Int = {
+      val n = plan.df.queryExecution.analyzed.toString.linesIterator.size
+      plan.release()
+      n
+    }
+    val (lp4, lp12) = (depth(Graph.labelPropagationPlan(sym, iters = 4)),
+      depth(Graph.labelPropagationPlan(sym, iters = 12)))
+    assert(lp12 <= lp4 + 5, s"label propagation: 4 rounds $lp4 lines, 12 rounds $lp12")
+    val (kc4, kc12) = (depth(Graph.kCorePlan(pairs, k = 2, rounds = 4)),
+      depth(Graph.kCorePlan(pairs, k = 2, rounds = 12)))
+    assert(kc12 <= kc4 + 5, s"k-core: 4 rounds $kc4 lines, 12 rounds $kc12")
   }
 
   test("sssp: cheaper two-hop path beats the direct edge; exact integer distances") {
@@ -444,19 +471,20 @@ class GraphSpec extends SparkSpec {
     val vertices = (1L to 9L).toDF("doc_id")
     val links = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (7L, 8L))
       .toDF("doc_a", "doc_b")
-    // (name, managed plan with round cuts, eager reference without them)
+    // (name, managed plan, eager reference); PageRank and PPR run past
+    // Fixpoint's 5-round cut, so every plan holds a live round cut
     val cases: Seq[(String, () => DedupPlan, () => DataFrame)] = Seq(
-      ("pageRankPlan", () => Graph.pageRankPlan(e, iters = 5, checkpointEvery = 2),
-        () => Graph.pageRank(e, iters = 5)),
+      ("pageRankPlan", () => Graph.pageRankPlan(e, iters = 7),
+        () => Graph.pageRank(e, iters = 7)),
       ("personalizedPageRankPlan",
-        () => Graph.personalizedPageRankPlan(e, seeds, iters = 5, checkpointEvery = 2),
-        () => Graph.personalizedPageRank(e, seeds, iters = 5)),
+        () => Graph.personalizedPageRankPlan(e, seeds, iters = 7),
+        () => Graph.personalizedPageRank(e, seeds, iters = 7)),
       ("bfsLevelsPlan", () => Graph.bfsLevelsPlan(e, seeds, maxHops = 4),
         () => Graph.bfsLevels(e, seeds, maxHops = 4)),
       ("labelPropagationPlan",
-        () => Graph.labelPropagationPlan(e, iters = 5, checkpointEvery = 2),
+        () => Graph.labelPropagationPlan(e, iters = 5),
         () => Graph.labelPropagation(e, iters = 5)),
-      ("kCorePlan", () => Graph.kCorePlan(pairs, k = 2, rounds = 6, checkpointEvery = 1),
+      ("kCorePlan", () => Graph.kCorePlan(pairs, k = 2, rounds = 6),
         () => Graph.kCore(pairs, k = 2, rounds = 6)),
       ("ssspStatus", () => Graph.ssspStatus(we, seeds, rounds = 6)._1,
         () => Graph.sssp(we, seeds, rounds = 6)),
