@@ -13,6 +13,13 @@ import org.apache.spark.sql.functions._
   * step) so steps compose in any order. The whole run is ONE lazy
   * plan — nothing materializes until the sink (or the caller) acts —
   * with the usual CC-checkpoint exception inside near-dup steps.
+  *
+  * Nothing is cached between steps either, so every reference a step
+  * makes to its input (a self-join, a semi-join against its own
+  * aggregate, a side branch) re-runs every upstream step: perfbench
+  * measures about 29× input reads on `pipe_curate`. Steps therefore
+  * reference their input once where they can (`filter_stack` is one
+  * `where`). [[funnel]] is the single-execution form.
   */
 object Pipeline {
 
@@ -107,8 +114,7 @@ object Pipeline {
   private[graft] def applyStep(
       spark: SparkSession, df: DataFrame, step: StepSpec): DataFrame = step match {
     case StepSpec.FilterStack =>
-      df.join(TextAnalysis.filterStack(df)
-        .where(col("keep")).select(col("doc_id")), Seq("doc_id"), "left_semi")
+      df.where(TextAnalysis.filterStackKeep)
 
     case StepSpec.NormalizeText(textCol, form) =>
       TextAnalysis.normalizeText(df, textCol, form)

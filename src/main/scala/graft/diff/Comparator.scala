@@ -3,6 +3,7 @@ package graft.diff
 import graft.canon.Canonicalizer
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** How strictly the two schemas must agree before comparing.
   * The reference's only gate is select-list arity parsed out of the SQL
@@ -523,7 +524,9 @@ object Comparator {
     * (`side` + data columns). `__copies` is RESERVED: a column of
     * that name is read as the per-row copy count that
     * [[DiffReport.orphansWithCopies]] carries, never as data (the
-    * comparator rejects it on its inputs; see [[ReservedColumns]]).
+    * comparator rejects it on its inputs; see [[ReservedColumns]]),
+    * and must be integral (anything else is an
+    * `IllegalArgumentException`).
     * Output: (side, action, dml). One narrow codegen'd projection
     * plus one window count at the full-row grain (partitions are
     * single rows except actual duplicates) — no
@@ -538,6 +541,12 @@ object Comparator {
     // hash equally, so it IS the full-row copy count the window below
     // would derive, for free (no Exchange+Sort+Window over the orphans)
     val hasCopies = orphans.columns.contains("__copies")
+    if (hasCopies) {
+      val t = orphans.schema("__copies").dataType
+      require(Seq(ByteType, ShortType, IntegerType, LongType).contains(t),
+        "repairActions: reserved column '__copies' must be an integral " +
+          s"copy count, got ${t.simpleString}")
+    }
     val cols = orphans.columns.filter(c => c != "side" && c != "__copies").toSeq
     require(cols.nonEmpty, "need at least one data column")
     val ident = "[A-Za-z_][A-Za-z0-9_$]*"

@@ -132,40 +132,64 @@ object TextAnalysis {
     docs.select(outCols: _*)
   }
 
+  /** Exact per-document token counts of the whitespace tokens, from
+    * the native [[graft.functions.TokenStats]] kernel (one hash pass
+    * per row, no lambda): `n_tokens`, `n_types`, `top_token`,
+    * `top_bigram`, `sum_sq`.
+    */
+  private def tokenCounts: Column = graft.functions.TokenStats(toks)
+
+  /** Gopher repetition ratios from [[tokenCounts]]: (distinct ratio,
+    * top-token fraction, top-bigram fraction), each one IEEE division
+    * of two exact integers. A fraction with no tokens (bigrams) to
+    * divide by is 0.
+    */
+  private def repetitionRatios(st: Column): (Column, Column, Column) = {
+    val n = st("n_tokens")
+    def frac(top: Column, of: Column): Column =
+      when(of > 0, top.cast("double") / of.cast("double")).otherwise(lit(0.0))
+    (st("n_types").cast("double") / n.cast("double"),
+      frac(st("top_token"), n), frac(st("top_bigram"), n - 1))
+  }
+
+  private def passesRepetition(st: Column): Column = {
+    val (dr, tt, tb) = repetitionRatios(st)
+    dr >= 0.4 && tt <= 0.12 && tb <= 0.08
+  }
+
+  /** The filter stack's flags over a `text` column, in output order. */
+  private def filterFlags: Seq[(String, Column)] = {
+    val ts = toks
+    val len = length(col("text"))
+    val alpha = length(regexp_replace(col("text"), "[^a-z]", ""))
+    val alphaRatio = alpha.cast("double") / len
+    Seq(
+      "passes_quality" ->
+        (size(ts) >= 10 && size(ts) <= 1000 && alphaRatio > lit(0.6)),
+      "passes_repetition" -> passesRepetition(tokenCounts),
+      "lang_ok" ->
+        arrays_overlap(ts, array(langStopwords.head._2.map(lit): _*)))
+  }
+
+  /** The filter stack's `keep` verdict as one predicate over a frame's
+    * `text` column — what the pipeline's `filter_stack` step filters
+    * its input by, in place (no self-join, so its input is read once).
+    */
+  def filterStackKeep: Column = filterFlags.map(_._2).reduce(_ && _)
+
   /** The fused filter stack — every per-document keep/drop heuristic
     * (quality ratios, Gopher repetition, language ID, length bounds)
     * computed in ONE narrow pass over the corpus: at 100 TB each extra
     * scan of the input is the dominant cost, so the production shape is
     * one select with all flags, not a join of per-metric outputs
-    * (plan-asserted: single FileScan, no shuffle, no join).
-    * `keep` is the conjunction — the C4/Gopher-style verdict a
-    * curation run feeds to the sampler.
+    * (plan-asserted: single FileScan, no shuffle, no join, no lambda).
+    * `keep` is the conjunction ([[filterStackKeep]]) — the
+    * C4/Gopher-style verdict a curation run feeds to the sampler.
     */
-  def filterStack(docs: DataFrame): DataFrame = {
-    val ts = toks
-    val len = length(col("text"))
-    val alpha = length(regexp_replace(col("text"), "[^a-z]", ""))
-    val alphaRatio = alpha.cast("double") / len
-    val passesQuality = size(ts) >= 10 && size(ts) <= 1000 && alphaRatio > lit(0.6)
-    def topFrac(arr: Column, n: Column): Column = when(n > 0,
-      array_max(transform(array_distinct(arr), t =>
-        size(filter(arr, x => x === t)))).cast("double") / n.cast("double"))
-      .otherwise(lit(0.0))
-    val bigrams = zip_with(
-      slice(ts, lit(1), size(ts) - 1), slice(ts, lit(2), size(ts) - 1),
-      (a, b) => concat(a, lit(" "), b))
-    val dr = size(array_distinct(ts)).cast("double") / size(ts).cast("double")
-    val passesRepetition = dr >= 0.4 &&
-      topFrac(ts, size(ts)) <= 0.12 && topFrac(bigrams, size(ts) - 1) <= 0.08
-    val enHits = size(filter(ts, t => t.isInCollection(langStopwords.head._2)))
-    val langOk = enHits > 0
-    docs.select(
-      col("doc_id"),
-      passesQuality.as("passes_quality"),
-      passesRepetition.as("passes_repetition"),
-      langOk.as("lang_ok"),
-      (passesQuality && passesRepetition && langOk).as("keep"))
-  }
+  def filterStack(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id") +:
+      filterFlags.map { case (name, flag) => flag.as(name) } :+
+      filterStackKeep.as("keep"): _*)
 
   /** Gopher-style repetition metrics — the "is this document mostly the
     * same thing over and over" signal every web-scale curation run
@@ -176,32 +200,22 @@ object TextAnalysis {
     *   - `top_bigram_frac`  occurrences of the most frequent bigram / bigrams
     *   - `passes_repetition` the composite keep verdict
     *
-    * Everything is computed per row with higher-order functions over the
-    * token array — NO explode, NO shuffle, stays inside whole-stage
-    * codegen. Per-row cost is O(distinct·n) which is bounded by document
-    * length, the right trade at 100 TB where an explode+groupBy(doc,
-    * token) alternative would shuffle one row per (doc, token).
+    * The counts come from the native `token_stats` kernel
+    * ([[graft.functions.TokenStats]]): one O(n) hash pass per row, NO
+    * explode, NO shuffle — at 100 TB an explode+groupBy(doc, token)
+    * alternative would shuffle one row per (doc, token).
     * Single-token docs define `top_bigram_frac = 0` (nothing repeats).
     */
   def repetitionStats(docs: DataFrame): DataFrame = {
-    val ts = toks
-    def topFrac(arr: Column, n: Column): Column = when(n > 0,
-      array_max(transform(array_distinct(arr), t =>
-        size(filter(arr, x => x === t)))).cast("double") / n.cast("double"))
-      .otherwise(lit(0.0))
-    val bigrams = zip_with(
-      slice(ts, lit(1), size(ts) - 1), slice(ts, lit(2), size(ts) - 1),
-      (a, b) => concat(a, lit(" "), b))
-    val dr = (size(array_distinct(ts)).cast("double") / size(ts).cast("double"))
-    val tt = topFrac(ts, size(ts))
-    val tb = topFrac(bigrams, size(ts) - 1)
+    val st = tokenCounts
+    val (dr, tt, tb) = repetitionRatios(st)
     docs.select(
       col("doc_id"),
-      size(ts).cast("long").as("n_tokens"),
+      st("n_tokens").as("n_tokens"),
       dr.as("distinct_ratio"),
       tt.as("top_token_frac"),
       tb.as("top_bigram_frac"),
-      (dr >= 0.4 && tt <= 0.12 && tb <= 0.08).as("passes_repetition"))
+      passesRepetition(st).as("passes_repetition"))
   }
 
   /** Lexical-diversity metrics — the "how varied is this document's
@@ -222,20 +236,18 @@ object TextAnalysis {
     * hits libm rounding and float-sum ordering on every engine
     * differently.
     *
-    * Same per-row higher-order-function shape as [[repetitionStats]]:
-    * no explode, no shuffle, whole-stage codegen'd.
+    * Same per-row `token_stats` counts as [[repetitionStats]]: no
+    * explode, no shuffle.
     */
   def diversityStats(docs: DataFrame): DataFrame = {
-    val ts = toks
-    val counts = transform(array_distinct(ts), t => size(filter(ts, x => x === t)))
-    val sumSq = aggregate(counts, lit(0L), (a, c) => a + c.cast("long") * c.cast("long"))
-    val n = size(ts).cast("long")
+    val st = tokenCounts
+    val n = st("n_tokens")
     docs.select(
       col("doc_id"),
       n.as("n_tokens"),
-      size(array_distinct(ts)).cast("long").as("n_types"),
-      (lit(1.0) - sumSq.cast("double") / (n * n)).as("gini_simpson"),
-      ((n * n).cast("double") / sumSq).as("effective_types"))
+      st("n_types").as("n_types"),
+      (lit(1.0) - st("sum_sq").cast("double") / (n * n)).as("gini_simpson"),
+      ((n * n).cast("double") / st("sum_sq")).as("effective_types"))
   }
 
   /** Document fingerprints: md5 of the whitespace-normalized text plus

@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.functions.{BpeEncodeIds, BpeEncodeMinRank, BpeEncodePieces, DotLong, TopKAgg, UnicodeNormalize}
+import graft.functions.{BpeEncodeIds, BpeEncodeMinRank, BpeEncodePieces, DotLong, TokenStats, TopKAgg, UnicodeNormalize}
 import org.apache.spark.sql.SparkSessionExtensions
 
 /** Session-extension registration — the idiomatic injection point for
@@ -19,6 +19,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction(BpeEncodePieces.descriptor)
     ext.injectFunction(BpeEncodeMinRank.descriptor)
     ext.injectFunction(BpeEncodeIds.descriptor)
+    ext.injectFunction(TokenStats.descriptor)
   }
 }
 
@@ -45,5 +46,7 @@ object GraftExtensions {
       BpeEncodeIds.descriptor._1,
       BpeEncodeIds.descriptor._2,
       BpeEncodeIds.descriptor._3)
+    spark.sessionState.functionRegistry.registerFunction(
+      TokenStats.descriptor._1, TokenStats.descriptor._2, TokenStats.descriptor._3)
   }
 }

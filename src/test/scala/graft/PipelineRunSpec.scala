@@ -76,6 +76,25 @@ class PipelineRunSpec extends SparkSpec {
     assert(got.size < docs.count()) // the filter and dedup really dropped rows
   }
 
+  test("filter_stack step filters its input in place: one scan, no join") {
+    val spec = PipelineLoader.fromYaml(
+      s"""pipeline:
+         |  input:
+         |    db: {type: parquet, path: $docsPath}
+         |  steps:
+         |    - kind: filter_stack
+         |""".stripMargin)
+    val out = Pipeline.run(spark, spec)
+    val plan = out.queryExecution.executedPlan.toString
+    assert(plan.split("FileScan").length == 2, s"expected one scan:\n$plan")
+    assert(!plan.contains("Join"), plan)
+    val docs = spark.read.parquet(docsPath)
+    val want = graft.operators.TextAnalysis.filterStack(docs)
+      .where(col("keep")).select("doc_id").collect().map(_.getLong(0)).toSet
+    assert(out.select("doc_id").collect().map(_.getLong(0)).toSet == want)
+    assert(out.columns.toSeq == docs.columns.toSeq)
+  }
+
   test("decontaminate bloom: parses, equals the hand bloom drop, supersets exact") {
     val benchDir = java.nio.file.Files.createTempDirectory("graft-bench").toString
     val docs = spark.read.parquet(docsPath)

@@ -165,6 +165,20 @@ class ComparatorSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(l)
   }
 
+  test("repair actions: a non-integral __copies column is rejected by name") {
+    import spark.implicits._
+    val orphans = Seq(("target", 7L, "2"), ("source", 8L, "1"))
+      .toDF("side", "k", "__copies")
+    val e = intercept[IllegalArgumentException](Comparator.repairActions(orphans, "t"))
+    assert(e.getMessage.contains("'__copies'") && e.getMessage.contains("string"),
+      e.getMessage)
+    // an integral count is still read as the copy count
+    val acts = Comparator.repairActions(
+      orphans.withColumn("__copies", col("__copies").cast("int")), "t")
+      .collect().map(_.getString(1)).toSet
+    assert(acts == Set("delete_all_copies", "insert"), acts)
+  }
+
   test("schema gate: positional type mismatch throws, ArityOnly passes") {
     val retyped = li.withColumn("l_quantity", col("l_quantity").cast("string"))
     intercept[IllegalArgumentException] {

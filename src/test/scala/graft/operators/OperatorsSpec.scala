@@ -926,6 +926,16 @@ class OperatorsSpec extends SparkSpec {
     assert(!plan.contains("Exchange") && !plan.contains("Join"))
   }
 
+  test("repetition, diversity and filter stack plans hold no lambda") {
+    Seq("repetitionStats" -> TextAnalysis.repetitionStats(docs),
+      "diversityStats" -> TextAnalysis.diversityStats(docs),
+      "filterStack" -> TextAnalysis.filterStack(docs)).foreach { case (op, df) =>
+      val plan = df.queryExecution.executedPlan.toString
+      assert(!plan.toLowerCase.contains("lambdafunction"), s"$op:\n$plan")
+      assert(plan.contains("token_stats"), s"$op:\n$plan")
+    }
+  }
+
   test("compression ratio separates repetitive from diverse text") {
     import spark.implicits._
     val rep = ("spam " * 200).trim
