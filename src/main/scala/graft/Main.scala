@@ -9,7 +9,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * contract (/root/reference/command_line.py:7-48,
   * /root/reference/main.py:270-278): config path + env-var secrets in,
   * verdict on stdout, exit status out (0 within tolerance, 1 different,
-  * 2 usage/config error). `--search-diff` toggles row-level retrieval —
+  * 2 usage/config error or any failure after the config loads).
+  * `--search-diff` toggles row-level retrieval —
   * the reference parsed this flag but never read it
   * (/root/reference/command_line.py:19-27); here it works.
   */
@@ -119,26 +120,48 @@ object Main {
       }
     }
 
-  def main(argv: Array[String]): Unit = {
+  def main(argv: Array[String]): Unit = sys.exit(exec(argv))
+
+  /** The CLI body, returning the exit status instead of exiting. Any
+    * non-fatal error after the config loads prints one line to stderr
+    * and returns 2, in both modes, so a failed read can never pass for
+    * the "different" verdict. `session` runs the call on an existing
+    * session and leaves it running; by default the call builds its own
+    * and stops it.
+    */
+  private[graft] def exec(argv: Array[String],
+      session: Option[SparkSession] = None): Int = {
     val cli =
       try parseArgs(argv)
       catch {
         case e: IllegalArgumentException =>
-          System.err.println(e.getMessage); sys.exit(2)
+          System.err.println(e.getMessage); return 2
       }
+    def withSpark(body: SparkSession => Int): Int = {
+      val spark = session.getOrElse {
+        val s = GraftSession.build(cli.master)
+        s.sparkContext.setLogLevel(cli.logLevel)
+        s
+      }
+      try body(spark)
+      catch {
+        case scala.util.control.NonFatal(e) =>
+          System.err.println(s"Error: ${e.getClass.getSimpleName}: " +
+            String.valueOf(e.getMessage).linesIterator.nextOption().getOrElse(""))
+          2
+      } finally if (session.isEmpty) spark.stop()
+    }
     if (cli.pipeline) {
       // curation-pipeline mode: run the YAML step list, write the sink
-      // if configured, report row count. Exit 0 on success, 2 on config
+      // if configured, report row count. Exit 0 on success, 2 on any
       // error — there is no "difference" verdict in this mode.
       val pspec =
         try graft.config.PipelineLoader.load(cli.configPath)
         catch {
           case e: IllegalArgumentException =>
-            System.err.println(s"Config error: ${e.getMessage}"); sys.exit(2)
+            System.err.println(s"Config error: ${e.getMessage}"); return 2
         }
-      val spark = GraftSession.build(cli.master)
-      spark.sparkContext.setLogLevel(cli.logLevel)
-      try {
+      return withSpark { spark =>
         val out = Pipeline.execute(spark, pspec)
         // count the WRITTEN files when a sink exists — counting the
         // lazy frame again would re-execute the whole pipeline. The
@@ -155,40 +178,39 @@ object Main {
         }
         println(s"pipeline OK: $n rows" +
           pspec.output.fold("")(o => s" -> ${o.path}"))
-        sys.exit(0)
-      } finally spark.stop()
+        0
+      }
     }
     val spec =
       try ConfigLoader.load(cli.configPath)
       catch {
         case e: IllegalArgumentException =>
-          System.err.println(s"Config error: ${e.getMessage}"); sys.exit(2)
+          System.err.println(s"Config error: ${e.getMessage}"); return 2
       }
-    val spark = GraftSession.build(cli.master)
-    spark.sparkContext.setLogLevel(cli.logLevel)
-    try {
+    withSpark { spark =>
       if (cli.estimate) {
         println(estimate(spark, spec).describe)
-        sys.exit(0)
+        0
+      } else {
+        // per-stage progress to stderr (the reference's per-chunk OK/NOK
+        // lines), verdict to stdout
+        val rep = run(spark, spec, cli.searchDiff, progress = s => System.err.println(s"[compare] $s"))
+        println(rep.verdict)
+        if (!rep.identical && rep.withinTolerance)
+          println(s"Differences (${rep.differences}) within max_delta=${rep.maxDelta}")
+        if (!rep.identical) {
+          println(s"NOK buckets (${rep.mismatchedBuckets} of ${rep.totalBuckets}):")
+          rep.buckets.where(!org.apache.spark.sql.functions.col("ok"))
+            .orderBy("bucket").show(20, truncate = false)
+        }
+        // CLI flag overrides the YAML default — same effective value the
+        // compare itself used, so we never .show() an unfetched placeholder
+        val effectiveFetch = cli.searchDiff.getOrElse(spec.options.fetchRows)
+        if (!rep.identical && effectiveFetch)
+          rep.orphans.show(50, truncate = false)
+        emitRepair(rep, spec)
+        if (rep.withinTolerance) 0 else 1
       }
-      // per-stage progress to stderr (the reference's per-chunk OK/NOK
-      // lines, /root/reference/main.py:227-247), verdict to stdout
-      val rep = run(spark, spec, cli.searchDiff, progress = s => System.err.println(s"[compare] $s"))
-      println(rep.verdict)
-      if (!rep.identical && rep.withinTolerance)
-        println(s"Differences (${rep.differences}) within max_delta=${rep.maxDelta}")
-      if (!rep.identical) {
-        println(s"NOK buckets (${rep.mismatchedBuckets} of ${rep.totalBuckets}):")
-        rep.buckets.where(!org.apache.spark.sql.functions.col("ok"))
-          .orderBy("bucket").show(20, truncate = false)
-      }
-      // CLI flag overrides the YAML default — same effective value the
-      // compare itself used, so we never .show() an unfetched placeholder
-      val effectiveFetch = cli.searchDiff.getOrElse(spec.options.fetchRows)
-      if (!rep.identical && effectiveFetch)
-        rep.orphans.show(50, truncate = false)
-      emitRepair(rep, spec)
-      sys.exit(if (rep.withinTolerance) 0 else 1)
-    } finally spark.stop()
+    }
   }
 }

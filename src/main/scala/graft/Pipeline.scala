@@ -17,9 +17,21 @@ import org.apache.spark.sql.functions._
   * Nothing is cached between steps either, so every reference a step
   * makes to its input (a self-join, a semi-join against its own
   * aggregate, a side branch) re-runs every upstream step: perfbench
-  * measures about 29× input reads on `pipe_curate`. Steps therefore
+  * measures about 19× input reads on `pipe_curate`. Steps therefore
   * reference their input once where they can (`filter_stack` is one
   * `where`). [[funnel]] is the single-execution form.
+  *
+  * Keeper rule: the fold tracks whether the frame holds only near-dup
+  * keepers, so that no two rows are MinHash-LSH candidates of each
+  * other. `dedup_near` establishes it. A step keeps it if it only drops
+  * rows or adds columns, without rewriting `text` or `doc_id`
+  * (candidacy depends on the two documents alone, so a subset of
+  * keepers holds no candidate pair); any other step clears it. While it
+  * holds, `split(leakage_safe)` keys on `doc_id`, because each keeper is
+  * its own cluster: the same rows as clustering again, without a second
+  * MinHash pass and connected-components loop. The rule assumes that
+  * `doc_id` keys one document, as the near-dup operators do when they
+  * group shingles by it.
   */
 object Pipeline {
 
@@ -30,8 +42,31 @@ object Pipeline {
   val MaxMergeTableRows: Int = 1 << 20
 
   def run(spark: SparkSession, spec: PipelineSpec): DataFrame =
-    spec.steps.foldLeft(Sources.resolve(spark, spec.input))(
-      (df, s) => applyStep(spark, df, s))
+    withKeepers(spec.steps).foldLeft(Sources.resolve(spark, spec.input)) {
+      case (df, (s, keepersOnly)) => applyStep(spark, df, s, keepersOnly)
+    }
+
+  /** Each step paired with whether its input holds only near-dup
+    * keepers (the keeper rule in the object doc).
+    */
+  private def withKeepers(steps: Seq[StepSpec]): Seq[(StepSpec, Boolean)] =
+    steps.zip(steps.scanLeft(false)((k, s) => keepsKeepers(s, k)))
+
+  // exhaustive on purpose: a new step must say whether it keeps the rule
+  private def keepsKeepers(s: StepSpec, keepers: Boolean): Boolean = s match {
+    case StepSpec.DedupNear => true
+    case StepSpec.FilterStack | _: StepSpec.DedupExact |
+        _: StepSpec.Decontaminate | _: StepSpec.SourceCap | _: StepSpec.Forget |
+        _: StepSpec.LmFilter | _: StepSpec.Temperature | _: StepSpec.Stratified |
+        _: StepSpec.Mixture | _: StepSpec.QualityWeighted | _: StepSpec.FixedK |
+        _: StepSpec.Kfold | _: StepSpec.Split | _: StepSpec.QualityNormalize |
+        _: StepSpec.KAnonSuppress | _: StepSpec.LDiversitySuppress |
+        _: StepSpec.EpochOrder | _: StepSpec.Pack | _: StepSpec.BpeTrain => keepers
+    case _: StepSpec.NormalizeText | _: StepSpec.RedactPii | _: StepSpec.Pseudonymize |
+        _: StepSpec.DecontaminateRewrite | _: StepSpec.DedupSpanRewrite |
+        _: StepSpec.Upsample | _: StepSpec.BpeAnnotate | _: StepSpec.Chunk |
+        _: StepSpec.Scd2 | _: StepSpec.Freshness | _: StepSpec.KsDrift => false
+  }
 
   /** Run and, if the spec has an output, write it. Returns the final
     * frame either way.
@@ -63,8 +98,8 @@ object Pipeline {
     var prev = cur.count()
     val rows = scala.collection.mutable.ArrayBuffer[(Int, String, Long, Long, Long)]()
     rows += ((0, "input", prev, prev, 0L))
-    spec.steps.zipWithIndex.foreach { case (s, i) =>
-      val next = applyStep(spark, cur, s)
+    withKeepers(spec.steps).zipWithIndex.foreach { case ((s, keepersOnly), i) =>
+      val next = applyStep(spark, cur, s, keepersOnly)
         .persist(StorageLevel.MEMORY_AND_DISK_SER)
       val n = next.count() // materialize BEFORE releasing the input stage
       cur.unpersist(blocking = false)
@@ -111,8 +146,12 @@ object Pipeline {
     case _: StepSpec.KsDrift         => "ks_drift"
   }
 
-  private[graft] def applyStep(
-      spark: SparkSession, df: DataFrame, step: StepSpec): DataFrame = step match {
+  /** One step over `df`. `keepersOnly` says that `df` holds only
+    * near-dup keepers (the keeper rule); only `split(leakage_safe)`
+    * reads it.
+    */
+  private[graft] def applyStep(spark: SparkSession, df: DataFrame, step: StepSpec,
+      keepersOnly: Boolean = false): DataFrame = step match {
     case StepSpec.FilterStack =>
       df.where(TextAnalysis.filterStackKeep)
 
@@ -177,7 +216,14 @@ object Pipeline {
       Sampling.sourceCap(df, col(groupCol), k).drop("rank_in_source")
 
     case StepSpec.Split(weights, salt, leakageSafe) =>
-      if (leakageSafe)
+      if (leakageSafe && keepersOnly) {
+        // every keeper is its own cluster, and a singleton's cluster id
+        // is its doc_id: the full path's rows (its inner join drops a
+        // null doc_id) in its join's column order
+        val rest = df.drop("doc_id").columns.map(c => df(s"`$c`"))
+        Sampling.hashSplit(df.select(df("doc_id") +: rest: _*)
+          .where(col("doc_id").isNotNull), col("doc_id"), weights, salt)
+      } else if (leakageSafe)
         Sampling.leakageSafeSplit(df, weights, salt).drop("cluster_id")
       else Sampling.hashSplit(df, col("doc_id"), weights, salt)
 

@@ -94,7 +94,10 @@ object StepSpec {
   /** Deterministic split assignment; `leakageSafe = true` keys the
     * split on the near-dup cluster id
     * ([[graft.operators.Sampling.leakageSafeSplit]]) instead of the
-    * doc id ([[graft.operators.Sampling.hashSplit]]).
+    * doc id ([[graft.operators.Sampling.hashSplit]]). After
+    * `dedup_near` with only row-dropping steps in between, the cluster
+    * is the keeper itself, so the step keys on `doc_id` without
+    * clustering again ([[graft.Pipeline]]'s keeper rule).
     */
   final case class Split(weights: Seq[(String, Double)], salt: String,
       leakageSafe: Boolean) extends StepSpec

@@ -907,7 +907,10 @@ object Dedup {
     // __chg rides inside each round's checkpoint so the convergence
     // probe is a block-local count over the just-materialized
     // checkpoint — not an extra shuffle join per round
-    val r = Fixpoint.run(vertices.select(col("doc_id"), col("doc_id").as("label"),
+    // one row per DISTINCT id: a repeated id would multiply its rows
+    // in every round's prop ⋈ prop pointer-doubling join
+    val ids = vertices.select(col("doc_id")).distinct()
+    val r = Fixpoint.run(ids.select(col("doc_id"), col("doc_id").as("label"),
         lit(true).as("__chg")), CcRounds, Fixpoint.EachRound,
         _.where(col("__chg")).count() == 0L) { (_, prev) =>
       val labels = prev.select(col("doc_id"), col("label"))

@@ -963,4 +963,105 @@ class PipelineRunSpec extends SparkSpec {
          |""".stripMargin)).getMessage
     assert(msgW.contains("bucket_width"))
   }
+
+  /** A corpus of near-duplicate clusters: cluster c holds 1 + c % 4
+    * copies of one 30-word text, copy j with its first j words
+    * replaced, spread over three sources.
+    */
+  private def clusteredCorpus(): String = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(11)
+    val rows = (0 until 40).flatMap { c =>
+      val base = Seq.fill(30)(s"w${rnd.nextInt(500)}")
+      (0 until 1 + c % 4).map(j => (base, j))
+    }.zipWithIndex.map { case ((base, j), i) =>
+      val words = base.zipWithIndex.map { case (w, k) => if (k < j) s"v$i$k" else w }
+      (i.toLong + 1, words.mkString(" "), s"s${i % 3}")
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft-clusters").toString
+    rows.toDF("doc_id", "text", "source").write.parquet(s"$dir/docs")
+    s"$dir/docs"
+  }
+
+  private def keeperSplitSpec(corpus: String, bench: String, withSplit: Boolean) =
+    PipelineLoader.fromYaml(
+      s"""pipeline:
+         |  input:
+         |    db: {type: parquet, path: $corpus}
+         |  steps:
+         |    - kind: dedup_near
+         |    - kind: decontaminate
+         |      bench:
+         |        db: {type: parquet, path: $bench}
+         |    - kind: source_cap
+         |      k: 9
+         |""".stripMargin + (if (!withSplit) "" else
+        """    - kind: split
+          |      weights: {train: 0.5, val: 0.25, test: 0.25}
+          |      leakage_safe: true
+          |""".stripMargin))
+
+  private def benchOf(corpus: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-bench").toString
+    spark.read.parquet(corpus).where(col("doc_id").isin(3L, 50L))
+      .write.parquet(s"$dir/bench")
+    s"$dir/bench"
+  }
+
+  test("leakage-safe split over near-dup keepers equals the full clustering path") {
+    val corpus = clusteredCorpus()
+    val bench = benchOf(corpus)
+    val pre = Pipeline.run(spark, keeperSplitSpec(corpus, bench, withSplit = false))
+    val want = graft.operators.Sampling.leakageSafeSplit(pre,
+      Seq("train" -> 0.5, "val" -> 0.25, "test" -> 0.25)).drop("cluster_id")
+    val got = Pipeline.run(spark, keeperSplitSpec(corpus, bench, withSplit = true))
+    assert(got.columns.toSeq == want.columns.toSeq)
+    assert(got.columns.head == "doc_id")
+    val g = got.orderBy("doc_id").collect().toSeq
+    assert(g == want.orderBy("doc_id").collect().toSeq)
+    // the steps bite: at most 9 keepers in each of the 3 sources, and
+    // more than one split label used
+    assert(g.nonEmpty && g.size <= 27, s"${g.size} rows")
+    assert(g.map(_.getAs[String]("split")).distinct.size > 1)
+  }
+
+  test("leakage-safe split over near-dup keepers clusters once") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    val corpus = clusteredCorpus()
+    val out = Pipeline.run(spark, keeperSplitSpec(corpus, benchOf(corpus), withSplit = true))
+    // each connected-components loop leaves its final label round as a
+    // checkpointed LogicalRDD leaf in the plan; dedup_near's is the only one
+    val labelLeaves = out.queryExecution.optimizedPlan
+      .collectWithSubqueries { case r: LogicalRDD => r.rdd.id }.distinct
+    assert(labelLeaves.size == 1, out.queryExecution.optimizedPlan.toString)
+  }
+
+  test("a text rewrite after dedup_near clears the keeper rule: the split clusters again") {
+    import spark.implicits._
+    // every 3-word shingle holds an address, so the two documents share
+    // none and both survive dedup_near; redact_pii then makes them equal
+    def doc(who: String) = (1 to 12).map(k => s"$who$k@mail.org word$k").mkString(" ")
+    val weights = Seq("train" -> 0.5, "test" -> 0.5)
+    val labels = graft.operators.Sampling.hashSplit((1L to 20L).toDF("doc_id"),
+        col("doc_id"), weights).collect().map(r => r.getLong(0) -> r.getString(1))
+    val a = labels.find(_._2 == "train").get._1
+    val b = labels.find(_._2 == "test").get._1
+    val dir = java.nio.file.Files.createTempDirectory("graft-rewrite").toString
+    Seq((a, doc("alice")), (b, doc("bob"))).toDF("doc_id", "text")
+      .write.parquet(s"$dir/docs")
+    val spec = PipelineLoader.fromYaml(
+      s"""pipeline:
+         |  input:
+         |    db: {type: parquet, path: $dir/docs}
+         |  steps:
+         |    - kind: dedup_near
+         |    - kind: redact_pii
+         |    - kind: split
+         |      weights: {train: 0.5, test: 0.5}
+         |      leakage_safe: true
+         |""".stripMargin)
+    val got = Pipeline.run(spark, spec).select("doc_id", "text", "split").collect()
+    assert(got.length == 2 && got(0).getString(1) == got(1).getString(1))
+    assert(got(0).getString(2) == got(1).getString(2), got.toSeq)
+  }
 }

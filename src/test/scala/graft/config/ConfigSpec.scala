@@ -118,6 +118,53 @@ class ConfigSpec extends SparkSpec {
     assert(rep.differences > 0)
   }
 
+  /** A target directory holding one valid parquet file and one corrupt one. */
+  private def corruptParquetDir(): String = {
+    val dir = Files.createTempDirectory("graft_corrupt")
+    spark.read.parquet(s"$Sf0001/documents.parquet").write.parquet(s"$dir/t")
+    Files.write(dir.resolve("t/part-99999-corrupt.parquet"),
+      "PAR1 this is not a parquet file PAR1".getBytes("UTF-8"))
+    s"$dir/t"
+  }
+
+  /** `Main.exec` on the shared session: (status, stdout lines). */
+  private def cli(yaml: String, flags: String*): (Int, Seq[String]) = {
+    val cfg = Files.createTempFile("graft_cli", ".yaml")
+    Files.write(cfg, yaml.getBytes("UTF-8"))
+    val out = new java.io.ByteArrayOutputStream()
+    val status = Console.withOut(out)(
+      Main.exec((Seq("-f", cfg.toString) ++ flags).toArray, Some(spark)))
+    (status, out.toString("UTF-8").linesIterator.toSeq)
+  }
+
+  test("exit codes: a corrupt target file in compare mode exits 2, no verdict") {
+    val (status, out) = cli(
+      s"""source:
+         |  db: {type: parquet, path: $Sf0001/documents.parquet}
+         |target:
+         |  db: {type: parquet, path: ${corruptParquetDir()}}
+         |num_buckets: 16
+         |""".stripMargin)
+    assert(status == 2, out)
+    assert(!out.exists(_.startsWith("Datasets are")), out)
+    assert(!spark.sparkContext.isStopped)
+  }
+
+  test("exit codes: a corrupt input file in pipeline mode exits 2, no OK line") {
+    val sink = Files.createTempDirectory("graft_cli_sink").resolve("out")
+    val (status, out) = cli(
+      s"""pipeline:
+         |  input:
+         |    db: {type: parquet, path: ${corruptParquetDir()}}
+         |  steps:
+         |    - kind: filter_stack
+         |  output: {path: $sink, format: parquet}
+         |""".stripMargin, "--pipeline")
+    assert(status == 2, out)
+    assert(!out.exists(_.startsWith("pipeline OK")), out)
+    assert(!spark.sparkContext.isStopped)
+  }
+
   test("repair_table: config-to-DML e2e — script written beside the report; validations fail fast") {
     // config validation: repair_out alone, unsafe identifier, and
     // repair without row fetch are all parse-time errors

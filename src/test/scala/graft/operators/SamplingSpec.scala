@@ -233,6 +233,22 @@ class SamplingSpec extends SparkSpec {
       s"near-dups split apart: $labeled")
   }
 
+  test("connected components: a repeated doc_id is one vertex; the split keeps its input rows") {
+    import spark.implicits._
+    val base = "the quick brown fox jumps over the lazy dog again and again today"
+    val other = "completely unrelated words in this one here now for sure friend"
+    val docs = Seq((1L, base), (1L, base + " extra"), (2L, other), (3L, base))
+      .toDF("doc_id", "text")
+    val cc = Dedup.connectedComponents(docs, Dedup.minhashCandidates(docs))
+      .select(col("doc_id"), col("cluster_id")).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).sorted.toSeq
+    assert(cc == Seq(1L -> 1L, 2L -> 2L, 3L -> 1L))
+    val split = Sampling.leakageSafeSplit(docs, Seq("train" -> 0.5, "test" -> 0.5))
+    val rows = split.select(col("doc_id"), col("text")).collect()
+      .map(r => r.getLong(0) -> r.getString(1)).sorted.toSeq
+    assert(rows == docs.collect().map(r => r.getLong(0) -> r.getString(1)).sorted.toSeq)
+  }
+
   test("leakage report plan: zero cross-split pairs; pairs cache released on release()") {
     import spark.implicits._
     val base = "the quick brown fox jumps over the lazy dog again and again today"
