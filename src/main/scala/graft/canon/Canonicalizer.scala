@@ -140,11 +140,16 @@ object Canonicalizer {
     * identity); maps nested deeper, or with complex values, hash in
     * entry order — canonicalize those upstream if ingestion order is
     * not stable.
+    *
+    * `valueForms` replaces the hashed value of the named columns (the
+    * null flag stays): the comparator passes [[crossTypeText]] for
+    * positions whose two sides carry different types.
     */
-  def rowHash(df: DataFrame, seed: Long, cols: Seq[String] = Nil): Column = {
+  def rowHash(df: DataFrame, seed: Long, cols: Seq[String] = Nil,
+      valueForms: Map[String, Column] = Map.empty): Column = {
     val names = if (cols.nonEmpty) cols else df.schema.fieldNames.toSeq
     val inputs = names.flatMap { n =>
-      val c = df.schema(n).dataType match {
+      val c = valueForms.getOrElse(n, df.schema(n).dataType match {
         // hashes must be VALUE-level across physical widths: a csv
         // side inferring int must agree with a parquet side's bigint
         // (the reference's whole point is comparing across engines)
@@ -157,9 +162,28 @@ object Canonicalizer {
           to_json(array_sort(map_entries(df.col(n))))
         case dt if needsJsonHash(dt)            => to_json(df.col(n))
         case _                                  => df.col(n)
-      }
+      })
       Seq(df.col(n).isNull.cast("long"), c)
     }
     xxhash64((lit(seed) +: inputs): _*)
   }
+
+  private def isExactNumeric(dt: DataType): Boolean = dt match {
+    case ByteType | ShortType | IntegerType | LongType | _: DecimalType => true
+    case _ => false
+  }
+
+  /** Value-level text of a column whose type differs from its
+    * counterpart on the other side. The native hash is NOT value-level
+    * across such pairs: it hashes a decimal as its unscaled long, so
+    * int `150`, decimal(5,2) `1.50` and decimal(5,1) `15.0` all hash
+    * equal. When both types are exact numerics the text is the plain
+    * decimal form with trailing fractional zeros stripped (`1.50` and
+    * `1.5` agree, `150` and `1.50` do not); for any other pair it is
+    * [[canonCol]].
+    */
+  def crossTypeText(c: Column, dt: DataType, other: DataType): Column =
+    if (isExactNumeric(dt) && isExactNumeric(other))
+      regexp_replace(c.cast(StringType), "(\\.[0-9]*[1-9])0+$|\\.0+$", "$1")
+    else canonCol(c, dt)
 }

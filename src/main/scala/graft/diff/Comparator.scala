@@ -3,7 +3,8 @@ package graft.diff
 import graft.canon.Canonicalizer
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+import org.apache.spark.sql.types.{ByteType, DecimalType, IntegerType, LongType, ShortType,
+  StructField}
 
 /** How strictly the two schemas must agree before comparing.
   * The reference's only gate is select-list arity parsed out of the SQL
@@ -72,12 +73,13 @@ final case class CompareOptions(
     progress: String => Unit = _ => ())
 
 /** Result of a comparison. `orphans` is lazy (a DataFrame over the
-  * cached bucket-restricted sides — consuming it does not re-scan the
-  * inputs); `buckets` is the per-bucket match table (bucket, src_cnt,
-  * tgt_cnt, ok — the reference's per-chunk OK/NOK view, O19); the
-  * scalar fields hold the already-materialized counts. Call
-  * [[DiffReport.release]] when done to drop the small retained caches
-  * (orphans/buckets recompute from source afterwards).
+  * cached rows the mismatch fetch kept: the orphan rows of decoded
+  * buckets and every row of the buckets fetched whole — consuming it
+  * does not re-scan the inputs); `buckets` is the per-bucket match
+  * table (bucket, src_cnt, tgt_cnt, ok — the reference's per-chunk
+  * OK/NOK view, O19); the scalar fields hold the already-materialized
+  * counts. Call [[DiffReport.release]] when done to drop the small
+  * retained caches (orphans/buckets recompute from source afterwards).
   */
 final case class DiffReport(
     srcRows: Long,
@@ -146,18 +148,22 @@ final case class DiffReport(
   *     shuffle), and needs NO total order on the data, removing the
   *     reference's fragile user-must-ORDER-BY contract
   *     (/root/reference/example.md:188-192). One shuffle of
-  *     numBuckets×3 longs regardless of data size.
-  *  3. full-outer join the two fingerprint sets on bucket_id (tiny);
-  *     only rows in mismatched buckets are then re-scanned and
-  *     bag-diffed by per-row-hash multiplicity deltas (hashBagDiff —
-  *     bag semantics both directions, stricter than the reference's
-  *     Python set-diff which ignores multiplicity,
+  *     numBuckets×3 values regardless of data size, plus, in
+  *     [[compare]] only, the decode's purity checksum (`keyCheck`).
+  *  3. full-outer join the two fingerprint sets on bucket_id (tiny)
+  *     and decode each mismatched bucket whose delta is one distinct
+  *     row (see [[compare]]); only the decoded rows, plus every row of
+  *     the buckets that do not decode, are then re-scanned and
+  *     bag-diffed by one signed per-row-hash multiplicity delta
+  *     (bagPick — bag semantics both directions, stricter than the
+  *     reference's Python set-diff which ignores multiplicity,
   *     /root/reference/main.py:116-137).
   *
   * At 100 TB: stage-2 output is O(numBuckets), independent of input;
-  * the expensive re-scan in stage 3 touches only `mismatched/numBuckets`
-  * of the data, and the bucket restriction is a semi-join (no driver
-  * collect), so nothing on this path is bounded by driver memory.
+  * the expensive re-scan in stage 3 reads only `mismatched/numBuckets`
+  * of the data and keeps the orphan rows of decoded buckets, and the
+  * bucket restriction is a semi-join (no driver collect), so nothing
+  * on this path is bounded by driver memory.
   */
 object Comparator {
 
@@ -214,10 +220,32 @@ object Comparator {
     * does not pay for its shuffle even on single-row-group local
     * files; on real multi-file data scan splits provide parallelism.)
     */
-  def withBuckets(df: DataFrame, numBuckets: Int): DataFrame =
-    df.withColumn("__h", Canonicalizer.rowHash(df, 42L))
-      .withColumn("__h2", Canonicalizer.rowHash(df, 0x9E3779B9L))
+  def withBuckets(df: DataFrame, numBuckets: Int,
+      valueForms: Map[String, Column] = Map.empty): DataFrame =
+    df.withColumn("__h", Canonicalizer.rowHash(df, 42L, valueForms = valueForms))
+      .withColumn("__h2", Canonicalizer.rowHash(df, 0x9E3779B9L, valueForms = valueForms))
       .withColumn("__bucket", pmod(col("__h"), lit(numBuckets.toLong)))
+
+  /** Hash inputs for the positions whose source and target types
+    * differ — only [[SchemaCheck.ArityOnly]] lets such a position
+    * through the gate: both sides hash the same value-level text
+    * ([[Canonicalizer.crossTypeText]]), so `150` vs `1.50` is a
+    * difference while int vs bigint stays equal. Positions of equal
+    * type keep the native hash, so every other compare (and every
+    * stored fingerprint) hashes exactly as before.
+    */
+  private def crossTypeForms(src: DataFrame, tgt: DataFrame)
+      : (Map[String, Column], Map[String, Column]) = {
+    val pairs = src.schema.zip(tgt.schema).filterNot { case (a, b) =>
+      sameType(a.dataType, b.dataType)
+    }
+    def forms(df: DataFrame, fields: Seq[(StructField, StructField)]) =
+      fields.map { case (mine, other) =>
+        mine.name -> Canonicalizer.crossTypeText(
+          df.col(mine.name), mine.dataType, other.dataType)
+      }.toMap
+    (forms(src, pairs), forms(tgt, pairs.map(_.swap)))
+  }
 
   /** Per-bucket commutative fingerprint: one row per non-empty bucket.
     * Map-side partial aggregation applies (hash agg before shuffle).
@@ -225,15 +253,29 @@ object Comparator {
     * (an error under Spark 4's default ANSI mode) while 38 digits hold
     * exact sums of |v|≤2⁶³ for ~10¹⁹ rows per bucket.
     */
-  def fingerprints(bucketed: DataFrame): DataFrame = {
-    val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
+  def fingerprints(bucketed: DataFrame): DataFrame = fingerprintsWith(bucketed)
+
+  private def fingerprintsWith(bucketed: DataFrame, extra: Column*): DataFrame = {
+    val dec38 = DecimalType(38, 0)
     bucketed
       .groupBy(col("__bucket"))
       .agg(
         count(lit(1)).as("cnt"),
-        sum(col("__h").cast(dec38)).as("hsum"),
-        sum(col("__h2").cast(dec38)).as("h2sum"))
+        sum(col("__h").cast(dec38)).as("hsum") +:
+          sum(col("__h2").cast(dec38)).as("h2sum") +: extra: _*)
   }
+
+  /** The decode's purity checksum of a row hash: 24 bits of an
+    * independent hash of `h`. Summed per bucket it is the
+    * invertible-Bloom-lookup-table "hashSum" cell: a bucket whose delta
+    * is one row `k` times over has `Δcsum = k·keyCheck(key)`, which a
+    * mixed bucket meets by chance about once in 2²⁴. The sum and
+    * `numBuckets` alone cannot tell the two apart: every row of a
+    * bucket has the same `h mod numBuckets`, so for any odd `k` a mixed
+    * delta also divides and buckets back to its own bucket. 24 bits
+    * keep the long sum exact up to 2³⁹ rows per bucket.
+    */
+  private def keyCheck(h: Column): Column = shiftrightunsigned(xxhash64(h), 40)
 
   /** Schema-evolution alignment — the pre-step for comparing across a
     * migration that ADDED or DROPPED columns: project both sides onto
@@ -311,8 +353,34 @@ object Comparator {
     (compare(s, t, opts), srcOnly, tgtOnly)
   }
 
-  /** Full compare. Triggers two Spark actions (fingerprint join collect
-    * of summary counts; orphan counts when fetchRows).
+  /** Full compare. Triggers two Spark actions: the fingerprint summary,
+    * and (when rows are fetched) the orphan counts.
+    *
+    * Mismatched buckets are fetched by PEELING: a bucket whose
+    * fingerprint delta comes from one distinct row names that row. With
+    * `k = Δcnt ≠ 0`, the row's two hashes are `ΔΣh/k` and `ΔΣh₂/k` —
+    * the pure-cell decode of an invertible Bloom lookup table (Eppstein
+    * et al., "What's the Difference?", SIGCOMM 2011). A bucket decodes
+    * when `k` divides both sum deltas exactly in DECIMAL(38,0), both
+    * quotients fit a long, the first quotient buckets back to the
+    * bucket itself, and the bucket's purity checksum is `k` times the
+    * quotient's (the IBLT "hashSum" test, one extra long per bucket in
+    * the fingerprint pass; see `keyCheck`). The re-scan then keeps
+    * only that key's rows there. Every other mismatched bucket
+    * (`k = 0`, or a mixed delta) is fetched whole.
+    *
+    * Verification: a decoded key counts only if the bag delta shows
+    * exactly `k` surplus copies of it — checked inside the orphan-count
+    * action. When it passes, the bucket's remaining differences have
+    * zero count and zero sum on both 64-bit hashes: the same event the
+    * bucket fingerprint already trusts not to happen. A bucket whose
+    * key fails (a mixed bucket passes the checksum about once in 2²⁴)
+    * is fetched again whole, in one more fetch that keeps the verified
+    * keys.
+    *
+    * The circuit breaker still projects the fetch as whole buckets,
+    * (srcRows+tgtRows)·mismatchFraction: conservative on purpose, since
+    * the decode is not known until the fetch has run.
     */
   def compare(
       src: DataFrame,
@@ -323,26 +391,23 @@ object Comparator {
     opts.progress(
       s"plan: ${opts.numBuckets} buckets over ${src.columns.length} columns (schema ${opts.schemaCheck})")
 
-    val sb0 = withBuckets(src, opts.numBuckets)
-    val tb0 = withBuckets(tgt, opts.numBuckets)
+    val (srcForms, tgtForms) = crossTypeForms(src, tgt)
+    val sb0 = withBuckets(src, opts.numBuckets, srcForms)
+    val tb0 = withBuckets(tgt, opts.numBuckets, tgtForms)
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
     val (sb, tb) =
       if (opts.persistScans) (sb0.persist(lvl), tb0.persist(lvl)) else (sb0, tb0)
 
-    val sf = fingerprints(sb)
-    val tf = fingerprints(tb)
+    // the stored fingerprint plus the decode's purity checksum
+    val sf = fingerprintsWith(sb, sum(keyCheck(col("__h"))).as("csum"))
+    val tf = fingerprintsWith(tb, sum(keyCheck(col("__h"))).as("csum"))
 
-    val joined = sf
-      .withColumnRenamed("cnt", "s_cnt").withColumnRenamed("hsum", "s_hsum")
-      .withColumnRenamed("h2sum", "s_h2sum")
-      .join(
-        tf.withColumnRenamed("cnt", "t_cnt").withColumnRenamed("hsum", "t_hsum")
-          .withColumnRenamed("h2sum", "t_h2sum"),
-        Seq("__bucket"), "full_outer")
-      .withColumn("mismatch",
-        coalesce(col("s_cnt"), lit(0L)) =!= coalesce(col("t_cnt"), lit(0L)) ||
-        coalesce(col("s_hsum"), lit(0L)) =!= coalesce(col("t_hsum"), lit(0L)) ||
-        coalesce(col("s_h2sum"), lit(0L)) =!= coalesce(col("t_h2sum"), lit(0L)))
+    def prefixed(f: DataFrame, p: String) =
+      f.select(col("__bucket") +: f.columns.tail.map(c => col(c).as(p + c)).toIndexedSeq: _*)
+    // cached narrow: the decimal sums are consumed by the decode here
+    // and never stored
+    val joined = decodeBuckets(prefixed(sf, "s_")
+      .join(prefixed(tf, "t_"), Seq("__bucket"), "full_outer"), opts.numBuckets)
       .cache()
 
     val t0 = System.nanoTime()
@@ -351,30 +416,34 @@ object Comparator {
       coalesce(sum("s_cnt"), lit(0L)),
       coalesce(sum("t_cnt"), lit(0L)),
       count(lit(1)),
-      coalesce(sum(when(col("mismatch"), 1L).otherwise(0L)), lit(0L))).head()
-    val (srcRows, tgtRows, buckets, bad) =
-      (summary.getLong(0), summary.getLong(1), summary.getLong(2), summary.getLong(3))
+      coalesce(sum(when(col("mismatch"), 1L).otherwise(0L)), lit(0L)),
+      count(col("kh"))).head()
+    val (srcRows, tgtRows, buckets, bad, decoded) = (summary.getLong(0),
+      summary.getLong(1), summary.getLong(2), summary.getLong(3), summary.getLong(4))
     opts.progress(
       s"fingerprint: $bad/$buckets buckets NOK, src=$srcRows rows, tgt=$tgtRows rows (in ${ms(t0)}ms)")
 
     val cols = src.columns.toSeq
-    val badBuckets = joined.where(col("mismatch")).select("__bucket")
     val bucketTable = joined.select(col("__bucket").as("bucket"),
-      coalesce(col("s_cnt"), lit(0L)).as("src_cnt"),
-      coalesce(col("t_cnt"), lit(0L)).as("tgt_cnt"),
+      col("s_cnt").as("src_cnt"), col("t_cnt").as("tgt_cnt"),
       (!col("mismatch")).as("ok"))
 
-    // Restrict each side to offending buckets via semi-join (broadcast:
-    // the bucket list is ≤ numBuckets rows). Stays fully distributed —
-    // no bucket-id collect to the driver. The restricted sides are
-    // CACHED: they are tiny (≈ mismatched/numBuckets of the input) and
-    // feed the multiplicity-delta count plus the lazy orphan fetch —
-    // without the cache each consumer re-scans and re-hashes the full
-    // input (measured 2× end-to-end on the mismatch path). The row
-    // hashes ride along as the diff keys.
-    def side(b: DataFrame): DataFrame =
-      b.join(broadcast(badBuckets), Seq("__bucket"), "left_semi")
-        .select((cols ++ Seq("__h", "__h2")).map(col): _*)
+    // Restrict each side to the mismatched buckets via a semi-join
+    // (broadcast: ≤ numBuckets keys; no bucket-id collect to the
+    // driver), keeping only the decoded key's rows in a decoded
+    // bucket. Both sides land in ONE side-tagged cached relation —
+    // orphan rows plus the rows of whole-fetched buckets — which feeds
+    // the signed bag delta, the counts and the lazy orphan fetch
+    // without re-scanning the inputs (measured 2× end-to-end on the
+    // mismatch path). The target's columns take the source's names by
+    // position; `__d` tags each row with its contribution to the
+    // delta, and the row hashes ride along as the diff keys.
+    def side(b: DataFrame, names: Seq[String], sign: Int, keys: DataFrame): DataFrame =
+      b.join(broadcast(keys), b("__bucket") === keys("__bucket") &&
+          (keys("kh").isNull || (b("__h") === keys("kh") && b("__h2") === keys("kh2"))),
+          "left_semi")
+        .select(names.zip(cols).map { case (n, c) => col(n).as(c) } ++
+          Seq(col("__h"), col("__h2"), lit(sign).as("__d")): _*)
 
     val empty = {
       val s = src.sparkSession
@@ -406,20 +475,49 @@ object Comparator {
         (empty, None, counts._1, counts._2, Seq(joined))
       } else {
         val t1 = System.nanoTime()
-        val ss = side(sb).cache()
-        val ts = side(tb).cache()
-        val (delta, all) = hashBagDiff(ss, ts, cols)
-        // ONE action: orphan counts from the per-hash multiplicity
-        // deltas — no orphan-row materialization; the rows themselves
-        // stay lazy over the cached restricted sides and are only
-        // computed if the caller consumes `orphans`.
-        val c = delta.agg(
-          coalesce(sum(greatest(col("__d"), lit(0L))), lit(0L)),
-          coalesce(sum(greatest(-col("__d"), lit(0L))), lit(0L))).head()
+        // a delta row that verifies its bucket's decoded key
+        val hit = col("__d") === col("__k") && col("__h2") === col("kh2")
+        // (tagged rows, bag delta, delta beside the decoded keys,
+        // [source orphans, target orphans, verified keys])
+        def fetch(keys: DataFrame) = {
+          val tagged = side(sb, cols, 1, keys)
+            .unionAll(side(tb, tgt.columns.toSeq, -1, keys)).cache()
+          val delta = tagged.groupBy("__h", "__h2").agg(sum("__d").as("__d"))
+            .where(col("__d") =!= 0L).cache()
+          // one long join key: a decoded kh names exactly one bucket
+          val checked = delta.join(broadcast(keys.where(col("kh").isNotNull)),
+            col("__h") === col("kh"), "left")
+          // ONE action: orphan counts from the per-hash multiplicity
+          // deltas, plus the decoded keys whose delta is exactly k — no
+          // orphan-row materialization; the rows stay lazy over the
+          // cached tagged relation until the caller consumes `orphans`
+          val c = checked.agg(
+            coalesce(sum(greatest(col("__d"), lit(0L))), lit(0L)),
+            coalesce(sum(greatest(-col("__d"), lit(0L))), lit(0L)),
+            count(when(hit, 1))).head()
+          (tagged, delta, checked, c)
+        }
+        val keys = joined.where(col("mismatch")).select(col("__bucket"),
+          col("kh"), col("kh2"), (col("s_cnt") - col("t_cnt")).as("__k"))
+        val first @ (tagged1, delta1, checked1, c1) = fetch(keys)
+        val failed = decoded - c1.getLong(2)
+        val (tagged, delta, _, c) = if (failed == 0) first else {
+          // clear the decode of the buckets whose key failed: fetch
+          // those whole, keep the verified keys
+          val verified = checked1.where(hit).select(col("kh"), lit(true).as("__ok"))
+          val again = fetch(keys.join(verified, Seq("kh"), "left").select(
+            col("__bucket"), when(col("__ok"), col("kh")).as("kh"),
+            when(col("__ok"), col("kh2")).as("kh2"), col("__k")))
+          tagged1.unpersist(); delta1.unpersist()
+          again
+        }
+        opts.progress(s"peel: ${decoded - failed}/$bad mismatched buckets decoded, " +
+          s"${bad - decoded + failed} fetched whole, $failed re-fetched")
         opts.progress(
           s"orphans: ${c.getLong(0)} source-only, ${c.getLong(1)} target-only (in ${ms(t1)}ms)")
+        val all = bagPick(tagged, delta, cols)
         (all.drop("__copies"), Some(all), c.getLong(0), c.getLong(1),
-          Seq(joined, ss, ts, delta))
+          Seq(joined, tagged, delta))
       }
 
     // drop the big full-input caches; the small restricted caches stay
@@ -430,50 +528,77 @@ object Comparator {
       orphansDetail = detail)
   }
 
-  /** Bag diff keyed on the two independent 64-bit row hashes carried by
-    * the bucket-restricted sides (Spark's `exceptAll` shuffles whole
-    * rows and rejects MapType-bearing schemas outright): equal hash
-    * pairs mean equal rows — the same trust the bucket fingerprints
-    * already rest on — so per-key multiplicity deltas reproduce
-    * exceptAll's bag semantics exactly: d surplus copies on a side
-    * yield d orphan rows, while the values (any type, maps included)
-    * ride along as payload and are never compared by a set op.
-    *
-    * Returns (delta, orphanRows): `delta` is the tiny per-hash count
-    * table — orphan COUNTS aggregate from it without touching a single
-    * data row; `orphanRows` joins it back to the restricted sides and
-    * picks `|d|` copies per key via a per-key row_number (keys live
-    * only in mismatched buckets, so window partitions stay tiny at any
-    * input scale).
+  /** The per-bucket table of [[compare]]: (__bucket, s_cnt, t_cnt,
+    * mismatch, kh, kh2) from the full-outer-joined fingerprints. `kh`,
+    * `kh2` are the decoded key of a bucket whose delta is one distinct
+    * row `k = s_cnt − t_cnt` times over (and the purity checksum
+    * `keyCheck` agrees), else null. All arithmetic is exact
+    * DECIMAL(38,0), and nothing here can raise under ANSI mode
+    * wherever the optimizer evaluates it: the divisor is null when
+    * `k = 0` (subexpression elimination can hoist a division out of a
+    * `when`), a sum delta of 10³² or more (a decode would need |k| >
+    * 10¹³) is not decoded, so the DECIMAL(38,6) quotient cannot
+    * overflow, and only an in-range quotient reaches the cast to long.
     */
-  private def hashBagDiff(
-      ss: DataFrame, ts: DataFrame, cols: Seq[String]): (DataFrame, DataFrame) = {
+  private def decodeBuckets(joined: DataFrame, numBuckets: Int): DataFrame = {
+    val dec38 = DecimalType(38, 0)
+    def delta(c: String, zero: Column): Column =
+      coalesce(col("s_" + c), zero) - coalesce(col("t_" + c), zero)
+    def quotient(d: String): Column = {
+      val small = when(abs(col(d)) < lit(BigDecimal("1e32")).cast(dec38), col(d))
+      val q = when(small % col("k") === 0, small / col("k"))
+      when(q >= Long.MinValue && q <= Long.MaxValue, q).cast(LongType)
+    }
+    val pure = col("q").isNotNull && col("q2").isNotNull &&
+      pmod(col("q"), lit(numBuckets.toLong)) === col("__bucket") &&
+      col("k") * keyCheck(col("q")) === col("dc")
+    // one projection per step: each expression reads the previous
+    // step's columns instead of re-embedding their expression trees,
+    // which would multiply the plan the optimizer and codegen process
+    val zero = lit(0L).cast(dec38)
+    joined.select(col("__bucket"),
+        coalesce(col("s_cnt"), lit(0L)).as("s_cnt"),
+        coalesce(col("t_cnt"), lit(0L)).as("t_cnt"),
+        delta("hsum", zero).as("dh"), delta("h2sum", zero).as("dh2"),
+        delta("csum", lit(0L)).as("dc"))
+      .withColumn("k", when(col("s_cnt") =!= col("t_cnt"),
+        (col("s_cnt") - col("t_cnt")).cast(dec38)))
+      .withColumn("q", quotient("dh"))
+      .withColumn("q2", quotient("dh2"))
+      .select(col("__bucket"), col("s_cnt"), col("t_cnt"),
+        (col("s_cnt") =!= col("t_cnt") || col("dh") =!= 0 || col("dh2") =!= 0).as("mismatch"),
+        when(pure, col("q")).as("kh"), when(pure, col("q2")).as("kh2"))
+  }
+
+  /** Bag diff keyed on the two independent 64-bit row hashes carried by
+    * the tagged relation (Spark's `exceptAll` shuffles whole rows and
+    * rejects MapType-bearing schemas outright): equal hash pairs mean
+    * equal rows — the same trust the bucket fingerprints already rest
+    * on — so the signed per-key delta `d` reproduces exceptAll's bag
+    * semantics exactly: d surplus copies on a side yield d orphan rows,
+    * while the values (any type, maps included) ride along as payload
+    * and are never compared by a set op. `delta` is the tiny
+    * (h, h2, d) table; one per-key row_number over the surplus side's
+    * rows picks `|d|` copies for both sides at once (keys live only in
+    * mismatched buckets, so window partitions stay tiny at any input
+    * scale).
+    *
+    * `__copies` rides along: |bag delta| per key IS the number of
+    * identical orphan copies this side emits — the over-delete signal
+    * repairActions needs, carried from the aggregation that already
+    * computed it instead of re-derived by a full-row window over the
+    * orphans (one Exchange+Sort+Window less in every repair-script
+    * plan).
+    */
+  private def bagPick(tagged: DataFrame, delta: DataFrame, cols: Seq[String]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val sc = ss.groupBy("__h", "__h2").agg(count(lit(1)).as("s_n"))
-    val tc = ts.groupBy("__h", "__h2").agg(count(lit(1)).as("t_n"))
-    // cached: feeds the count aggregate now and both orphan-row picks
-    // later; a handful of (h, h2, d) longs
-    val delta = sc.join(tc, Seq("__h", "__h2"), "full_outer")
-      .select(col("__h"), col("__h2"),
-        (coalesce(col("s_n"), lit(0L)) - coalesce(col("t_n"), lit(0L))).as("__d"))
-      .where(col("__d") =!= 0L)
-      .cache()
     val w = Window.partitionBy("__h", "__h2").orderBy(lit(1))
-    // __copies rides along: |bag delta| per key IS the number of
-    // identical orphan copies this side emits — the over-delete
-    // signal repairActions needs, carried from the aggregation that
-    // already computed it instead of re-derived by a full-row window
-    // over the orphans (one Exchange+Sort+Window less in every
-    // repair-script plan; r16 verdict item 3).
-    def pick(s: DataFrame, name: String, cond: Column, n: Column): DataFrame =
-      s.join(delta.where(cond), Seq("__h", "__h2"))
-        .withColumn("__rn", row_number().over(w))
-        .where(col("__rn") <= n)
-        .select(lit(name).as("side") +: cols.map(col)
-          :+ abs(col("__d")).as("__copies"): _*)
-    val rows = pick(ss, "source", col("__d") > 0, col("__d"))
-      .unionAll(pick(ts, "target", col("__d") < 0, -col("__d")))
-    (delta, rows)
+    tagged.join(delta.withColumnRenamed("__d", "__copies"), Seq("__h", "__h2"))
+      .where((col("__copies") > 0L) === (col("__d") > 0))
+      .withColumn("__rn", row_number().over(w))
+      .where(col("__rn") <= abs(col("__copies")))
+      .select(when(col("__d") > 0, lit("source")).otherwise(lit("target")).as("side")
+        +: cols.map(col) :+ abs(col("__copies")).as("__copies"): _*)
   }
 
   /** REPAIR-SCRIPT emitter — the ACTION form of the diff, completing

@@ -162,20 +162,15 @@ object CompareQueries {
         col("l_quantity").cast("decimal(18,2)"))
       val src = money(raw)
       val base = money(mutated(raw))
-      val key = raw.groupBy().agg(max(col("l_orderkey")).as("l_orderkey"))
-        .join(raw.select(col("l_orderkey"), col("l_linenumber")),
-          Seq("l_orderkey"))
-        .groupBy(col("l_orderkey"))
-        .agg(min(col("l_linenumber")).as("l_linenumber"))
-      // the planted extra row materializes ONCE (eager, 1 row): both
-      // union branches and both full passes over tgt (fingerprint +
-      // restricted fetch) then read the checkpoint instead of
-      // re-deriving the max-key aggregate + join per branch per pass
-      // (4x at persistScans=false) — fixture cost, not compare cost
-      val extra = base.join(broadcast(key), Seq("l_orderkey", "l_linenumber"))
+      // the planted duplicate: the max-orderkey row (lowest linenumber)
+      // appears three times in tgt, exploded in the one pass that
+      // builds tgt against a 1-row broadcast key — no checkpoint job
+      def lineKey = struct(col("l_orderkey"), -col("l_linenumber"))
+      val key = broadcast(raw.agg(max(lineKey).as("__xk")))
+      val tgt = base.crossJoin(key)
+        .withColumn("__copy", explode(when(lineKey === col("__xk"),
+          array(lit(1), lit(2), lit(3))).otherwise(array(lit(1)))))
         .select(base.columns.map(col).toIndexedSeq: _*)
-        .localCheckpoint()
-      val tgt = base.unionByName(extra).unionByName(extra)
       val rep = Comparator.compare(src, tgt, CompareOptions(numBuckets = 512))
       // orphansWithCopies: the over-delete flag rides the diff
       // aggregation's own bag delta — no full-row window in the plan

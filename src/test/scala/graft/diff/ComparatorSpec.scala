@@ -124,6 +124,12 @@ class ComparatorSpec extends SparkSpec {
     assert(lines.exists(_.startsWith("plan:")))
     assert(lines.exists(_.contains("buckets NOK")))
     assert(lines.exists(_.startsWith("orphans:")))
+    // the peel line follows the fingerprint line and names every bucket
+    val peel = lines.indexWhere(_.startsWith("peel:"))
+    assert(peel > lines.indexWhere(_.startsWith("fingerprint:")), lines)
+    assert(lines(peel).matches(
+      "peel: \\d+/\\d+ mismatched buckets decoded, \\d+ fetched whole, \\d+ re-fetched"),
+      lines(peel))
   }
 
   test("orphan counts agree with materialized orphan rows (lazy fetch path)") {
@@ -185,6 +191,51 @@ class ComparatorSpec extends SparkSpec {
       Comparator.schemaGate(li, retyped, SchemaCheck.Positional)
     }
     Comparator.schemaGate(li, retyped, SchemaCheck.ArityOnly) // no throw
+  }
+
+  test("positional compare: target columns under other names fetch orphans by position") {
+    val spark2 = spark
+    import spark2.implicits._
+    val rep = Comparator.compare(Seq((1L, "a"), (2L, "b")).toDF("id", "v"),
+      Seq((1L, "a"), (3L, "c")).toDF("ID2", "w"), CompareOptions(numBuckets = 4))
+    val got = rep.orphans.collect().map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSet
+    assert(got == Set(("source", 2L, "b"), ("target", 3L, "c")), got)
+    assert(rep.orphans.columns.toSeq == Seq("side", "id", "v"))
+    rep.release()
+  }
+
+  private def arityCompare(a: DataFrame, b: DataFrame): DiffReport =
+    Comparator.compare(a, b,
+      CompareOptions(numBuckets = 16, schemaCheck = SchemaCheck.ArityOnly))
+
+  test("ArityOnly: int 150 vs decimal(5,2) 1.50 is a difference, 150.00 is not") {
+    val spark2 = spark
+    import spark2.implicits._
+    val ints = Seq(150).toDF("v")
+    def dec(v: String) = Seq(v).toDF("v").select(col("v").cast("decimal(5,2)").as("v"))
+    val rep = arityCompare(ints, dec("1.50"))
+    assert(!rep.identical, rep.verdict)
+    assert(rep.orphanSrc == 1 && rep.orphanTgt == 1, rep.verdict)
+    rep.release()
+    val same = arityCompare(ints, dec("150.00"))
+    assert(same.identical, same.verdict)
+    same.release()
+  }
+
+  test("ArityOnly: decimal(5,2) 1.50 vs decimal(5,1) 15.0 is a difference, 1.5 is not") {
+    val spark2 = spark
+    import spark2.implicits._
+    def dec(v: String, t: String) = Seq(v).toDF("v").select(col("v").cast(t).as("v"))
+    val rep = arityCompare(dec("1.50", "decimal(5,2)"), dec("15.0", "decimal(5,1)"))
+    assert(!rep.identical, rep.verdict)
+    assert(rep.orphanSrc == 1 && rep.orphanTgt == 1, rep.verdict)
+    // orphan rows keep their values (the union widens both to one decimal type)
+    val vals = rep.orphans.collect().map(r => r.getString(0) -> r.getDecimal(1).doubleValue).toMap
+    assert(vals == Map("source" -> 1.5, "target" -> 15.0), vals)
+    rep.release()
+    val same = arityCompare(dec("1.50", "decimal(5,2)"), dec("1.5", "decimal(5,1)"))
+    assert(same.identical, same.verdict)
+    same.release()
   }
 
   test("maxDelta tolerance: verdict within tolerance but not identical") {
