@@ -126,6 +126,9 @@ object ConfigLoader {
       }
     if (root == null || !root.isObject)
       throw new IllegalArgumentException("Config root must be a mapping")
+    onlyFields(root, "config", "source", "target", "max_delta", "search_diff",
+      "num_buckets", "persist_scans", "max_mismatch_fraction", "breaker_min_rows",
+      "schema_check", "align_columns", "renames", "repair_table", "repair_out")
     CompareSpec(
       source = side(require(root, "source"), "source"),
       target = side(require(root, "target"), "target"),
@@ -177,15 +180,22 @@ object ConfigLoader {
   }
 
   private[config] def side(node: JsonNode, where: String): SideSpec = {
+    onlyFields(node, where, "name", "db")
     val name = opt(node, "name").map(_.asText).getOrElse(where)
     val db = require(node, "db", where)
     val tpe = require(db, "type", s"$where.db").asText
     val src = tpe match {
       case "parquet" | "csv" | "json" | "orc" =>
+        onlyFields(db, s"$where.db", "type", "path", "qry")
         SourceSpec.File(tpe,
           require(db, "path", s"$where.db").asText,
           opt(db, "qry").map(_.asText))
       case "postgres" | "oracle" | "jdbc" =>
+        // generic jdbc names its driver; postgres/oracle fix theirs and
+        // may build the url from host/port/dbname
+        onlyFields(db, s"$where.db", Seq("type", "url", "user", "password_env", "qry",
+          "partition_column", "num_partitions", "lower_bound", "upper_bound") ++
+          (if (tpe == "jdbc") Seq("driver") else Seq("host", "port", "dbname")): _*)
         val url = opt(db, "url").map(_.asText).getOrElse {
           val host = require(db, "host", s"$where.db").asText
           val port = require(db, "port", s"$where.db").asInt
@@ -218,6 +228,7 @@ object ConfigLoader {
             s"$where.db: lower_bound/upper_bound need a partition_column")
         spec
       case "sql" =>
+        onlyFields(db, s"$where.db", "type", "qry")
         SourceSpec.Sql(require(db, "qry", s"$where.db").asText)
       case other =>
         throw new IllegalArgumentException(
@@ -232,6 +243,14 @@ object ConfigLoader {
       throw new IllegalArgumentException(s"$where: missing required field '$field'")
     n
   }
+
+  /** Rejects any field of `node` outside `allowed`: a typo such as
+    * `schema_chek` must fail, not silently fall back to the default. */
+  private def onlyFields(node: JsonNode, where: String, allowed: String*): Unit =
+    node.fieldNames().asScala.find(f => !allowed.contains(f)).foreach { f =>
+      throw new IllegalArgumentException(
+        s"$where: unknown field '$f' (valid: ${allowed.mkString(", ")})")
+    }
 
   private[config] def opt(node: JsonNode, field: String): Option[JsonNode] =
     Option(node.get(field)).filterNot(_.isNull)

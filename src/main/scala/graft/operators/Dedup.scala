@@ -16,19 +16,20 @@ import org.apache.spark.sql.functions._
   *   - exact dedup: single hash-shuffle on the content digest; map-side
   *     partial aggregation collapses duplicates before the exchange.
   *   - shingle self-joins: candidate generation joins on the shingle —
-  *     hot shingles skew the shuffle; `maxDocFreq` drops
-  *     stop-shingles (standard prefix-filtering argument: a shingle in
-  *     >N docs contributes only low-jaccard pairs). MinHash-LSH is the
-  *     scale path: signature size is constant per doc, and the band
-  *     join touches only colliding buckets.
+  *     hot shingles skew the shuffle, so they take a salted join while
+  *     the cold bulk takes a merge join; `maxDocFreq` drops
+  *     stop-shingles (a shingle in >N docs contributes only
+  *     low-jaccard pairs). MinHash-LSH is the scale path: signature
+  *     size is constant per doc, and the band join touches only
+  *     colliding buckets.
   *   - embedding near-dup: quantized int64 dot products — exact,
   *     order-independent, and cross-engine deterministic (no float
   *     accumulation-order hazard).
   */
 /** A dedup plan plus ownership of the caches it retains (the
   * DiffReport.release pattern): `df` is the lazy result,
-  * `strategy` names the join shape the planner picked ("plain",
-  * "salted", "prefiltered", "banded"), and [[release]] drops the
+  * `strategy` names the operator's shape ("two-path" for the exact
+  * jaccard join, "lsh-verified", "banded", …), and [[release]] drops the
   * serialized intermediate caches (shingle/fingerprint tables) so a
   * long-lived session running many dedup passes doesn't accumulate
   * executor storage. After release the plan still computes — it just
@@ -153,197 +154,150 @@ object Dedup {
   }
 
   /** Candidate pairs = docs sharing any band bucket. */
-  def minhashCandidates(docs: DataFrame): DataFrame = {
-    val b = lshBands(minhashSignatures(docs))
-    val l = b.select(col("band"), col("bkey"), col("doc_id").as("doc_a"))
-    val r = b.select(col("band"), col("bkey"), col("doc_id").as("doc_b"))
-    l.join(r, Seq("band", "bkey"))
+  def minhashCandidates(docs: DataFrame): DataFrame =
+    bandPairs(lshBands(minhashSignatures(docs)))
+
+  /** The MinHash band self-join over [[lshBands]] rows: each doc pair
+    * sharing at least one (band, bkey) bucket, once, as doc_a < doc_b.
+    */
+  private def bandPairs(b: DataFrame): DataFrame =
+    b.select(col("band"), col("bkey"), col("doc_id").as("doc_a"))
+      .join(b.select(col("band"), col("bkey"), col("doc_id").as("doc_b")), Seq("band", "bkey"))
       .where(col("doc_a") < col("doc_b"))
       .select(col("doc_a"), col("doc_b"))
       .distinct()
-  }
 
-  /** Exact n-gram jaccard over candidate pairs that share ≥1 shingle.
-    * The shingle table feeds three plan branches (per-doc counts and
-    * both sides of the self-join) — persisted so the tokenize/explode/
-    * distinct pass runs once, not three times. SKEW-SAFE BY DEFAULT:
-    * delegates to [[jaccardPairsPlan]], which measures the hottest
-    * shingle from the already-computed per-shingle counts and switches
-    * the self-join to the salted form when a pathological corpus would
-    * otherwise put an unbounded f² group on one task. The returned
-    * plan's caches live until `spark.catalog.clearCache()` or session
-    * end — long-lived sessions should use [[jaccardPairsPlan]] and
-    * `release()`.
+  /** Exact n-gram jaccard over pairs that share ≥1 shingle. The
+    * returned plan's shingle cache lives until
+    * `spark.catalog.clearCache()` or session end — long-lived sessions
+    * should use [[jaccardPairsPlan]] and `release()`.
     */
-  def jaccardPairs(docs: DataFrame, threshold: Double): DataFrame =
-    jaccardPairsPlan(docs, threshold).df
-
-  def jaccardPairs(docs: DataFrame, threshold: Double, maxDocFreq: Option[Int]): DataFrame =
+  def jaccardPairs(docs: DataFrame, threshold: Double,
+      maxDocFreq: Option[Int] = None): DataFrame =
     jaccardPairsPlan(docs, threshold, maxDocFreq).df
 
-  /** Exact jaccard with the hot-shingle self-join SALTED — the
-    * skew-bound form of the exactness baseline. The plain unfiltered
-    * self-join puts a shingle shared by f docs into ONE join group of
-    * f² candidate work; salting gives that shingle's rows a
-    * pseudo-random salt in [0, salts), replicates the other side
-    * `salts` times, and joins on (shingle, salt) — the hot shingle's
-    * work spreads over `salts` tasks, bounding the largest group at
-    * ~f²/salts.
-    *
-    * TWO-PATH: only shingles with doc frequency above `hotDocFreq` pay
-    * the ×salts replication; the cold stratum (the overwhelming bulk of
-    * shuffle volume at 100 TB — cold keys dominate any healthy corpus)
-    * takes the plain merge join, and the two strata's shared-shingle
-    * counts union before the pair rollup. Each shingle lands in exactly
-    * one stratum, so the union is partition-exact and the result is
-    * row-identical to [[jaccardPairs]] (asserted in OperatorsSpec on a
-    * deliberately hot-shingle corpus; oracle-gated as dd_jaccard_salted
-    * against the SAME SQL as dd_jaccard). `hotDocFreq <= 0` replicates
-    * everything (the pre-two-path form — pure salting overhead on cold
-    * keys, kept only as the degenerate case). When dropping hot
-    * shingles entirely is acceptable, the prefiltered variant
-    * (maxDocFreq) is strictly cheaper AND more informative per pair.
+  /** Document frequency above which a shingle leaves the merge join for
+    * the salted one. 256 shared docs ⇒ ~65k candidate rows from one
+    * shingle — well past one task's fair share, while far above any
+    * healthy corpus's stop-shingle frequency (the test corpora peak at
+    * df=25).
     */
-  def jaccardPairsSalted(docs: DataFrame, threshold: Double, salts: Int = 16,
-      hotDocFreq: Int = AutoSaltDocFreq): DataFrame =
-    jaccardPairsPlan(docs, threshold, maxDocFreq = None,
-      autoSaltDocFreq = 0, salts = salts, saltHotDocFreq = hotDocFreq).df
+  private val HotDocFreq = 256
+  private val HotSalts = 8
 
-  /** Shingle-count hotness above which the UNFILTERED exact join
-    * auto-switches to the salted form. 256 shared docs ⇒ ~65k candidate
-    * rows from one shingle — well past "one task's fair share" while
-    * far above any healthy corpus's stop-shingle frequency (the test
-    * corpora peak at df=25).
-    */
-  val AutoSaltDocFreq = 256
-
-  /** Managed form of [[jaccardPairs]] — returns the plan, the join
-    * strategy the planner picked, and a release handle for the
-    * retained shingle cache.
+  /** Managed form of [[jaccardPairs]]: the plan plus a release handle
+    * for the retained shingle cache. The shingle table feeds the
+    * per-doc sizes, the document-frequency table and both sides of the
+    * self-join, so it is persisted: the tokenize/explode/distinct pass
+    * runs once.
     *
     * `maxDocFreq = Some(f)`: drop shingles appearing in more than f
-    * documents before the self-join — the standard prefix-filtering/
-    * stop-shingle bound. A shingle in f docs contributes f² candidate
-    * pairs to the shuffle while only ever supporting low-jaccard
-    * matches, so hot shingles are both the skew hazard AND the least
-    * informative; dropping them bounds the largest join group at
-    * maxDocFreq². NOTE: jaccard is then computed over the FILTERED
-    * shingle sets (documented approximation — the reason the
-    * unfiltered variant remains the exactness baseline).
+    * documents before the self-join — the stop-shingle bound. A
+    * shingle in f docs contributes f² candidate pairs to the shuffle
+    * while only ever supporting low-jaccard matches, so hot shingles
+    * are both the skew hazard AND the least informative. NOTE: jaccard
+    * is then computed over the FILTERED shingle sets (documented
+    * approximation — the reason the unfiltered form remains the
+    * exactness baseline). `None`: exact jaccard.
     *
-    * `maxDocFreq = None`: EXACT jaccard. The hottest shingle's doc
-    * frequency is read off the per-shingle counts (one tiny aggregate
-    * over the already-persisted shingle table); above
-    * `autoSaltDocFreq` the self-join runs salted (strategy "salted",
-    * results identical), otherwise plain. `autoSaltDocFreq = 0`
-    * forces salting; `Int.MaxValue` forces the plain join.
-    *
-    * `saltHotDocFreq`: the salted strategy's hot/cold split point —
-    * only shingles with doc frequency above it are replicated ×salts;
-    * the rest take the plain merge join (see [[jaccardPairsSalted]]).
-    * `<= 0` replicates every shingle row (the degenerate uniform-tax
-    * form).
+    * Skew-safe on every corpus, with no probe job at plan construction:
+    * shingles shared by more than 256 documents take the salted
+    * [[Skew.saltedJoin]], the rest a pinned sort-merge join, split at
+    * run time by the same per-shingle document-frequency aggregate that
+    * applies `maxDocFreq`.
     */
-  def jaccardPairsPlan(
-      docs: DataFrame,
-      threshold: Double,
-      maxDocFreq: Option[Int] = None,
-      autoSaltDocFreq: Int = AutoSaltDocFreq,
-      salts: Int = 8,
-      saltHotDocFreq: Int = AutoSaltDocFreq): DedupPlan = {
-    val all = shingleDf(docs)
-    val sh0 = maxDocFreq match {
-      case Some(f) =>
-        val hot = all.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-          .where(col("df") > f).select(col("shingle"))
-        // no broadcast hint: the hot-shingle set is usually tiny but is
-        // corpus-dependent (a pathological corpus can have millions of
-        // stop-shingles), so let AQE pick broadcast vs shuffle anti-join
-        // from the RUNTIME size instead of forcing an unbounded driver
-        // broadcast
-        all.join(hot, Seq("shingle"), "left_anti")
-      case None => all
-    }
-    // serialized storage: the shingle table is cached only to avoid
-    // three tokenize/explode/distinct passes; deserialized row caching
-    // of millions of short strings is pure GC pressure
-    val sh = sh0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    val cnt = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
+  def jaccardPairsPlan(docs: DataFrame, threshold: Double,
+      maxDocFreq: Option[Int] = None): DedupPlan = {
+    // serialized storage: deserialized row caching of millions of
+    // short strings is pure GC pressure
+    val sh = shingleDf(docs)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    val (common, sizes, keyCache) = coShingleCounts(sh, maxDocFreq)
+    DedupPlan(jaccardAtLeast(common, sizes, threshold), "two-path", Seq(sh, keyCache))
+  }
 
-    val strategy = maxDocFreq match {
-      case Some(_) => "prefiltered" // hot shingles already dropped — plain join is bounded
-      case None if autoSaltDocFreq <= 0 => "salted"
-      case None if autoSaltDocFreq == Int.MaxValue => "plain"
-      case None =>
-        // one O(#shingles) aggregate over the persisted table — the
-        // counts exist anyway; this is the skew probe
-        val maxDf = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-          .agg(coalesce(max(col("df")), lit(0L))).head().getLong(0)
-        if (maxDf > autoSaltDocFreq) "salted" else "plain"
-    }
+  /** Shared-shingle counts (doc_a, doc_b, c ≥ 1) of the exact shingle
+    * self-join, the per-doc sizes (doc_id, n) over the same kept
+    * shingles, and the cached key table the caller must release. One
+    * per-shingle document-frequency aggregate serves both the
+    * `maxDocFreq` drop and the hot/cold split:
+    *   - shingles with df > `maxDocFreq` are dropped;
+    *   - hot shingles (df > [[HotDocFreq]]) take [[Skew.saltedJoin]],
+    *     so a shingle shared by f docs spreads its f² candidate work
+    *     over [[HotSalts]] tasks instead of one;
+    *   - every other shingle — the bulk of the volume in any real
+    *     corpus — takes the pinned sort-merge join, with no
+    *     replication tax.
+    * Each shingle lands in exactly one stratum, so unioning the two
+    * join outputs before the pair rollup reproduces the single-join
+    * counts exactly. The split is a runtime filter, not a plan-time
+    * decision: no action runs while the plan is built, and on a
+    * healthy corpus the hot stratum is empty.
+    *
+    * The merge join is pinned because the shingle table's size
+    * ESTIMATE comes from the small pre-explode parquet scan, so the
+    * planner would otherwise broadcast the whole self-join side and
+    * build its hashed relation on one thread (measured 20-80 s stalls
+    * at sf0.1); at real scale a shingle table is never broadcastable.
+    */
+  private def coShingleCounts(sh: DataFrame,
+      maxDocFreq: Option[Int]): (DataFrame, DataFrame, DataFrame) = {
+    val cap = maxDocFreq.fold(Long.MaxValue)(_.toLong)
+    // shingles that leave the cold merge join: dropped or hot. Cached:
+    // up to three joins below read it, and the aggregate runs once. No
+    // broadcast hint on those joins: the set is usually tiny but
+    // corpus-dependent, so AQE picks broadcast vs shuffle from the
+    // RUNTIME size instead of forcing an unbounded driver broadcast
+    val special = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
+      .where(col("df") > math.min(cap, HotDocFreq.toLong))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    def keys(cond: Column) = special.where(cond).select(col("shingle"))
+    val kept =
+      if (maxDocFreq.isEmpty) sh
+      else sh.join(keys(col("df") > cap), Seq("shingle"), "left_anti")
+    val hotSh = sh.join(keys(col("df") <= cap), Seq("shingle"), "left_semi")
+    val coldSh = sh.join(special.select(col("shingle")), Seq("shingle"), "left_anti")
+    val hotPairs = Skew.saltedJoin(
+        hotSh.select(col("doc_id").as("ida"), col("shingle")),
+        hotSh.select(col("doc_id").as("idb"), col("shingle").as("shingle_r")),
+        "shingle", "shingle_r", HotSalts)
+      .where(col("ida") < col("idb"))
+      .select(col("ida"), col("idb"))
+    val coldPairs = coldSh.as("a").hint("merge")
+      .join(coldSh.as("b"),
+        col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("ida"), col("b.doc_id").as("idb"))
+    val common = hotPairs.unionAll(coldPairs)
+      .groupBy(col("ida").as("doc_a"), col("idb").as("doc_b"))
+      .agg(count(lit(1)).as("c"))
+    (common, kept.groupBy(col("doc_id")).agg(count(lit(1)).as("n")), special)
+  }
 
-    val extraRetained = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val common = strategy match {
-      case "salted" if saltHotDocFreq > 0 =>
-        // two-path: the per-shingle doc frequencies come off the
-        // persisted shingle table (one aggregate), and ONLY the hot
-        // stratum pays the ×salts replication. Cold shingles — the
-        // bulk of the volume in any real corpus — take the plain
-        // pinned-merge join. The two strata partition the shingle
-        // space, so unioning their join outputs before the pair
-        // rollup reproduces the single-join counts exactly.
-        val hotKeys = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-          .where(col("df") > saltHotDocFreq)
-          .select(col("shingle"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-        extraRetained += hotKeys
-        // no broadcast hint on the semi/anti tags: |hotKeys| is bounded
-        // by rows/saltHotDocFreq but corpus-dependent — let AQE pick
-        // from the runtime size (the prefiltered path's argument)
-        val hotSh = sh.join(hotKeys, Seq("shingle"), "left_semi")
-        val coldSh = sh.join(hotKeys, Seq("shingle"), "left_anti")
-        val hotPairs = Skew.saltedJoin(
-          hotSh.select(col("doc_id").as("ida"), col("shingle")),
-          hotSh.select(col("doc_id").as("idb"), col("shingle").as("shingle_r")),
-          "shingle", "shingle_r", salts)
-          .where(col("ida") < col("idb"))
-          .select(col("ida"), col("idb"))
-        val coldPairs = coldSh.as("a").hint("merge")
-          .join(coldSh.as("b"),
-            col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("ida"), col("b.doc_id").as("idb"))
-        hotPairs.unionAll(coldPairs)
-          .groupBy(col("ida").as("doc_a"), col("idb").as("doc_b"))
-          .agg(count(lit(1)).as("c"))
-      case "salted" =>
-        // degenerate uniform form: every shingle row replicated ×salts
-        val l = sh.select(col("doc_id").as("ida"), col("shingle"))
-        val r = sh.select(col("doc_id").as("idb"), col("shingle").as("shingle_r"))
-        Skew.saltedJoin(l, r, "shingle", "shingle_r", salts)
-          .where(col("ida") < col("idb"))
-          .groupBy(col("ida").as("doc_a"), col("idb").as("doc_b"))
-          .agg(count(lit(1)).as("c"))
-      case _ =>
-        // pinned sort-merge: the shingle table's size ESTIMATE comes
-        // from the small pre-explode parquet scan, so the planner
-        // would otherwise broadcast the whole self-join side and build
-        // its hashed relation on one thread (measured 20-80 s stalls
-        // at sf0.1); at real scale a shingle table is never
-        // broadcastable, so SMJ is the only right strategy here
-        sh.as("a").hint("merge")
-          .join(sh.as("b"),
-            col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))
-          .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-          .agg(count(lit(1)).as("c"))
-    }
-    val scored = common
-      .join(cnt.select(col("doc_id").as("doc_a"), col("n").as("na")), Seq("doc_a"))
-      .join(cnt.select(col("doc_id").as("doc_b"), col("n").as("nb")), Seq("doc_b"))
+  /** |S(a) ∩ S(b)| for each candidate pair (doc_a, doc_b): the pair
+    * explodes by doc_a's shingles and matches doc_b's (doc, shingle)
+    * rows — Σ_pairs |shingles| work, bounded by candidate count ×
+    * document length. Output (doc_a, doc_b, c) for pairs with c ≥ 1.
+    */
+  private def candidateShingleCounts(cand: DataFrame, sh: DataFrame): DataFrame =
+    cand
+      .join(sh.select(col("doc_id").as("doc_a"), col("shingle")), Seq("doc_a"))
+      .join(sh.select(col("doc_id").as("doc_b"), col("shingle")), Seq("doc_b", "shingle"))
+      .groupBy(col("doc_a"), col("doc_b"))
+      .agg(count(lit(1)).as("c"))
+
+  /** Exact jaccard c / (na + nb − c) of (doc_a, doc_b, c) rows, sizes
+    * attached from (doc_id, n), kept at ≥ `threshold`: (doc_a, doc_b,
+    * jaccard). Exact integers through one division — cross-engine
+    * deterministic.
+    */
+  private def jaccardAtLeast(common: DataFrame, sizes: DataFrame,
+      threshold: Double): DataFrame =
+    common
+      .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("na")), Seq("doc_a"))
+      .join(sizes.select(col("doc_id").as("doc_b"), col("n").as("nb")), Seq("doc_b"))
       .withColumn("jaccard", col("c").cast("double") / (col("na") + col("nb") - col("c")))
       .where(col("jaccard") >= threshold)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
-    DedupPlan(scored, strategy, sh +: extraRetained.toSeq)
-  }
 
   private val Hex = "0123456789abcdef"
 
@@ -515,7 +469,7 @@ object Dedup {
     * bounded by distinct-tokens · n_docs · 10⁶ — which EXCEEDS Long
     * around 10⁸–10⁹ docs for ordinary 10³–10⁴-token documents. The
     * accumulation therefore runs in DECIMAL(38,0) (headroom past
-    * 10²⁰ docs), the same widening [[graft.operators.Skew.keySkew]]
+    * 10²⁰ docs), the same widening [[graft.operators.Profiler.keySkew]]
     * uses; DuckDB mirrors with its automatic HUGEINT sum.
     *
     * Scale shape: ONE distinct (doc, token) pass persisted behind the
@@ -643,21 +597,10 @@ object Dedup {
     // self-norms computed ONCE per vector, not per pair: the N² pair
     // stage then does a single dot product instead of three (the two
     // norm dots would otherwise dominate — measured 3× on the bench)
-    val q = quantized(emb)
-      .withColumn("norm", sqrt(dot(col("v"), col("v")).cast("double")))
+    val q = normed(emb)
     val l = q.select(col("vec_id").as("vec_a"), col("v").as("va"), col("norm").as("na"))
     val r = q.select(col("vec_id").as("vec_b"), col("v").as("vb"), col("norm").as("nb"))
-    l.crossJoin(r)
-      .where(col("vec_a") < col("vec_b"))
-      // zero-norm guard: 0/0 is NULL in Spark but NaN in DuckDB (and
-      // NaN passes `>= threshold` there); degenerate pairs score 0.0
-      // in both engines, below any positive threshold
-      .withColumn("cos",
-        when(col("na") * col("nb") > 0,
-          dot(col("va"), col("vb")).cast("double") / (col("na") * col("nb")))
-          .otherwise(lit(0.0)))
-      .where(col("cos") >= threshold)
-      .select(col("vec_a"), col("vec_b"), col("cos"))
+    cosineAtLeast(l.crossJoin(r).where(col("vec_a") < col("vec_b")), threshold)
   }
 
   /** Embedding cosine near-dup pairs via SRP-LSH — the SCALE path and
@@ -785,13 +728,6 @@ object Dedup {
       col("norm").as("na"))
     val vb = q.select(col("vec_id").as("vec_b"), col("v").as("vb"),
       col("norm").as("nb"))
-    def score(df: DataFrame) = df
-      .withColumn("cos",
-        when(col("na") * col("nb") > 0,
-          dot(col("va"), col("vb")).cast("double") / (col("na") * col("nb")))
-          .otherwise(lit(0.0)))
-      .where(col("cos") >= threshold)
-      .select(col("vec_a"), col("vec_b"), col("cos"))
     if (smallPayload)
       // broadcast path: score FIRST, dedup only survivors. The two
       // payload attaches are map-side broadcast probes and the dot is
@@ -808,44 +744,55 @@ object Dedup {
       // A pair colliding in k ≤ NumTables tables is scored k times —
       // k extra 64-mult dots, orders cheaper than shuffling the
       // candidate stream once
-      score(cand.join(broadcast(va), Seq("vec_a"))
-        .join(broadcast(vb), Seq("vec_b"))).distinct()
+      cosineAtLeast(cand.join(broadcast(va), Seq("vec_a"))
+        .join(broadcast(vb), Seq("vec_b")), threshold).distinct()
     else
       // shuffle path (payload over the broadcast budget): dedup the
       // ids-only candidate stream BEFORE the attaches — here the
       // attaches are shuffle joins that move payload bytes, so the
       // cross-table dedup halves real shuffle volume instead of
       // feeding a needless global hashAgg
-      score(cand.distinct().join(va, Seq("vec_a")).join(vb, Seq("vec_b")))
+      cosineAtLeast(cand.distinct().join(va, Seq("vec_a")).join(vb, Seq("vec_b")),
+        threshold)
   }
 
   private def normed(emb: DataFrame): DataFrame =
     quantized(emb)
       .withColumn("norm", sqrt(dot(col("v"), col("v")).cast("double")))
 
-  /** Banded self-join → exact-cosine score → threshold → pair dedup,
-    * shared by the fixed-width and auto-width LSH forms.
+  /** Exact quantized cosine of (vec_a, va, na, vec_b, vb, nb) rows,
+    * kept at ≥ `threshold`: (vec_a, vec_b, cos). Zero-norm guard: 0/0
+    * is NULL in Spark but NaN in DuckDB (and NaN passes `>= threshold`
+    * there); degenerate pairs score 0.0 in both engines, below any
+    * positive threshold.
     */
-  private def scoredBucketPairs(tb: DataFrame, threshold: Double): DataFrame = {
-    val l = tb.select(col("t"), col("bucket"),
-      col("vec_id").as("vec_a"), col("v").as("va"), col("norm").as("na"))
-    val r = tb.select(col("t"), col("bucket"),
-      col("vec_id").as("vec_b"), col("v").as("vb"), col("norm").as("nb"))
-    l.join(r, Seq("t", "bucket"))
-      .where(col("vec_a") < col("vec_b"))
-      // score BEFORE deduping table collisions: the dot is a cheap
-      // codegen'd loop over the streamed join output, while a
-      // dropDuplicates first would shuffle every candidate WITH both
-      // embedding arrays (~1 KB/row) — scoring first means the dedup
-      // shuffle carries only (vec_a, vec_b, cos) for the pairs that
-      // survive the threshold
+  private def cosineAtLeast(pairs: DataFrame, threshold: Double): DataFrame =
+    pairs
       .withColumn("cos",
         when(col("na") * col("nb") > 0,
           dot(col("va"), col("vb")).cast("double") / (col("na") * col("nb")))
           .otherwise(lit(0.0)))
       .where(col("cos") >= threshold)
       .select(col("vec_a"), col("vec_b"), col("cos"))
-      .distinct()
+
+  /** Banded self-join → exact-cosine score → threshold → pair dedup:
+    * the fixed-width LSH form. (The auto-width form bands ids only and
+    * attaches payloads afterwards; it shares [[cosineAtLeast]], not
+    * this join.)
+    */
+  private def scoredBucketPairs(tb: DataFrame, threshold: Double): DataFrame = {
+    val l = tb.select(col("t"), col("bucket"),
+      col("vec_id").as("vec_a"), col("v").as("va"), col("norm").as("na"))
+    val r = tb.select(col("t"), col("bucket"),
+      col("vec_id").as("vec_b"), col("v").as("vb"), col("norm").as("nb"))
+    // score BEFORE deduping table collisions: the dot is a cheap
+    // codegen'd loop over the streamed join output, while a
+    // dropDuplicates first would shuffle every candidate WITH both
+    // embedding arrays (~1 KB/row) — scoring first means the dedup
+    // shuffle carries only (vec_a, vec_b, cos) for the pairs that
+    // survive the threshold
+    cosineAtLeast(l.join(r, Seq("t", "bucket")).where(col("vec_a") < col("vec_b")),
+      threshold).distinct()
   }
 
   /** Connected components over near-dup pairs — the step that turns
@@ -1183,24 +1130,8 @@ object Dedup {
     val sh = shingleDf(docs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val b = lshBands(signaturesFromShingles(sh))
-    val cand = b.select(col("band"), col("bkey"), col("doc_id").as("doc_a"))
-      .join(b.select(col("band"), col("bkey"), col("doc_id").as("doc_b")), Seq("band", "bkey"))
-      .where(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b"))
-      .distinct()
-    val inter = cand
-      .join(sh.select(col("doc_id").as("doc_a"), col("shingle")), Seq("doc_a"))
-      .join(sh.select(col("doc_id").as("doc_b"), col("shingle")), Seq("doc_b", "shingle"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).as("c"))
-    val verified = inter
-      .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("na")), Seq("doc_a"))
-      .join(sizes.select(col("doc_id").as("doc_b"), col("n").as("nb")), Seq("doc_b"))
-      .withColumn("jaccard",
-        col("c").cast("double") / (col("na") + col("nb") - col("c")))
-      .where(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
+    val cand = bandPairs(lshBands(signaturesFromShingles(sh)))
+    val verified = jaccardAtLeast(candidateShingleCounts(cand, sh), sizes, threshold)
     DedupPlan(verified, "lsh-verified", Seq(sh))
   }
 
@@ -1436,32 +1367,19 @@ object Dedup {
     * both sides (signatures + bands for predicted; posting-list
     * intersection + sizes for truth) — the [[lshVerifiedPairsPlan]]
     * sharing shape. As separate operators the corpus is shingled
-    * twice; here the second scan is a cache read. Truth uses the plain
-    * co-shingle join — on the labeled SAMPLE this evaluation runs on,
-    * not the full corpus, so the quadratic exactness is the point.
+    * twice; here the second scan is a cache read. Truth is the exact
+    * co-shingle join of [[jaccardPairs]] (skew-safe, merge-pinned) —
+    * on the labeled SAMPLE this evaluation runs on, not the full
+    * corpus, so the quadratic exactness is the point.
     */
   def evaluateMinhashPlan(docs: DataFrame, threshold: Double): DedupPlan = {
     require(threshold > 0, "evaluateMinhashPlan: threshold must be > 0")
     val sh = shingleDf(docs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val b = lshBands(signaturesFromShingles(sh))
-    val pred = b.select(col("band"), col("bkey"), col("doc_id").as("doc_a"))
-      .join(b.select(col("band"), col("bkey"), col("doc_id").as("doc_b")),
-        Seq("band", "bkey"))
-      .where(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b")).distinct()
-    val inter = sh.select(col("doc_id").as("doc_a"), col("shingle"))
-      .join(sh.select(col("doc_id").as("doc_b"), col("shingle")), Seq("shingle"))
-      .where(col("doc_a") < col("doc_b"))
-      .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("c"))
-    val truth = inter
-      .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("na")), Seq("doc_a"))
-      .join(sizes.select(col("doc_id").as("doc_b"), col("n").as("nb")), Seq("doc_b"))
-      .where(col("c").cast("double") / (col("na") + col("nb") - col("c"))
-        >= threshold)
-      .select(col("doc_a"), col("doc_b"))
-    DedupPlan(evaluatePairs(pred, truth), "eval-shared", Seq(sh))
+    val pred = bandPairs(lshBands(signaturesFromShingles(sh)))
+    val (common, sizes, keyCache) = coShingleCounts(sh, None)
+    val truth = jaccardAtLeast(common, sizes, threshold).select(col("doc_a"), col("doc_b"))
+    DedupPlan(evaluatePairs(pred, truth), "eval-shared", Seq(sh, keyCache))
   }
 
   /** [[evaluateMinhashPlan]] over a FIXED-SIZE deterministic sample —
@@ -1499,12 +1417,7 @@ object Dedup {
     val sh = shingleDf(docs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     val sig = signaturesFromShingles(sh)
-    val b = lshBands(sig)
-    val cand = b.select(col("band"), col("bkey"), col("doc_id").as("doc_a"))
-      .join(b.select(col("band"), col("bkey"), col("doc_id").as("doc_b")),
-        Seq("band", "bkey"))
-      .where(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b")).distinct()
+    val cand = bandPairs(lshBands(sig))
     def side(s: String) = sig.select(
       (col("doc_id").as(s"doc_$s") +:
         (0 to 7).map(i => col(s"h$i").as(s"$s$i"))): _*)
@@ -1513,12 +1426,8 @@ object Dedup {
         (0 to 7).map(i => when(col(s"a$i") === col(s"b$i"), 1L).otherwise(0L))
           .reduce(_ + _).as("n_match"))
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val inter = cand
-      .join(sh.select(col("doc_id").as("doc_a"), col("shingle")), Seq("doc_a"))
-      .join(sh.select(col("doc_id").as("doc_b"), col("shingle")), Seq("doc_b", "shingle"))
-      .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("c"))
     val out = est
-      .join(inter, Seq("doc_a", "doc_b"), "left")
+      .join(candidateShingleCounts(cand, sh), Seq("doc_a", "doc_b"), "left")
       .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("na")), Seq("doc_a"))
       .join(sizes.select(col("doc_id").as("doc_b"), col("n").as("nb")), Seq("doc_b"))
       .select(col("doc_a"), col("doc_b"),
@@ -1646,12 +1555,11 @@ object Dedup {
     "dd_jaccard_prefiltered" -> ((s, dir) =>
       jaccardPairs(table(s, dir, "documents"), 0.1, Some(20)).orderBy("doc_a", "doc_b")),
 
-    // skew-bound salted variant — same results as dd_jaccard; two-path:
-    // shingles with df > 8 spread over 8 join groups, cold shingles
-    // (the bulk) take the plain merge join with no replication tax
+    // the same exact join as dd_jaccard, gated against the same SQL:
+    // its salted hot stratum is empty on the gate corpus, so this gate
+    // pins that the two-path union stays row-identical there
     "dd_jaccard_salted" -> ((s, dir) =>
-      jaccardPairsSalted(table(s, dir, "documents"), 0.1, salts = 8, hotDocFreq = 8)
-        .orderBy("doc_a", "doc_b")),
+      jaccardPairs(table(s, dir, "documents"), 0.1).orderBy("doc_a", "doc_b")),
 
     "dd_simhash" -> ((s, dir) =>
       simhash(table(s, dir, "documents")).orderBy("doc_id")),

@@ -6,25 +6,10 @@ import org.apache.spark.sql.functions._
 /** Skew mitigation utilities.
   *
   * AQE's skew-join handling covers sort-merge joins at runtime; these
-  * utilities cover the cases it can't: aggregation skew (one giant
-  * key's partial states still land on one reducer) and shuffle joins
-  * where one side's hot keys would hot-spot a single task.
+  * utilities cover the case it can't: shuffle joins where one side's
+  * hot keys would hot-spot a single task.
   */
 object Skew {
-
-  /** Two-level skew-resistant aggregation: count per (key, salt) with
-    * map-side combine, then re-aggregate per key. A hot key's rows
-    * spread over `salts` reducers in round 1; round 2 handles only
-    * `salts` partial rows per key. Identical results to a direct
-    * groupBy-count (asserted in tests) — use when one key dominates
-    * the distribution.
-    */
-  def saltedCount(df: DataFrame, key: Column, salts: Int): DataFrame =
-    df.withColumn("__salt", pmod(spark_partition_id() + monotonically_increasing_id(), lit(salts)))
-      .groupBy(key.as("key"), col("__salt"))
-      .agg(count(lit(1)).as("c"))
-      .groupBy(col("key"))
-      .agg(sum(col("c")).as("n"))
 
   /** Pseudo-random row salt in [0, salts) — deterministic per physical
     * row within one evaluation (a pure function of partition id ×

@@ -73,6 +73,49 @@ class ConfigSpec extends SparkSpec {
       validYaml.replace("type: parquet", "type: mysql")))
   }
 
+  test("unknown fields raise at the root, in a side and in its db, naming the field") {
+    def msg(yaml: String) =
+      intercept[IllegalArgumentException](ConfigLoader.fromYaml(yaml)).getMessage
+    // a typo'd schema_check must not silently run the positional default
+    assert(msg(validYaml + "schema_chek: exact\n").contains("unknown field 'schema_chek'"))
+    assert(msg(validYaml.replace("  name: tgt", "  nmae: tgt"))
+      .contains("target: unknown field 'nmae'"))
+    assert(msg(validYaml.replaceFirst("    path:", "    pth:"))
+      .contains("source.db: unknown field 'pth'"))
+    // postgres fixes its driver: a `driver` field would be ignored
+    assert(msg("""source:
+                 |  db: {type: postgres, host: h, port: 1, dbname: d, driver: x.Y, qry: SELECT 1}
+                 |target:
+                 |  db: {type: sql, qry: SELECT 1}
+                 |""".stripMargin).contains("source.db: unknown field 'driver'"))
+    assert(msg("""source:
+                 |  db: {type: sql, qry: SELECT 1, path: /x}
+                 |target:
+                 |  db: {type: sql, qry: SELECT 1}
+                 |""".stripMargin).contains("source.db: unknown field 'path'"))
+    // pipeline sides share the side decoder, so they get the same check
+    val p = intercept[IllegalArgumentException](PipelineLoader.fromYaml(
+      s"""pipeline:
+         |  input:
+         |    db: {type: parquet, path: $Sf0001/documents.parquet, qyr: SELECT 1}
+         |  steps:
+         |    - kind: filter_stack
+         |""".stripMargin)).getMessage
+    assert(p.contains("pipeline.input.db: unknown field 'qyr'"), p)
+  }
+
+  test("every compare example yaml in examples/ decodes to a valid spec") {
+    import scala.jdk.CollectionConverters._
+    val yamls = Files.list(java.nio.file.Paths.get("examples")).iterator().asScala
+      .map(_.toString).filter(p => p.contains("compare_") && p.endsWith(".yaml"))
+      .toSeq.sorted
+    assert(yamls.size == 4, yamls)
+    yamls.foreach { p =>
+      val spec = ConfigLoader.load(p)
+      assert(spec.source.name.nonEmpty && spec.target.name.nonEmpty, p)
+    }
+  }
+
   test("valid config decodes with defaults") {
     val spec = ConfigLoader.fromYaml(validYaml)
     assert(spec.source.name == "src")
@@ -148,6 +191,20 @@ class ConfigSpec extends SparkSpec {
     assert(status == 2, out)
     assert(!out.exists(_.startsWith("Datasets are")), out)
     assert(!spark.sparkContext.isStopped)
+  }
+
+  test("exit codes: a typo'd config field exits 2 with a Config error line") {
+    val err = new java.io.ByteArrayOutputStream()
+    val saved = System.err
+    System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
+    val (status, out) =
+      try cli(validYaml + "schema_chek: exact\n")
+      finally System.setErr(saved)
+    assert(status == 2, out)
+    assert(!out.exists(_.startsWith("Datasets are")), out)
+    val lines = err.toString("UTF-8").linesIterator.toSeq
+    assert(lines.exists(l => l.startsWith("Config error:") && l.contains("schema_chek")),
+      lines.mkString("\n"))
   }
 
   test("exit codes: a corrupt input file in pipeline mode exits 2, no OK line") {

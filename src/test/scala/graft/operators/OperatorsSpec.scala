@@ -209,41 +209,86 @@ class OperatorsSpec extends SparkSpec {
     assert(j.agg(min("jaccard")).head().getDouble(0) == 1.0)
   }
 
+  /** `nHot` docs sharing the 3-gram "hot0 hot1 hot2" (df = nHot; above
+    * 256 it takes the salted stratum) plus `nDup` exact-duplicate
+    * pairs, which score 1.0; hot-only pairs score 1/7.
+    */
+  private def hotCorpus(nHot: Int, nDup: Int): Seq[(Long, String)] =
+    (1L to nHot.toLong).map(i => (i, s"hot0 hot1 hot2 u${i}a u${i}b u${i}c")) ++
+      (1L to nDup.toLong).flatMap(i =>
+        Seq((2000L + i, s"dup$i w${i}a w${i}b w${i}c w${i}d"),
+            (3000L + i, s"dup$i w${i}a w${i}b w${i}c w${i}d")))
+
+  /** Exact shingle jaccard ≥ t over all doc pairs, computed on the
+    * driver — the reference the Spark joins must reproduce row for row.
+    */
+  private def exactJaccard(rows: Seq[(Long, String)], t: Double): Seq[(Long, Long, Double)] = {
+    val sets = rows.map { case (id, text) =>
+      id -> text.trim.split(" +").sliding(3).filter(_.length == 3).map(_.mkString(" ")).toSet
+    }
+    (for {
+      (a, sa) <- sets; (b, sb) <- sets if a < b
+      c = (sa & sb).size if c > 0
+      j = c.toDouble / (sa.size + sb.size - c) if j >= t
+    } yield (a, b, j)).sortBy(r => (r._1, r._2))
+  }
+
+  private def pairRows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Double)] =
+    df.orderBy("doc_a", "doc_b").collect().toSeq
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+
+  /** The initial physical plan's salt replicates, and its inner joins
+    * keyed on the shingle: (key count, is sort-merge) each. The cold
+    * stratum is the one keyed on the shingle alone; the salted join is
+    * keyed on (shingle, salt). The literal sequence(0, salts-1)
+    * constant-folds, so a salt replicate renders as
+    * `Generate explode(<array>)`, distinct from the shingle pass's
+    * `Generate posexplode`.
+    */
+  private def joinShape(df: org.apache.spark.sql.DataFrame): (Int, Seq[(Int, Boolean)]) = {
+    import org.apache.spark.sql.catalyst.plans.Inner
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.joins.{HashJoin, SortMergeJoinExec}
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p                        => p
+    }
+    val saltGenerates = "Generate explode\\(".r.findAllMatchIn(plan.toString).size
+    def onShingle(keys: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =
+      keys.exists(_.references.exists(_.name == "shingle"))
+    val joins = plan.collect {
+      case j: SortMergeJoinExec if j.joinType == Inner && onShingle(j.leftKeys) =>
+        (j.leftKeys.size, true)
+      case j: HashJoin if j.joinType == Inner && onShingle(j.leftKeys) =>
+        (j.leftKeys.size, false)
+    }
+    (saltGenerates, joins)
+  }
+
   test("salted jaccard is row-identical to the naive self-join on a hot-shingle corpus") {
     import spark.implicits._
-    // 1,000 docs all sharing ONE 3-gram ("hot0 hot1 hot2") — the naive
-    // self-join puts 1000²/2 candidate pairs in a single join group —
-    // plus 40 exact-duplicate pairs that must survive the threshold
-    val hot = (1L to 1000L).map(i => (i, s"hot0 hot1 hot2 u${i}a u${i}b u${i}c"))
-    val dups = (1L to 40L).flatMap(i =>
-      Seq((2000L + i, s"dup$i w${i}a w${i}b w${i}c w${i}d"),
-          (3000L + i, s"dup$i w${i}a w${i}b w${i}c w${i}d")))
-    val corpus = (hot ++ dups).toDF("doc_id", "text")
-    // threshold 0.2: hot-only pairs score 1/7 and drop out; dup pairs 1.0
-    // forced-plain baseline (autoSaltDocFreq=MaxValue disables the probe)
-    val naivePlan = Dedup.jaccardPairsPlan(corpus, 0.2, autoSaltDocFreq = Int.MaxValue)
-    assert(naivePlan.strategy == "plain")
-    val naive = naivePlan.df.orderBy("doc_a", "doc_b").collect().toSeq
-    val salted = Dedup.jaccardPairsSalted(corpus, 0.2, salts = 16)
-      .orderBy("doc_a", "doc_b").collect().toSeq
-    assert(naive.size == 40)
-    assert(salted == naive)
-
-    // the DEFAULT entry point detects the hot shingle (df=1000 >
-    // AutoSaltDocFreq) and picks the salted join on its own — same rows
-    val auto = Dedup.jaccardPairsPlan(corpus, 0.2)
-    assert(auto.strategy == "salted",
-      s"hot corpus must auto-switch to the salted join, got ${auto.strategy}")
-    assert(auto.df.orderBy("doc_a", "doc_b").collect().toSeq == naive)
-    // while a healthy corpus keeps the plain join
-    val healthy = Dedup.jaccardPairsPlan(docs.limit(100), 0.1)
-    assert(healthy.strategy == "plain")
-    Seq(naivePlan, auto, healthy).foreach(_.release())
+    // 1,000 docs all sharing ONE 3-gram — a plain self-join puts
+    // 1000²/2 candidate pairs in a single join group — plus 40
+    // exact-duplicate pairs that must survive the threshold
+    val rows = hotCorpus(1000, 40)
+    val expected = exactJaccard(rows, 0.2)
+    assert(expected.size == 40)
+    val plan = Dedup.jaccardPairsPlan(rows.toDF("doc_id", "text"), 0.2)
+    assert(pairRows(plan.df) == expected)
+    plan.release()
+    // the test corpus (empty hot stratum) matches the reference too
+    val healthyRows = docs.collect().toSeq
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("text")))
+    val healthyExpected = exactJaccard(healthyRows, 0.1)
+    assert(healthyExpected.nonEmpty)
+    val healthy = Dedup.jaccardPairsPlan(docs, 0.1)
+    assert(pairRows(healthy.df) == healthyExpected)
+    healthy.release()
     // the structural bound the salted join relies on: with the same
     // salt expression, the hot shingle's largest (shingle, salt) group
     // is a fraction of its document frequency
-    val maxGroup = Dedup.shingleDf(corpus)
-      .withColumn("__salt", Skew.rowSalt(16))
+    val maxGroup = Dedup.shingleDf(rows.toDF("doc_id", "text"))
+      .withColumn("__salt", Skew.rowSalt(8))
       .groupBy("shingle", "__salt").count()
       .agg(max("count")).head().getLong(0)
     assert(maxGroup < 300, s"hot shingle not spread: max group $maxGroup of 1000")
@@ -251,30 +296,34 @@ class OperatorsSpec extends SparkSpec {
 
   test("two-path salted jaccard replicates only the hot stratum") {
     import spark.implicits._
-    val hot = (1L to 100L).map(i => (i, s"hot0 hot1 hot2 u${i}a u${i}b u${i}c"))
-    val dups = (1L to 10L).flatMap(i =>
-      Seq((2000L + i, s"dup$i w${i}a w${i}b w${i}c w${i}d"),
-          (3000L + i, s"dup$i w${i}a w${i}b w${i}c w${i}d")))
-    val corpus = (hot ++ dups).toDF("doc_id", "text")
-    val plan = Dedup.jaccardPairsPlan(corpus, 0.2,
-      autoSaltDocFreq = 0, saltHotDocFreq = 8)
-    assert(plan.strategy == "salted")
-    val s = plan.df.queryExecution.executedPlan.toString
+    val rows = hotCorpus(300, 10)
+    val plan = Dedup.jaccardPairsPlan(rows.toDF("doc_id", "text"), 0.2)
+    val (saltGenerates, joins) = joinShape(plan.df)
     // exactly ONE salt-replicate Generate — the hot stratum's; the cold
-    // stratum must carry no salt-array replication. (The literal
-    // sequence(0, salts-1) constant-folds, so it renders as
-    // `Generate explode(<array>)` — distinct from the shingle pass's
-    // `Generate posexplode`.)
-    val saltGenerates = "Generate explode\\(".r.findAllMatchIn(s).size
-    assert(saltGenerates == 1,
-      s"expected 1 salt replicate (hot side only), got $saltGenerates:\n${s.take(1200)}")
-    // and the cold stratum still joins pinned sort-merge
-    assert(s.contains("SortMergeJoin"), s.take(800))
-    // row-identical to the forced-plain baseline
-    val plain = Dedup.jaccardPairsPlan(corpus, 0.2, autoSaltDocFreq = Int.MaxValue)
-    assert(plan.df.orderBy("doc_a", "doc_b").collect().toSeq ==
-      plain.df.orderBy("doc_a", "doc_b").collect().toSeq)
-    plan.release(); plain.release()
+    // stratum must carry no salt-array replication
+    assert(saltGenerates == 1, s"expected 1 salt replicate (hot side only), got $saltGenerates")
+    assert(joins.contains((1, true)), s"the cold stratum must join pinned sort-merge: $joins")
+    assert(pairRows(plan.df) == exactJaccard(rows, 0.2))
+    plan.release()
+  }
+
+  test("no Spark job runs while jaccardPairsPlan is being built") {
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val corpus = hotCorpus(300, 10).toDF("doc_id", "text")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    spark.sparkContext.addSparkListener(l)
+    val plan =
+      try {
+        val p = Dedup.jaccardPairsPlan(corpus, 0.2)
+        org.apache.spark.graftshim.TestListenerBridge.waitUntilEmpty(spark.sparkContext)
+        p
+      } finally spark.sparkContext.removeSparkListener(l)
+    assert(jobs.get() == 0, s"${jobs.get()} jobs ran at plan construction")
+    plan.release()
   }
 
   test("lshVerifiedPairs rejects threshold 0 (inner verify join cannot emit jaccard-0 pairs)") {
@@ -284,6 +333,8 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("dedup plans release their caches: no retained RDDs accumulate across invocations") {
+    import spark.implicits._
+    val hot = hotCorpus(300, 10).toDF("doc_id", "text")
     val before = spark.sparkContext.getPersistentRDDs.keySet
     (1 to 3).foreach { _ =>
       val j = Dedup.jaccardPairsPlan(docs.limit(50), 0.1)
@@ -292,11 +343,14 @@ class OperatorsSpec extends SparkSpec {
       s.df.count()
       val v = Dedup.lshVerifiedPairsPlan(docs.limit(50), 0.1)
       v.df.count()
-      // forced two-path salted: retains the hot-key table as well
-      val t = Dedup.jaccardPairsPlan(docs.limit(50), 0.1,
-        autoSaltDocFreq = 0, saltHotDocFreq = 2)
+      // a non-empty hot stratum
+      val t = Dedup.jaccardPairsPlan(hot, 0.2)
       t.df.count()
-      j.release(); s.release(); v.release(); t.release()
+      val e = Dedup.evaluateMinhashPlan(docs.limit(50), 0.1)
+      e.df.count()
+      val m = Dedup.minhashEstimatePlan(docs.limit(50))
+      m.df.count()
+      Seq(j, s, v, t, e, m).foreach(_.release())
     }
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(leaked.isEmpty,
@@ -1111,12 +1165,15 @@ class OperatorsSpec extends SparkSpec {
     // tiny pre-explode parquet scan, so without the pin the planner
     // broadcasts the multi-million-row self-join side (measured
     // 20-250 s single-threaded hashed-relation builds at sf0.1)
-    val salted = Dedup.jaccardPairsSalted(docs, 0.8)
-      .queryExecution.executedPlan.toString
-    assert(salted.contains("SortMergeJoin"), salted.take(800))
-    val plain = Dedup.jaccardPairsPlan(docs, 0.8, autoSaltDocFreq = Int.MaxValue).df
-      .queryExecution.executedPlan.toString
-    assert(plain.contains("SortMergeJoin"), plain.take(800))
+    import spark.implicits._
+    Seq(docs, hotCorpus(300, 10).toDF("doc_id", "text")).foreach { d =>
+      val plan = Dedup.jaccardPairsPlan(d, 0.8)
+      // both strata: the cold merge join and the salted (shingle, salt)
+      // join, and no hash join on the shingle anywhere
+      assert(joinShape(plan.df)._2.sorted == Seq((1, true), (2, true)),
+        plan.df.queryExecution.executedPlan.toString.take(1500))
+      plan.release()
+    }
   }
 
   test("cluster-balanced sample: min(perCluster, size) per cluster, subset, deterministic") {

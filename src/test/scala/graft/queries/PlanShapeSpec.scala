@@ -171,14 +171,37 @@ class PlanShapeSpec extends SparkSpec {
     assert(plan.contains("Partial"), plan)
   }
 
+  /** Inner sort-merge joins keyed on the shingle alone — the exact
+    * jaccard join's cold stratum (its salted stratum is keyed on
+    * (shingle, salt)).
+    */
+  private def coldMergeJoins(df: DataFrame) = {
+    import org.apache.spark.sql.catalyst.plans.Inner
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    initialPlan(df).collect {
+      case j: SortMergeJoinExec if j.joinType == Inner && j.leftKeys.size == 1 &&
+        j.leftKeys.head.references.exists(_.name == "shingle") => j
+    }
+  }
+
   test("two-path salted jaccard: exactly one salt replicate, cold stratum merge-joined") {
-    val docs = GraftSession.table(spark, Sf0001, "documents")
-    val plan = graft.operators.Dedup.jaccardPairsPlan(docs, 0.1,
-      autoSaltDocFreq = 0, saltHotDocFreq = 8)
+    import spark.implicits._
+    // 300 docs share one 3-gram: df 300 is above the 256 hot cut
+    val docs = ((1L to 300L).map(i => (i, s"hot0 hot1 hot2 u${i}a u${i}b")) ++
+      Seq((1001L, "dup w1 w2 w3"), (1002L, "dup w1 w2 w3"))).toDF("doc_id", "text")
+    val plan = graft.operators.Dedup.jaccardPairsPlan(docs, 0.1)
     val s = planString(plan.df)
     val saltGenerates = "Generate explode\\(".r.findAllMatchIn(s).size
     assert(saltGenerates == 1, s"cold stratum must not replicate: $saltGenerates salt Generates")
-    assert(s.contains("SortMergeJoin"), s.take(800))
+    assert(coldMergeJoins(plan.df).size == 1, s.take(1500))
+    assert(plan.df.where($"doc_a" === 1001L && $"doc_b" === 1002L).count() == 1)
+    plan.release()
+  }
+
+  test("eval truth is the merge-pinned exact jaccard join, not an unhinted self-join") {
+    val plan = graft.operators.Dedup.evaluateMinhashPlan(
+      GraftSession.table(spark, Sf0001, "documents"), 0.1)
+    assert(coldMergeJoins(plan.df).size == 1, planString(plan.df).take(1500))
     plan.release()
   }
 

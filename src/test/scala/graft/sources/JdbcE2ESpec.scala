@@ -114,7 +114,7 @@ class JdbcE2ESpec extends SparkSpec {
          |    lower_bound: 1
          |    upper_bound: $Rows
          |target:
-         |  db: { type: jdbc, url: "${url("tgtdb")}", driver: $Driver, qry: SELECT a, b FROM t_test }
+         |  db: { type: jdbc, url: "${url("tgtdb")}", driver: $Driver, qry: "SELECT a, b FROM t_test" }
          |""".stripMargin)
     spec.source.source match {
       case j: graft.config.SourceSpec.Jdbc =>
