@@ -347,8 +347,7 @@ object Pipeline {
       // vocabulary, k rows) — bound the collect so a table: source
       // pointed at a corpus-sized frame is a loud config error, not a
       // driver OOM. limit(cap+1) keeps the fetch driver-bounded by
-      // construction whatever the source size (the bpeEncode-cap
-      // pattern, TextAnalysis.BpeEncodeMaxMerges).
+      // construction whatever the source size.
       val rows = Sources.resolve(spark, tableSide)
         .orderBy(col("rank"))
         .select(col("left_tok"), col("right_tok"))

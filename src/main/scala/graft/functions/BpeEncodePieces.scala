@@ -50,13 +50,14 @@ final case class BpeMergeTable(pairs: Seq[(String, String)])
 /** Native BPE encode: `bpe_encode_pieces(text)` with a plan-time merge
   * table → `array<string>` of the encoded pieces.
   *
-  * This is the production-vocabulary path [[graft.operators.TextAnalysis.bpeEncode]]'s
-  * 256-merge cap points at: the literal replace chain compiles the
-  * merge table INTO the plan (one nested `replace` per merge —
-  * Catalyst's recursive tree walks stack-overflow near ~512), while
-  * this expression carries the table as ONE reference object and
-  * applies it in a per-row kernel, so a 30k-merge tokenizer ships as
-  * a single task-closure broadcast and the plan stays depth-1.
+  * This is the kernel behind
+  * [[graft.operators.TextAnalysis.bpeEncodeNative]]. A literal replace
+  * chain compiles the merge table INTO the plan (one nested `replace`
+  * per merge — Catalyst's recursive tree walks stack-overflow near
+  * ~512), while this expression carries the table as ONE reference
+  * object and applies it in a per-row kernel, so a 30k-merge
+  * tokenizer ships as a single task-closure broadcast and the plan
+  * stays depth-1.
   *
   * Semantics are EXACTLY the replace chain's (and the DuckDB
   * oracle's): merges apply as sequential passes in rank order, each

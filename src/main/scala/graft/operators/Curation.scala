@@ -72,10 +72,10 @@ object Curation {
     * measure generalization and not memorized test items.
     *
     * Overlap unit: the same word 3-gram shingles the dedup family uses
-    * (`Dedup.shingleDf`) — one shared tokenization means one shared
-    * meaning of "overlap" across the whole engine. Returns one row per
-    * CONTAMINATED candidate doc: (doc_id, bench_hits) where bench_hits
-    * counts the distinct benchmark shingles the doc contains.
+    * (`Dedup.shingleDf`) — one shared tokenization (`Tokens`) means
+    * one shared meaning of "overlap" across the whole engine. Returns
+    * one row per CONTAMINATED candidate doc: (doc_id, bench_hits) where
+    * bench_hits counts the distinct benchmark shingles the doc contains.
     *
     * Scale shape: benchmark sets are small (thousands of items) while
     * the corpus is the 100 TB side — so the benchmark shingle set is
@@ -138,14 +138,8 @@ object Curation {
     */
   def decontaminateRewrite(candidates: DataFrame, bench: DataFrame): DataFrame = {
     val k = 3
-    val ts = split(trim(col("text")), " +")
-    val cand = candidates
-      .select(col("doc_id"), ts.as("ts"))
-      .where(size(col("ts")) >= k)
-      .select(col("doc_id"),
-        posexplode(transform(sequence(lit(0), size(col("ts")) - k),
-          i => concat_ws(" ", slice(col("ts"), i + 1, lit(k)))))
-          .as(Seq("pos", "shingle")))
+    val ts = Tokens.of(col("text"))
+    val cand = Tokens.grams(candidates, k).withColumnRenamed("gram", "shingle")
     // doc grain: ANY benchmark item — one row per matched position
     // (cand is unique per (doc, pos); the bench side is distinct)
     val benchSh = Dedup.shingleDf(bench).select(col("shingle")).distinct()
@@ -223,14 +217,7 @@ object Curation {
     minSharedShingles.foreach(f => require(f >= 0,
       s"decontaminateSpansPruned: minSharedShingles must be >= 0, got $f"))
     val k = 3
-    val ts = split(trim(col("text")), " +")
-    val cand = candidates
-      .select(col("doc_id"), ts.as("ts"))
-      .where(size(col("ts")) >= k)
-      .select(col("doc_id"),
-        posexplode(transform(sequence(lit(0), size(col("ts")) - k),
-          i => concat_ws(" ", slice(col("ts"), i + 1, lit(k)))))
-          .as(Seq("pos", "shingle")))
+    val cand = Tokens.grams(candidates, k).withColumnRenamed("gram", "shingle")
     val benchSh0 = Dedup.shingleDf(bench)
       .select(col("doc_id").as("bench_doc"), col("shingle"))
     // the bench shingle set is the only frame two consumers read (the

@@ -48,9 +48,15 @@ final case class DedupPlan(
 
 object Dedup {
 
-  /** Word 3-gram shingles, distinct per doc. */
+  /** Word 3-gram shingles, distinct per doc ([[Tokens.of]]'s tokens).
+    * This table keeps its own `posexplode` over the tokens instead of
+    * exploding [[Tokens.windows]]: the shingle text is built after the
+    * explode, in whole-stage-generated code, and a prototype of both
+    * forms measured the array-window one at 1.08 s against 0.76 s for
+    * this one (sf0.1, `local[4]`, median of 7 alternating pairs).
+    */
   private[operators] def shingleDf(docs: DataFrame): DataFrame = {
-    val withToks = docs.select(col("doc_id"), split(trim(col("text")), " +").as("ts"))
+    val withToks = docs.select(col("doc_id"), Tokens.of(col("text")).as("ts"))
     withToks
       .select(col("doc_id"), col("ts"), posexplode(col("ts")).as(Seq("i", "t0")))
       .where(size(col("ts")) >= col("i") + 3)
@@ -102,13 +108,9 @@ object Dedup {
     * Output: the input columns plus h0..h7.
     */
   def minhashSignaturesNarrow(docs: DataFrame): DataFrame = {
-    val ts = split(trim(col("text")), " +")
-    // 1-based window start j: tokens j, j+1, j+2 — the same 3-gram set
-    // shingleDf produces (guard: sequence(1, 0) would count DOWN)
-    val shingleArr = when(size(ts) >= 3,
-      transform(sequence(lit(1), size(ts) - 2), j =>
-        concat_ws(" ", element_at(ts, j), element_at(ts, j + 1), element_at(ts, j + 2))))
-    val withSh = docs.withColumn("__sh", shingleArr)
+    val ts = Tokens.of(col("text"))
+    // the same 3-gram set shingleDf produces; a shorter doc has none
+    val withSh = docs.withColumn("__sh", when(size(ts) >= 3, Tokens.windows(ts, 3, 1)))
     val hs = (0 until NumHashes).map { i =>
       array_min(transform(col("__sh"),
         s => md5(concat_ws("|", lit(i), s)))).as(s"h$i")
@@ -301,33 +303,48 @@ object Dedup {
 
   private val Hex = "0123456789abcdef"
 
-  /** 16-bit SimHash over distinct word tokens. Bit j of the token's
-    * md5-derived 16-bit value votes ±1; sign of the vote sum sets the
-    * fingerprint bit. All 16 vote sums aggregate in ONE map-side-
+  /** SimHash over distinct word tokens at a caller-sized width: the
+    * token's value is the first `bits/4` md5 hex digits (bits ≡ 0
+    * mod 4, 16..60 — ≤ 60 keeps the fingerprint below the sign bit in
+    * BOTH engines, so no sign-extension special cases anywhere). Bit
+    * j of the value votes ±1; the sign of the vote sum sets the
+    * fingerprint bit. All vote sums aggregate in ONE map-side-
     * combinable groupBy (no row explosion, no second shuffle — a
     * 16×-rows crossJoin formulation measured 6× slower).
     */
-  def simhash(docs: DataFrame): DataFrame = {
-    val toks = docs
-      .select(col("doc_id"), explode(split(trim(col("text")), " +")).as("tok"))
-      .distinct()
-    // 16-bit value from the first 4 hex chars of md5(tok)
-    val h16 =
-      (instr(lit(Hex), substring(md5(col("tok")), 1, 1)) - 1) * 4096 +
-      (instr(lit(Hex), substring(md5(col("tok")), 2, 1)) - 1) * 256 +
-      (instr(lit(Hex), substring(md5(col("tok")), 3, 1)) - 1) * 16 +
-      (instr(lit(Hex), substring(md5(col("tok")), 4, 1)) - 1)
-    val withBits = toks.withColumn("h16", h16.cast("long"))
-    val votes = (0 until 16).map { j =>
-      sum(when(shiftright(col("h16"), 15 - j) % 2 === 1, 1).otherwise(-1)).as(s"s$j")
-    }
-    val fingerprint = (0 until 16).map { j =>
-      when(col(s"s$j") > 0, lit(1L << (15 - j))).otherwise(0L)
+  def simhash(docs: DataFrame, bits: Int = 16): DataFrame = {
+    require(bits >= 16 && bits <= 60 && bits % 4 == 0,
+      s"bits must be a multiple of 4 in [16, 60], got $bits")
+    simhashVote(distinctTokens(docs), bits, lit(1), "simhash")
+  }
+
+  /** Distinct (doc_id, tok) rows: the SimHash feature set. */
+  private def distinctTokens(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), explode(Tokens.of(col("text"))).as("tok")).distinct()
+
+  /** The SimHash vote over distinct (doc_id, tok) rows, shared by
+    * [[simhash]] and [[simhashIdfPlan]]: bit j of the token's
+    * `bits`-wide md5 value votes +`weight` or −`weight`, and a positive
+    * per-doc vote sum sets fingerprint bit j. Output (doc_id, `out`).
+    */
+  private def simhashVote(toks: DataFrame, bits: Int, weight: Column,
+      out: String): DataFrame = {
+    val nd = bits / 4
+    val h = (0 until nd).map { d =>
+      (instr(lit(Hex), substring(md5(col("tok")), d + 1, 1)) - 1).cast("long") *
+        lit(1L << (4 * (nd - 1 - d)))
     }.reduce(_ + _)
-    withBits
+    val votes = (0 until bits).map { j =>
+      sum(when(shiftright(col("h"), bits - 1 - j) % 2 === 1, weight)
+        .otherwise(-weight)).as(s"s$j")
+    }
+    val fingerprint = (0 until bits).map { j =>
+      when(col(s"s$j") > 0, lit(1L << (bits - 1 - j))).otherwise(0L)
+    }.reduce(_ + _)
+    toks.withColumn("h", h)
       .groupBy(col("doc_id"))
       .agg(votes.head, votes.tail: _*)
-      .select(col("doc_id"), fingerprint.as("simhash"))
+      .select(col("doc_id"), fingerprint.as(out))
   }
 
   /** SimHash near-dup pairs: hamming distance ≤ maxHamming.
@@ -375,38 +392,7 @@ object Dedup {
     DedupPlan(pairs, "banded", Seq(sh))
   }
 
-  /** [[simhash]] at a CALLER-SIZED width: the token's value is the
-    * first `bits/4` md5 hex digits (bits ≡ 0 mod 4, 16..60 — ≤ 60
-    * keeps the fingerprint below the sign bit in BOTH engines, so no
-    * sign-extension special cases anywhere). Width 16 reproduces
-    * [[simhash]] bit-for-bit.
-    */
-  def simhashBits(docs: DataFrame, bits: Int): DataFrame = {
-    require(bits >= 16 && bits <= 60 && bits % 4 == 0,
-      s"bits must be a multiple of 4 in [16, 60], got $bits")
-    val nd = bits / 4
-    val toks = docs
-      .select(col("doc_id"), explode(split(trim(col("text")), " +")).as("tok"))
-      .distinct()
-    val h = (0 until nd).map { d =>
-      (instr(lit(Hex), substring(md5(col("tok")), d + 1, 1)) - 1).cast("long") *
-        lit(1L << (4 * (nd - 1 - d)))
-    }.reduce(_ + _)
-    val withBits = toks.withColumn("h", h)
-    val votes = (0 until bits).map { j =>
-      sum(when(shiftright(col("h"), bits - 1 - j) % 2 === 1, 1).otherwise(-1))
-        .as(s"s$j")
-    }
-    val fingerprint = (0 until bits).map { j =>
-      when(col(s"s$j") > 0, lit(1L << (bits - 1 - j))).otherwise(0L)
-    }.reduce(_ + _)
-    withBits
-      .groupBy(col("doc_id"))
-      .agg(votes.head, votes.tail: _*)
-      .select(col("doc_id"), fingerprint.as("simhash"))
-  }
-
-  /** Smallest legal [[simhashBits]] width whose per-band bucket
+  /** Smallest legal [[simhash]] width whose per-band bucket
     * occupancy stays at `occupancy` — the [[Similarity.autoBits]] rule
     * transplanted to hamming banding. The knob is the TOTAL width, not
     * the band width: pigeonhole exactness pins the band count at
@@ -445,7 +431,7 @@ object Dedup {
       "maxHamming must be in [0, 15] (the narrowest legal width)")
     val bits = simhashAutoBits(docs.count(), maxHamming)
     require(maxHamming < bits, s"maxHamming must be < $bits")
-    val sh = simhashBits(docs, bits)
+    val sh = simhash(docs, bits)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     val pairs = bandedFingerprintPairs(
       sh.select(col("doc_id"), col("simhash").as("fp")), bits, maxHamming)
@@ -476,36 +462,18 @@ object Dedup {
     * release contract (it feeds df and the vote join), df at the
     * TOKEN grain with map-side combine, one token-keyed shuffle join
     * back (the df table is never broadcast — vocabulary unbounded),
-    * then the same single map-side-combinable 16-vote groupBy as
-    * [[simhash]]. Pairing reuses `bandedFingerprintPairs`.
+    * then [[simhash]]'s own 16-bit vote, one map-side-combinable
+    * groupBy. Pairing reuses `bandedFingerprintPairs`.
     */
   def simhashIdfPlan(docs: DataFrame): DedupPlan = {
-    val toksD = docs
-      .select(col("doc_id"), explode(split(trim(col("text")), " +")).as("tok"))
-      .distinct()
+    val toksD = distinctTokens(docs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     val dfreq = toksD.groupBy(col("tok")).agg(count(lit(1)).as("df"))
     val nDocs = docs.agg(count(lit(1)).as("n_docs"))
-    val h16 =
-      (instr(lit(Hex), substring(md5(col("tok")), 1, 1)) - 1) * 4096 +
-      (instr(lit(Hex), substring(md5(col("tok")), 2, 1)) - 1) * 256 +
-      (instr(lit(Hex), substring(md5(col("tok")), 3, 1)) - 1) * 16 +
-      (instr(lit(Hex), substring(md5(col("tok")), 4, 1)) - 1)
     val weighted = toksD.join(dfreq, Seq("tok"))
       .crossJoin(broadcast(nDocs))
       .withColumn("w", expr("(n_docs * 1000000) DIV df"))
-      .withColumn("h16", h16.cast("long"))
-    val votes = (0 until 16).map { j =>
-      sum(when(shiftright(col("h16"), 15 - j) % 2 === 1, col("w"))
-        .otherwise(-col("w")).cast("decimal(38,0)")).as(s"s$j")
-    }
-    val fingerprint = (0 until 16).map { j =>
-      when(col(s"s$j") > 0, lit(1L << (15 - j))).otherwise(0L)
-    }.reduce(_ + _)
-    val out = weighted
-      .groupBy(col("doc_id"))
-      .agg(votes.head, votes.tail: _*)
-      .select(col("doc_id"), fingerprint.as("simhash_idf"))
+    val out = simhashVote(weighted, 16, col("w").cast("decimal(38,0)"), "simhash_idf")
     DedupPlan(out, "simhash_idf", Seq(toksD))
   }
 
@@ -617,6 +585,15 @@ object Dedup {
   def embeddingPairsLsh(emb: DataFrame, threshold: Double): DataFrame =
     scoredBucketPairs(Similarity.lshBuckets(normed(emb)), threshold)
 
+  /** The attach-strategy rule for [[embeddingPairsLshAuto]], named so
+    * it is unit-testable on its own: the vector payload table is
+    * n × (8·dim + 24) bytes (8 B per quantized component + row
+    * overhead), and only a table inside `budget` may be broadcast.
+    */
+  private[operators] def attachBroadcastable(n: Long, dim: Long,
+      budget: Long = 128L << 20): Boolean =
+    n * (8L * dim + 24L) <= budget
+
   /** [[embeddingPairsLsh]] with the bucket GRAIN auto-sized from the
     * corpus count — the 100 TB form. The fixed-4-bit gate form keeps
     * Σ n_b² ≈ n²/16 candidates per table (structurally quadratic — the
@@ -661,15 +638,6 @@ object Dedup {
     * (1−θ/π)^bits — use NEAR-DUP thresholds (cos ≥ ~0.9) at scale;
     * exact duplicates collide at any width (spec-asserted).
     */
-  /** The attach-strategy rule for [[embeddingPairsLshAuto]], named so
-    * it is unit-testable on its own: the vector payload table is
-    * n × (8·dim + 24) bytes (8 B per quantized component + row
-    * overhead), and only a table inside `budget` may be broadcast.
-    */
-  private[operators] def attachBroadcastable(n: Long, dim: Long,
-      budget: Long = 128L << 20): Boolean =
-    n * (8L * dim + 24L) <= budget
-
   def embeddingPairsLshAuto(emb: DataFrame, threshold: Double,
       occupancy: Long = 64L, broadcastBudgetBytes: Long = 128L << 20): DataFrame = {
     require(occupancy > 0, "occupancy must be positive")
@@ -1078,11 +1046,8 @@ object Dedup {
     * one division — cross-engine deterministic.
     */
   def spanDedup(docs: DataFrame, blockTokens: Int = 20): DataFrame = {
-    val ts = split(trim(col("text")), " +")
-    val nBlocks = ceil(size(ts).cast("double") / blockTokens).cast("int")
     val blocks = docs.select(col("doc_id"),
-      posexplode(transform(sequence(lit(0), greatest(nBlocks, lit(1)) - 1),
-        i => md5(concat_ws(" ", slice(ts, i * blockTokens + 1, lit(blockTokens))))))
+      posexplode(Tokens.windows(Tokens.of(col("text")), blockTokens, blockTokens, md5))
         .as(Seq("block_idx", "block_hash")))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("block_hash")).orderBy(col("doc_id"), col("block_idx"))
@@ -1151,11 +1116,8 @@ object Dedup {
     * relies on collect_list arrival order).
     */
   def spanDedupRewrite(docs: DataFrame, blockTokens: Int = 20): DataFrame = {
-    val ts = split(trim(col("text")), " +")
-    val nBlocks = ceil(size(ts).cast("double") / blockTokens).cast("int")
     val blocks = docs.select(col("doc_id"),
-      posexplode(transform(sequence(lit(0), greatest(nBlocks, lit(1)) - 1),
-        i => concat_ws(" ", slice(ts, i * blockTokens + 1, lit(blockTokens)))))
+      posexplode(Tokens.windows(Tokens.of(col("text")), blockTokens, blockTokens))
         .as(Seq("block_idx", "block")))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(md5(col("block"))).orderBy(col("doc_id"), col("block_idx"))
@@ -1249,14 +1211,8 @@ object Dedup {
       cacheGrams: Boolean): DedupPlan = {
     import org.apache.spark.storage.StorageLevel
     require(gramTokens >= 2, s"spanDedupSliding: gramTokens must be >= 2, got $gramTokens")
-    val ts = split(trim(col("text")), " +")
-    val gramsBase = docs
-      .select(col("doc_id"), ts.as("ts"))
-      .where(size(col("ts")) >= gramTokens)
-      .select(col("doc_id"),
-        posexplode(transform(sequence(lit(0), size(col("ts")) - gramTokens),
-          i => md5(concat_ws(" ", slice(col("ts"), i + 1, lit(gramTokens))))))
-          .as(Seq("pos", "gram_hash")))
+    val ts = Tokens.of(col("text"))
+    val gramsBase = Tokens.grams(docs, gramTokens, md5)
     val grams =
       if (cacheGrams) gramsBase.persist(StorageLevel.MEMORY_AND_DISK_SER)
       else gramsBase
@@ -1264,9 +1220,9 @@ object Dedup {
     // a map-side-combinable aggregate, never a per-gram-hash window
     // (a row_number form ships a hot gram's every occurrence to ONE
     // reducer — the one skew funnel this family otherwise bans)
-    val first = grams.groupBy(col("gram_hash"))
+    val first = grams.groupBy(col("gram"))
       .agg(min(struct(col("doc_id"), col("pos"))).as("first"))
-    val flagged = grams.join(first, Seq("gram_hash"))
+    val flagged = grams.join(first, Seq("gram"))
       .select(col("doc_id"), col("pos"),
         (col("first.doc_id") =!= col("doc_id") ||
           col("first.pos") =!= col("pos")).as("dup"))
@@ -1528,6 +1484,16 @@ object Dedup {
 
   // ---------------------------------------------------------------- gate
 
+  /** The gate corpus with a planted hot shingle: `zq zq zq ` leads
+    * the text of docs 0..299, so the shingle `zq zq zq` has df 300,
+    * above [[HotDocFreq]]; no gate text contains `zq`. The
+    * `dd_jaccard_salted` oracle plants it the same way.
+    */
+  private def plantedHot(docs: DataFrame): DataFrame =
+    docs.withColumn("text",
+      when(col("doc_id") < 300, concat(lit("zq zq zq "), col("text")))
+        .otherwise(col("text")))
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Exact dedup: content-hash groups; keeper = min doc_id.
     "dd_exact" -> ((s, dir) =>
@@ -1555,11 +1521,12 @@ object Dedup {
     "dd_jaccard_prefiltered" -> ((s, dir) =>
       jaccardPairs(table(s, dir, "documents"), 0.1, Some(20)).orderBy("doc_a", "doc_b")),
 
-    // the same exact join as dd_jaccard, gated against the same SQL:
-    // its salted hot stratum is empty on the gate corpus, so this gate
-    // pins that the two-path union stays row-identical there
+    // the same exact join over a corpus with a planted hot shingle:
+    // `zq zq zq` leads the first 300 docs (df 300 > HotDocFreq at every
+    // scale factor), so the salted hot stratum runs under the oracle
     "dd_jaccard_salted" -> ((s, dir) =>
-      jaccardPairs(table(s, dir, "documents"), 0.1).orderBy("doc_a", "doc_b")),
+      jaccardPairs(plantedHot(table(s, dir, "documents")), 0.1)
+        .orderBy("doc_a", "doc_b")),
 
     "dd_simhash" -> ((s, dir) =>
       simhash(table(s, dir, "documents")).orderBy("doc_id")),
@@ -1904,9 +1871,12 @@ object Dedup {
          | JOIN cnt cb ON cb.doc_id = doc_b
          |WHERE CAST(c AS DOUBLE) / (ca.n + cb.n - c) >= 0.1
          |ORDER BY doc_a, doc_b""".stripMargin,
-    // salted join is result-identical to the naive self-join — same oracle
+    // the naive self-join over the same planted corpus as the gate
     "dd_jaccard_salted" ->
-      s"""WITH sh AS ($shingleSql),
+      s"""WITH planted AS (
+         | SELECT doc_id, CASE WHEN doc_id < 300 THEN 'zq zq zq ' || text
+         |  ELSE text END AS text FROM documents),
+         |sh AS (${shingleSql.replace("FROM documents", "FROM planted")}),
          |cnt AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
          |common AS (
          | SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS c

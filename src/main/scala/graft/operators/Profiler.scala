@@ -741,7 +741,7 @@ object Profiler {
       sum(col("n")).as("n_docs"))
     val body = docs.agg(
       sum(length(col("text"))).as("total_chars"),
-      sum(size(split(trim(col("text")), " +"))).as("total_tokens"),
+      sum(size(Tokens.of(col("text")))).as("total_tokens"),
       count_distinct(col("lang")).as("n_langs"),
       max(length(col("text"))).cast("long").as("max_doc_chars"))
     body.crossJoin(broadcast(top))

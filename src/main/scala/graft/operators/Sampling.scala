@@ -91,7 +91,7 @@ object Sampling {
     */
   def heavyHitters(docs: DataFrame, k: Int): DataFrame =
     docs
-      .select(explode(split(trim(col("text")), " +")).as("token"))
+      .select(explode(Tokens.of(col("text"))).as("token"))
       .groupBy(col("token"))
       .agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("token").asc)
@@ -108,7 +108,7 @@ object Sampling {
     */
   def tokenSketch(docs: DataFrame, eps: Double = 0.001, conf: Double = 0.99): Array[Byte] =
     docs
-      .select(explode(split(trim(col("text")), " +")).as("token"))
+      .select(explode(Tokens.of(col("text"))).as("token"))
       .agg(count_min_sketch(col("token"), lit(eps), lit(conf), lit(42)).as("sk"))
       .head().getAs[Array[Byte]](0)
 
@@ -553,16 +553,16 @@ object Sampling {
     // 2048-token training sequence got, across 8 hash shards
     "sa_pack" -> ((s, dir) =>
       packSequences(table(s, dir, "documents"), col("doc_id"),
-        size(split(trim(col("text")), " +")).cast("long"), 2048L, 8)
+        size(Tokens.of(col("text"))).cast("long"), 2048L, 8)
         .groupBy(col("shard"), col("bin"))
         .agg(count(lit(1)).as("n_docs"),
-          sum(size(split(trim(col("text")), " +")).cast("long")).as("n_tokens"))
+          sum(size(Tokens.of(col("text"))).cast("long")).as("n_tokens"))
         .orderBy("shard", "bin")),
 
     // the one-row packing-efficiency audit over the same layout
     "sa_pack_stats" -> ((s, dir) =>
       packStats(table(s, dir, "documents"), col("doc_id"),
-        size(split(trim(col("text")), " +")).cast("long"), 2048L, 8)),
+        size(Tokens.of(col("text"))).cast("long"), 2048L, 8)),
 
     // with-replacement upsampling to 2.5:1.5:1 over three sources —
     // exact copies per doc (incl. the hash-gated fractional copy)

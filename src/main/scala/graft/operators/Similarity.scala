@@ -484,7 +484,7 @@ object Similarity {
   def clusterTerms(emb: DataFrame, docs: DataFrame,
       k: Int, iters: Int, m: Int): DataFrame = {
     val assigned = kmeansFit(emb, k, iters)
-    val toks = split(trim(col("text")), " +")
+    val toks = Tokens.of(col("text"))
     val dterm = docs.select(col("doc_id"), explode(array_distinct(toks)).as("term"))
     val cdf = dterm.join(assigned.withColumnRenamed("vec_id", "doc_id"), Seq("doc_id"))
       .groupBy(col("cluster"), col("term")).agg(count(lit(1)).as("cdf"))

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   */
 object TextAnalysis {
 
-  private def toks = split(trim(col("text")), " +")
+  private def toks = Tokens.of(col("text"))
 
   /** Adjacent-token (w1, w2) structs from a `ts` token-array column —
     * produced INSIDE the scan (zip_with over two array slices, the
@@ -255,16 +255,11 @@ object TextAnalysis {
     * 1-of-k MinHash, cheap near-dup prefilter).
     */
   def fingerprints(docs: DataFrame): DataFrame = {
-    val ts = toks
-    val shingleHashes = transform(
-      sequence(lit(0), size(ts) - 3),
-      i => md5(concat_ws(" ",
-        element_at(ts, i + 1), element_at(ts, i + 2), element_at(ts, i + 3))))
+    // a doc shorter than 3 tokens is one window: its whole text
     docs.select(
       col("doc_id"),
-      md5(concat_ws(" ", ts)).as("norm_hash"),
-      when(size(ts) >= 3, array_min(shingleHashes)).otherwise(md5(concat_ws(" ", ts)))
-        .as("min_shingle_hash"))
+      md5(concat_ws(" ", toks)).as("norm_hash"),
+      array_min(Tokens.windows(toks, 3, 1, md5)).as("min_shingle_hash"))
   }
 
   /** Compression-ratio quality proxy (deflate, fixed level 6):
@@ -406,25 +401,20 @@ object TextAnalysis {
   /** Fixed-size token-window chunking with overlap — the
     * training-sequence prep step that turns documents into
     * `chunkSize`-token windows every `stride` tokens (trailing window
-    * kept iff it adds uncovered tokens; a short doc is one chunk).
-    * Pure per-row array work: sequence/filter/explode/slice are all
-    * codegen'd, the operator is shuffle-free and scales linearly with
-    * input splits — chunking 100 TB is exactly one pass. Chunk
-    * identity travels as an md5 of the joined window so downstream
-    * exact-dedup of chunks reuses `Dedup`-family exact dedup unchanged.
+    * kept iff it adds uncovered tokens; a short doc is one chunk — the
+    * `Tokens.starts` rule). Pure per-row array work:
+    * sequence/explode/slice are all codegen'd, the operator is
+    * shuffle-free and scales linearly with input splits — chunking
+    * 100 TB is exactly one pass. Chunk identity travels as an md5 of
+    * the joined window so downstream exact-dedup of chunks reuses
+    * `Dedup`-family exact dedup unchanged.
     */
   def chunk(docs: DataFrame, chunkSize: Int = 32, stride: Int = 24): DataFrame = {
     require(stride > 0 && chunkSize >= stride, "need chunkSize >= stride > 0")
-    val overlap = chunkSize - stride
     docs
       .select(col("doc_id"), toks.as("t"))
-      // Window starts: every multiple of stride below n, minus starts
-      // whose window would only re-cover the previous chunk's tail
-      // (start + overlap >= n). start 0 always survives.
       .select(col("doc_id"), col("t"),
-        explode(filter(
-          sequence(lit(0), greatest(size(col("t")) - 1, lit(0)), lit(stride)),
-          st => st === 0 || st + overlap < size(col("t")))).as("st"))
+        explode(Tokens.starts(col("t"), chunkSize, stride)).as("st"))
       .select(
         col("doc_id"),
         (col("st") / stride).cast("long").as("chunk_idx"),
@@ -541,23 +531,22 @@ object TextAnalysis {
       .limit(topK)
   }
 
-  /** The delimiter scheme shared by [[bpeTrain]] and [[bpeEncode]]: a
-    * document is one string with every token wrapped in `|…|`, so
-    * adjacent tokens meet at a DOUBLE bar (`|a||b|`). A merge of pair
-    * (x, y) is then a literal replace of `"|x||y|"` with `"|x␟y|"`
-    * (U+001F joins the merged token) — and because each occurrence
-    * owns its own closing/opening bars, left-to-right non-overlapping
-    * literal replacement (identical semantics in Spark's
-    * `StringReplace` and DuckDB/PG `replace`) is EXACTLY greedy BPE
-    * application: `|a||a||a||a|` → `|a␟a||a␟a|`, with no shared-
-    * boundary misses and no false prefix matches (`|a||ab|` never
-    * matches `|a||a|`).
+  /** The delimiter scheme shared by [[bpeTrain]] and [[bpeEncodeNative]]: a
+    * document is one string with every token wrapped in `|…|`, so adjacent
+    * tokens meet at a DOUBLE bar (`|a||b|`). A merge of pair (x, y) is then
+    * a literal replace of `"|x||y|"` with `"|x␟y|"` (U+001F joins the
+    * merged token) — and because each occurrence owns its own
+    * closing/opening bars, left-to-right non-overlapping literal
+    * replacement (identical semantics in Spark's `StringReplace` and
+    * DuckDB/PG `replace`) is EXACTLY greedy BPE application: `|a||a||a||a|`
+    * → `|a␟a||a␟a|`, with no shared-boundary misses and no false prefix
+    * matches (`|a||ab|` never matches `|a||a|`).
     */
   private val BpeUS = "\u001f"
 
   private def bpeRep(textCol: String): Column =
     concat(lit("|"),
-      array_join(split(trim(translate(col(textCol), "|" + BpeUS, "")), " +"), "||"),
+      array_join(Tokens.of(translate(col(textCol), "|" + BpeUS, "")), "||"),
       lit("|"))
 
   private def bpeTokens(rep: Column): Column =
@@ -594,10 +583,11 @@ object TextAnalysis {
     while (r <= merges && go) {
       // round r counts bigrams over the corpus with merges 1..r-1
       // applied ON THE FLY by the native pass kernel
-      // ([[graft.functions.BpeEncodePieces]] — bit-identical to the
-      // replace chain, property-tested): each round is one shuffle-free
-      // scan + a map-side-combinable pair count + a 1-row argmax,
-      // with NO per-round corpus rewrite, persist, or cache churn.
+      // ([[graft.functions.BpeEncodePieces]] — bit-identical to a
+      // literal replace chain, property-tested): each round is one
+      // shuffle-free scan + a map-side-combinable pair count + a
+      // 1-row argmax, with NO per-round corpus rewrite, persist, or
+      // cache churn.
       // The previous form persisted a fully rewritten corpus string
       // per round (k merges = k cached corpus copies + k wide string
       // replaces); the kernel applies the same merges per row in
@@ -624,47 +614,16 @@ object TextAnalysis {
   }
 
   /** Apply a learned merge table ([[bpeTrain]]'s output shape) to the
-    * corpus: the replaces chain in rank order inside ONE codegen'd
-    * projection — zero shuffles, zero joins; the merge table is
-    * driver-side by construction (k rows). Emits per-doc piece counts
-    * before and after — the compression-ratio report a tokenizer
-    * build is judged by.
-    *
-    * The chain depth is HARD-CAPPED at [[BpeEncodeMaxMerges]] (256)
-    * and fails loudly above it: 256 nested replaces still compile
-    * inside whole-stage codegen (measured under CODEGEN_ONLY +
-    * fallback=false), while ~512 overflows the driver stack in
-    * Catalyst's recursive tree walks before Janino is even reached —
-    * a silent depth would die with an opaque StackOverflowError at
-    * plan time. [[bpeTrain]] caps at 100 merges, so every table this
-    * library trains fits; production-size vocabularies (30k+ merges)
-    * use [[bpeEncodeNative]], the uncapped native-kernel twin.
-    */
-  val BpeEncodeMaxMerges = 256
-
-  def bpeEncode(docs: DataFrame, merges: Seq[(String, String)],
-      textCol: String = "text"): DataFrame = {
-    require(merges.size <= BpeEncodeMaxMerges,
-      s"bpeEncode: merge table has ${merges.size} rows, cap is " +
-        s"$BpeEncodeMaxMerges — a literal replace chain this deep overflows " +
-        "Catalyst's recursive plan walks; use bpeEncodeNative (the " +
-        "uncapped native-kernel twin) for production-size vocabularies")
-    val rep0 = bpeRep(textCol)
-    val repN = merges.foldLeft(rep0) { case (c, (l, r)) =>
-      replace(c, lit(s"|$l||$r|"), lit(s"|$l$BpeUS$r|"))
-    }
-    docs.select(col("doc_id"),
-      size(bpeTokens(rep0)).cast("long").as("n_tokens"),
-      size(bpeTokens(repN)).cast("long").as("n_pieces"))
-  }
-
-  /** Native-kernel twin of [[bpeEncode]]: same output shape and
-    * bit-identical counts, but the merge table rides as ONE plan
-    * reference object inside [[graft.functions.BpeEncodePieces]]
-    * instead of a nested replace chain — no [[BpeEncodeMaxMerges]]
-    * cap, production-size (30k+) vocabularies welcome; per-row cost
-    * is O(merges) hash skips + O(applied·pieces), and the expression
-    * stays inside whole-stage codegen.
+    * corpus: per-doc piece counts before and after, the
+    * compression-ratio report a tokenizer build is judged by. The
+    * merges apply in rank order, each one greedily left to right over
+    * the whole document — the literal `replace` of `"|x||y|"` the
+    * delimiter scheme above defines — but the table rides as ONE plan
+    * reference object inside [[graft.functions.BpeEncodePieces]], so
+    * production-size (30k+) vocabularies are welcome. Zero shuffles,
+    * zero joins; per-row cost is O(merges) hash skips +
+    * O(applied·pieces), and the expression stays inside whole-stage
+    * codegen.
     */
   def bpeEncodeNative(docs: DataFrame, merges: Seq[(String, String)],
       textCol: String = "text"): DataFrame =
@@ -688,7 +647,7 @@ object TextAnalysis {
 
   /** Classic (min-rank-first) BPE encode over an EXTERNALLY-trained
     * merge table — the tokenizer-interop path: an HF-style
-    * `merges.txt` assumes this loop, not [[bpeEncode]]'s rank-order
+    * `merges.txt` assumes this loop, not [[bpeEncodeNative]]'s rank-order
     * passes (which [[bpeTrain]]'s own tables replay; applying an
     * external table through the pass kernel silently mis-tokenizes
     * whenever a later merge re-enables an earlier one). Semantics and
@@ -746,7 +705,7 @@ object TextAnalysis {
   }
 
   /** Tokenizer coverage report — the vocab-quality metric a tokenizer
-    * build is judged by NEXT TO compression ([[bpeEncode]]'s ratio):
+    * build is judged by NEXT TO compression ([[bpeEncodeNative]]'s ratio):
     * per document, how many encoded pieces are MERGED tokens (the
     * learned vocabulary firing) vs untouched singletons. A corpus
     * slice whose merged_frac stays near zero is out-of-domain for the
@@ -1142,10 +1101,10 @@ object TextAnalysis {
         .orderBy("rank")),
     // apply the learned merges: per-doc piece counts before/after.
     "ta_bpe_encode" -> ((s, dir) =>
-      bpeEncode(table(s, dir, "documents"), trainedMerges(s, dir))
+      bpeEncodeNative(table(s, dir, "documents"), trainedMerges(s, dir))
         .orderBy("doc_id")),
-    // the native-kernel encoder on the same trained table — the
-    // uncapped production path, gated against the SAME DuckDB replay
+    // the same encoder and trained table under the kernel's own name,
+    // gated against the SAME DuckDB replay
     "ta_bpe_encode_native" -> ((s, dir) =>
       bpeEncodeNative(table(s, dir, "documents"), trainedMerges(s, dir))
         .orderBy("doc_id")),

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.GraftSession.table
+import graft.operators.Tokens
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -448,7 +449,7 @@ object Relational {
       table(s, dir, "documents")
         .where(col("doc_id") < 50)
         .select(col("doc_id"),
-          posexplode(split(trim(col("text")), " +")).as(Seq("pos", "word")))
+          posexplode(Tokens.of(col("text"))).as(Seq("pos", "word")))
         .where(col("pos") < 5)
         .select(col("doc_id"), col("pos").cast("long").as("pos"), col("word"))
         .orderBy("doc_id", "pos")),
@@ -458,7 +459,7 @@ object Relational {
     "q29_array_funcs" -> ((s, dir) =>
       table(s, dir, "documents")
         .where(col("doc_id") < 50)
-        .select(col("doc_id"), split(trim(col("text")), " +").as("ws"))
+        .select(col("doc_id"), Tokens.of(col("text")).as("ws"))
         .select(
           col("doc_id"),
           size(col("ws")).cast("long").as("n"),

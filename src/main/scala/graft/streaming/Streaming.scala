@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.canon.Canonicalizer
+import graft.operators.Tokens
 import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
@@ -149,11 +150,8 @@ object Streaming {
     */
   def spanDedupStream(docs: DataFrame, blockTokens: Int = 20,
       watermarkCol: String = "ts", delay: String = "2 hours"): DataFrame = {
-    val ts = split(trim(col("text")), " +")
-    val nBlocks = ceil(size(ts).cast("double") / blockTokens).cast("int")
     docs.select(col(watermarkCol), col("doc_id"),
-        posexplode(transform(sequence(lit(0), greatest(nBlocks, lit(1)) - 1),
-          i => md5(concat_ws(" ", slice(ts, i * blockTokens + 1, lit(blockTokens))))))
+        posexplode(Tokens.windows(Tokens.of(col("text")), blockTokens, blockTokens, md5))
           .as(Seq("block_idx", "block_hash")))
       .withWatermark(watermarkCol, delay)
       .dropDuplicatesWithinWatermark(Seq("block_hash"))
@@ -288,7 +286,7 @@ object Streaming {
       .withWatermark(watermarkCol, delay)
       .select(col(watermarkCol), col("doc_id"),
         // NOT "ts": that's the default watermark column's name
-        split(trim(col("text")), " +").as("tok_arr"))
+        Tokens.of(col("text")).as("tok_arr"))
       .select(col(watermarkCol), col("doc_id"),
         explode_outer(TextAnalysis.bigramStructs("tok_arr")).as("b"))
       .select(col(watermarkCol), col("doc_id"),
@@ -339,7 +337,7 @@ object Streaming {
     docs
       .withWatermark(watermarkCol, delay)
       .select(col(watermarkCol),
-        explode(split(trim(col("text")), " +")).as("token"))
+        explode(Tokens.of(col("text"))).as("token"))
       .groupBy(window(col(watermarkCol), windowDur).as("w"), col("token"))
       .agg(count(lit(1)).as("n"))
       .select(col("w.start").as("w_start"), col("token"), col("n"))

@@ -92,7 +92,7 @@ object ScaleData {
     // per-token copy tag: shingle/token spaces disjoint across copies,
     // isomorphic within a copy (see scaladoc)
     def tagTokens(c: org.apache.spark.sql.Column, i: Int) =
-      concat_ws(" ", transform(split(trim(c), " +"), t => concat(lit(s"c${i}_"), t)))
+      concat_ws(" ", transform(graft.operators.Tokens.of(c), t => concat(lit(s"c${i}_"), t)))
 
     replicate("region")((df, i) => if (i == 0) df else df.limit(0))
     replicate("nation")((df, i) => if (i == 0) df else df.limit(0))

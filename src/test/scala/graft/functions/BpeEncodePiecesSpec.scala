@@ -2,6 +2,7 @@ package graft.functions
 
 import graft.SparkSpec
 import graft.operators.TextAnalysis
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 class BpeEncodePiecesSpec extends SparkSpec {
@@ -9,6 +10,24 @@ class BpeEncodePiecesSpec extends SparkSpec {
   import spark.implicits._
 
   private val us = "\u001f"
+
+  /** The literal replace chain the kernel must reproduce: bar-wrapped
+    * tokens, one `replace` of `|l||r|` by `|l␟r|` per merge in rank
+    * order, (doc_id, n_tokens, n_pieces) per doc. Kept here as the
+    * kernel's reference, never as a production path.
+    */
+  private def chainEncode(docs: DataFrame, merges: Seq[(String, String)]): DataFrame = {
+    val rep0 = concat(lit("|"),
+      array_join(split(trim(translate(col("text"), "|" + us, "")), " +"), "||"),
+      lit("|"))
+    val repN = merges.foldLeft(rep0) { case (c, (l, r)) =>
+      replace(c, lit(s"|$l||$r|"), lit(s"|$l$us$r|"))
+    }
+    def pieces(rep: Column) = split(trim(rep, "|"), "\\|\\|")
+    docs.select(col("doc_id"),
+      size(pieces(rep0)).cast("long").as("n_tokens"),
+      size(pieces(repN)).cast("long").as("n_pieces"))
+  }
 
   test("kernel reproduces the replace chain on greedy runs, delimiters, chained merges") {
     val d = Seq(
@@ -23,7 +42,7 @@ class BpeEncodePiecesSpec extends SparkSpec {
     val merges = Seq(("a", "b"), (s"a${us}b", "c"), ("a", "a"), ("x", "y"))
     val native = TextAnalysis.bpeEncodeNative(d, merges).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val chain = TextAnalysis.bpeEncode(d, merges).collect()
+    val chain = chainEncode(d, merges).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(native == chain)
     assert(native(3L) == ((5L, 3L)))
@@ -49,7 +68,7 @@ class BpeEncodePiecesSpec extends SparkSpec {
       ("\u65e5\u672c", "\u8a9e"), ("\ud83d\ude00", "x"))
     val native = TextAnalysis.bpeEncodeNative(d, merges).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val chain = TextAnalysis.bpeEncode(d, merges).collect()
+    val chain = chainEncode(d, merges).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(native == chain)
     assert(native(1L) == ((6L, 4L))) // composed-token merge fires twice
@@ -65,7 +84,7 @@ class BpeEncodePiecesSpec extends SparkSpec {
     val d = Seq((1L, "a b c")).toDF("doc_id", "text")
     val merges = Seq((s"a${us}b", "c"), ("a", "b"))
     val native = TextAnalysis.bpeEncodeNative(d, merges).head()
-    val chain = TextAnalysis.bpeEncode(d, merges).head()
+    val chain = chainEncode(d, merges).head()
     assert(native.getLong(2) == 2L && chain.getLong(2) == 2L)
   }
 
@@ -87,8 +106,6 @@ class BpeEncodePiecesSpec extends SparkSpec {
       assert(out(0).getSeq[String](0) == Seq(s"w1${us}w2${us}w3", "tail"))
       assert(out(1).isNullAt(0))
     }
-    // far over the replace-chain cap, well within the kernel's reach
-    assert(5000 > TextAnalysis.BpeEncodeMaxMerges)
   }
 
   test("expressions with equal merge tables are value-equal (canonicalization works)") {
@@ -264,7 +281,7 @@ class BpeEncodePiecesSpec extends SparkSpec {
       .collect().map(r => (r.getString(1), r.getString(2))).toSeq
     val native = TextAnalysis.bpeEncodeNative(docs, m)
       .orderBy("doc_id").collect().map(_.toString)
-    val chain = TextAnalysis.bpeEncode(docs, m)
+    val chain = chainEncode(docs, m)
       .orderBy("doc_id").collect().map(_.toString)
     assert(native.length > 0 && native.sameElements(chain))
   }

@@ -47,7 +47,8 @@ class BpeKernelPropertySpec extends SparkSpec {
       val docs = (1L to 40L).map(i =>
         (i, sample(docGen, seed * 1000 + i))).toDF("doc_id", "text")
       val merges = sample(mergesGen, seed)
-      // chain-form pieces, built the way bpeEncode builds its counts
+      // the literal replace chain: bar-wrapped tokens, one replace per
+      // merge in rank order
       val rep0 = concat(lit("|"),
         array_join(split(trim(translate(col("text"), "|" + us, "")), " +"), "||"),
         lit("|"))

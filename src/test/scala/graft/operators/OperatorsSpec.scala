@@ -370,7 +370,7 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("banded simhashPairs equals the all-pairs reference and plans no cartesian product") {
-    val sh = Dedup.simhash(docs).cache()
+    val sh = Dedup.simhash(docs, 16).cache()
     for (h <- Seq(0, 1, 3, 5)) {
       val brute = sh.as("a").join(sh.as("b"), col("a.doc_id") < col("b.doc_id"))
         .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
@@ -764,18 +764,18 @@ class OperatorsSpec extends SparkSpec {
     assert(m(0) == ((1L, "a", "b", 4L)))
     assert(m(1) == ((2L, s"a${us}b", "c", 3L)))
     assert(m(2) == ((3L, s"a${us}b", s"a${us}b${us}c", 1L)))
-    val enc = TextAnalysis.bpeEncode(d, m.map(x => (x._2, x._3)).toSeq)
+    val enc = TextAnalysis.bpeEncodeNative(d, m.map(x => (x._2, x._3)).toSeq)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(enc(1L) == ((5L, 1L))) // a b a b c -> [ab][abc] -> [ab abc]
     assert(enc(2L) == ((6L, 2L))) // a b c a b c -> [abc][abc]
     // greedy left-to-right on runs: merging (a,a) over 5 a's gives
     // [aa][aa][a] — 3 pieces, never 4 (shared-boundary miss) or 2
     val run = Seq((1L, "a a a a a")).toDF("doc_id", "text")
-    val rEnc = TextAnalysis.bpeEncode(run, Seq(("a", "a"))).head()
+    val rEnc = TextAnalysis.bpeEncodeNative(run, Seq(("a", "a"))).head()
     assert(rEnc.getLong(2) == 3L)
     // delimiter chars in input are stripped, not corrupted into bounds
     val tricky = Seq((1L, s"x| y$us z")).toDF("doc_id", "text")
-    assert(TextAnalysis.bpeEncode(tricky, Seq(("x", "y"))).head().getLong(2) == 2L)
+    assert(TextAnalysis.bpeEncodeNative(tricky, Seq(("x", "y"))).head().getLong(2) == 2L)
   }
 
   test("bpe gate memo: shared trained artifact is bit-identical to a fresh train") {
@@ -791,27 +791,6 @@ class OperatorsSpec extends SparkSpec {
     assert(again == viaMemo)
     // the vocab-consuming gates run off the same artifact without error
     assert(TextAnalysis.queries("ta_bpe_vocab")(spark, Sf0001).count() > 0)
-  }
-
-  test("bpe encode: a 256-deep merge chain compiles under CODEGEN_ONLY; over the cap fails loudly") {
-    import spark.implicits._
-    val d = Seq((1L, "a b c d e")).toDF("doc_id", "text")
-    // max-depth chain of no-op merges: must execute with codegen
-    // FORCED (fallback disabled) — a Janino failure surfaces as an
-    // error here instead of a silent interpreted fallback
-    withSQLConf(
-      "spark.sql.codegen.fallback" -> "false",
-      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY") {
-      val deep = (1 to TextAnalysis.BpeEncodeMaxMerges).map(i => (s"x$i", s"y$i"))
-      val r = TextAnalysis.bpeEncode(d, deep).head()
-      assert(r.getLong(1) == 5L && r.getLong(2) == 5L)
-    }
-    // one past the cap: loud, named error — never a StackOverflowError
-    val over = (1 to TextAnalysis.BpeEncodeMaxMerges + 1).map(i => (s"x$i", s"y$i"))
-    val err = intercept[IllegalArgumentException] {
-      TextAnalysis.bpeEncode(d, over)
-    }
-    assert(err.getMessage.contains("cap is"))
   }
 
   test("sliding span dedup: off-grid duplicates caught, islands merged, short docs zero") {
