@@ -139,7 +139,7 @@ object Curation {
   def decontaminateRewrite(candidates: DataFrame, bench: DataFrame): DataFrame = {
     val k = 3
     val ts = Tokens.of(col("text"))
-    val cand = Tokens.grams(candidates, k).withColumnRenamed("gram", "shingle")
+    val cand = Tokens.grams(candidates, k, "shingle")
     // doc grain: ANY benchmark item — one row per matched position
     // (cand is unique per (doc, pos); the bench side is distinct)
     val benchSh = Dedup.shingleDf(bench).select(col("shingle")).distinct()
@@ -217,7 +217,7 @@ object Curation {
     minSharedShingles.foreach(f => require(f >= 0,
       s"decontaminateSpansPruned: minSharedShingles must be >= 0, got $f"))
     val k = 3
-    val cand = Tokens.grams(candidates, k).withColumnRenamed("gram", "shingle")
+    val cand = Tokens.grams(candidates, k, "shingle")
     val benchSh0 = Dedup.shingleDf(bench)
       .select(col("doc_id").as("bench_doc"), col("shingle"))
     // the bench shingle set is the only frame two consumers read (the

@@ -330,10 +330,16 @@ object Dedup {
   private def simhashVote(toks: DataFrame, bits: Int, weight: Column,
       out: String): DataFrame = {
     val nd = bits / 4
-    val h = (0 until nd).map { d =>
-      (instr(lit(Hex), substring(md5(col("tok")), d + 1, 1)) - 1).cast("long") *
-        lit(1L << (4 * (nd - 1 - d)))
-    }.reduce(_ + _)
+    def digit(d: Int) = instr(lit(Hex), substring(md5(col("tok")), d + 1, 1)) - 1
+    // an INT sum cast once while the value fits (≤ 7 digits: the 16-bit
+    // form's own arithmetic), per-digit BIGINT products past that
+    val h =
+      if (nd <= 7) (0 until nd).map { d =>
+        if (d == nd - 1) digit(d) else digit(d) * (1 << (4 * (nd - 1 - d)))
+      }.reduce(_ + _).cast("long")
+      else (0 until nd).map { d =>
+        digit(d).cast("long") * lit(1L << (4 * (nd - 1 - d)))
+      }.reduce(_ + _)
     val votes = (0 until bits).map { j =>
       sum(when(shiftright(col("h"), bits - 1 - j) % 2 === 1, weight)
         .otherwise(-weight)).as(s"s$j")
@@ -1212,7 +1218,7 @@ object Dedup {
     import org.apache.spark.storage.StorageLevel
     require(gramTokens >= 2, s"spanDedupSliding: gramTokens must be >= 2, got $gramTokens")
     val ts = Tokens.of(col("text"))
-    val gramsBase = Tokens.grams(docs, gramTokens, md5)
+    val gramsBase = Tokens.grams(docs, gramTokens, "gram_hash", md5)
     val grams =
       if (cacheGrams) gramsBase.persist(StorageLevel.MEMORY_AND_DISK_SER)
       else gramsBase
@@ -1220,9 +1226,9 @@ object Dedup {
     // a map-side-combinable aggregate, never a per-gram-hash window
     // (a row_number form ships a hot gram's every occurrence to ONE
     // reducer — the one skew funnel this family otherwise bans)
-    val first = grams.groupBy(col("gram"))
+    val first = grams.groupBy(col("gram_hash"))
       .agg(min(struct(col("doc_id"), col("pos"))).as("first"))
-    val flagged = grams.join(first, Seq("gram"))
+    val flagged = grams.join(first, Seq("gram_hash"))
       .select(col("doc_id"), col("pos"),
         (col("first.doc_id") =!= col("doc_id") ||
           col("first.pos") =!= col("pos")).as("dup"))

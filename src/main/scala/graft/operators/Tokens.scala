@@ -43,12 +43,15 @@ private[graft] object Tokens {
       st => f(concat_ws(" ", slice(ts, st + 1, lit(size)))))
 
   /** Every k-token window (stride 1) of each doc's `text` as a row
-    * (doc_id, pos, gram), `f` applied to the gram text; docs shorter
+    * (doc_id, pos, `out`), `f` applied to the gram text; docs shorter
     * than k tokens have none. `pos` is the window's 0-based start.
+    * The caller names the gram column here: a rename after the
+    * explode would plan one more projection over every gram row.
     */
-  def grams(docs: DataFrame, k: Int, f: Column => Column = identity): DataFrame =
+  def grams(docs: DataFrame, k: Int, out: String,
+      f: Column => Column = identity): DataFrame =
     docs.select(col("doc_id"), of(col("text")).as("ts"))
       .where(size(col("ts")) >= k)
       .select(col("doc_id"),
-        posexplode(windows(col("ts"), k, 1, f)).as(Seq("pos", "gram")))
+        posexplode(windows(col("ts"), k, 1, f)).as(Seq("pos", out)))
 }

@@ -12,6 +12,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = GraftSession.build("local[4]", 4)
 
   val Sf0001 = "/root/testdata/sf0.001"
+  val Sf001 = "/root/testdata/sf0.01"
+  val Sf01 = "/root/testdata/sf0.1"
 
   /** Run `body` with the given SQL confs set, restoring the previous
     * values (or unsetting) afterwards — the session is shared across

@@ -13,7 +13,8 @@ import org.apache.spark.sql.functions._
   * bodies that `Dedup.simhash`'s one vote replaced. Corpora: the sf0.01
   * and sf0.1 `documents`, and edge texts (null, empty, blank, 1 and 2
   * tokens, runs of spaces, tabs and other non-space whitespace inside
-  * the text, non-ASCII, exact window-size boundaries and a 41× repeat).
+  * the text, non-ASCII, exact window-size boundaries and a 41× repeat);
+  * the block test leaves sf0.1 out.
   * Rows compare as multisets (`exceptAll` both ways, nulls equal),
   * with names and types equal too.
   */
@@ -147,6 +148,26 @@ class TokensPropertySpec extends SparkSpec {
       .select(col("doc_id"), fingerprint16.as("simhash"))
   }
 
+  /** The deleted `Dedup.simhashBits` body (per-digit BIGINT value). */
+  private def refSimhashBits(docs: DataFrame, bits: Int): DataFrame = {
+    val nd = bits / 4
+    val toks = docs.select(col("doc_id"), explode(refToks).as("tok")).distinct()
+    val h = (0 until nd).map { d =>
+      (instr(lit(Hex), substring(md5(col("tok")), d + 1, 1)) - 1).cast("long") *
+        lit(1L << (4 * (nd - 1 - d)))
+    }.reduce(_ + _)
+    val votes = (0 until bits).map { j =>
+      sum(when(shiftright(col("h"), bits - 1 - j) % 2 === 1, 1).otherwise(-1)).as(s"s$j")
+    }
+    val fingerprint = (0 until bits).map { j =>
+      when(col(s"s$j") > 0, lit(1L << (bits - 1 - j))).otherwise(0L)
+    }.reduce(_ + _)
+    toks.withColumn("h", h)
+      .groupBy(col("doc_id"))
+      .agg(votes.head, votes.tail: _*)
+      .select(col("doc_id"), fingerprint.as("simhash"))
+  }
+
   /** `Dedup.simhashIdfPlan`'s body before it shared the vote. */
   private def refSimhashIdf(docs: DataFrame): DataFrame = {
     val toksD = docs.select(col("doc_id"), explode(refToks).as("tok")).distinct()
@@ -186,8 +207,14 @@ class TokensPropertySpec extends SparkSpec {
 
   private lazy val corpora: Seq[(String, DataFrame)] = Seq(
     "edge" -> edge,
-    "sf0.01" -> spark.read.parquet("/root/testdata/sf0.01/documents.parquet"),
-    "sf0.1" -> spark.read.parquet("/root/testdata/sf0.1/documents.parquet"))
+    "sf0.01" -> spark.read.parquet(s"$Sf001/documents.parquet"),
+    "sf0.1" -> spark.read.parquet(s"$Sf01/documents.parquet"))
+
+  /** The block test's corpora: the edge texts already hold every
+    * block boundary (4..6, 19..21 and 40 tokens), so sf0.1 would add
+    * only volume, and two more streaming queries.
+    */
+  private lazy val blockCorpora = corpora.filterNot(_._1 == "sf0.1")
 
   private def assertSameRows(got: DataFrame, ref: DataFrame, what: String): Unit = {
     assert(got.schema.map(f => (f.name, f.dataType)) ==
@@ -218,7 +245,7 @@ class TokensPropertySpec extends SparkSpec {
   test("k-grams: Tokens.grams == the replaced gram builders (k = 3 text, k = 8 md5)") {
     for ((name, docs) <- corpora; (k, f) <- Seq[(Int, Column => Column)](
         3 -> identity, 8 -> md5, 3 -> md5, 8 -> identity))
-      assertSameRows(Tokens.grams(docs, k, f), refGrams(docs, k, f), s"$name k=$k")
+      assertSameRows(Tokens.grams(docs, k, "gram", f), refGrams(docs, k, f), s"$name k=$k")
   }
 
   test("blocks: spanDedup, spanDedupRewrite and the stream's block hashes == the replaced builders") {
@@ -226,7 +253,7 @@ class TokensPropertySpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     val at = Timestamp.valueOf("2024-01-01 00:00:00")
-    for ((name, docs) <- corpora; b <- Seq(5, 20)) {
+    for ((name, docs) <- blockCorpora; b <- Seq(5, 20)) {
       assertSameRows(Dedup.spanDedup(docs, b), refSpanDedup(docs, b), s"$name spanDedup b=$b")
       assertSameRows(Dedup.spanDedupRewrite(docs, b), refSpanDedupRewrite(docs, b),
         s"$name spanDedupRewrite b=$b")
@@ -257,9 +284,13 @@ class TokensPropertySpec extends SparkSpec {
     }
   }
 
-  test("simhash(docs, 16) == the deleted 16-bit body; simhashIdfPlan == its previous body") {
+  test("simhash(docs, 16) == the deleted 16-bit body, wider widths == simhashBits; simhashIdfPlan == its previous body") {
     for ((name, docs) <- corpora) {
       assertSameRows(Dedup.simhash(docs, 16), refSimhash16(docs), s"$name simhash")
+      // both value forms: INT up to 28 bits, BIGINT past it
+      for (bits <- Seq(20, 28, 32, 60))
+        assertSameRows(Dedup.simhash(docs, bits), refSimhashBits(docs, bits),
+          s"$name simhash bits=$bits")
       val idf = Dedup.simhashIdfPlan(docs)
       try assertSameRows(idf.df, refSimhashIdf(docs), s"$name simhash_idf")
       finally idf.release()
