@@ -4,10 +4,13 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.graftshim.CheckpointBridge
 import org.apache.spark.storage.StorageLevel
 
-/** The round driver behind every iterative operator in the engine
-  * (PageRank, personalized PageRank, BFS, label propagation, k-core,
-  * SSSP, connected components). It owns the ROUND-CHECKPOINT PROTOCOL,
-  * stated here once:
+/** The round driver behind every iterative operator in the engine. Five
+  * loop bodies run on it: the rank walk (personalized PageRank; global
+  * PageRank is the walk seeded with every node), the distance
+  * relaxation (SSSP; BFS is the relaxation over unit weights, and
+  * exits early once its frontier is empty), label propagation, k-core
+  * peeling, and connected components. It owns the ROUND-CHECKPOINT
+  * PROTOCOL, stated here once:
   *
   *  - '''Cut.''' A round is cut by [[cut]]: a RELIABLE `checkpoint()`
   *    when the context has a checkpoint dir (an executor loss mid-loop
@@ -24,8 +27,8 @@ import org.apache.spark.storage.StorageLevel
   *    dominates wall time (measured >5× on connected components at 5k
   *    docs before rounds were cut).
   *  - '''Materialization, chosen by the loop's shape, never by a
-  *    caller.''' A step that reads the previous round ONCE (PageRank,
-  *    personalized PageRank) runs [[Lazy]]: rounds compose into one
+  *    caller.''' A step that reads the previous round ONCE (the rank
+  *    walk) runs [[Lazy]]: rounds compose into one
   *    plan, cut every `CutEvery` rounds for lineage and fault
   *    recovery, never after the last one — the caller materializes the
   *    result anyway. Every other step runs [[EachRound]]: each round is

@@ -2,31 +2,41 @@ package graft.operators
 
 import graft.GraftSession.table
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Iterative graph analytics over edge tables. The clustering side of
   * the engine ([[Dedup.connectedComponents]]) converges by pointer
-  * doubling; this module covers the other canonical iterative shape —
-  * fixed-iteration score propagation (PageRank) — with the engine's
-  * determinism contract: ALL rank arithmetic is 64-bit integer
-  * fixed-point (ranks in units of 10⁻¹², `div` for every division),
-  * so partial-aggregation order, partitioning, and engine choice
-  * cannot move a single bit. The tiny mass the floor-divisions shed
-  * (vs float PageRank) is irrelevant to ranking and identical
-  * everywhere.
+  * doubling; this module covers the other canonical iterative shapes
+  * with the engine's determinism contract: ALL rank arithmetic is
+  * 64-bit integer fixed-point (ranks in units of 10⁻¹², `div` for
+  * every division), so partial-aggregation order, partitioning, and
+  * engine choice cannot move a single bit. The tiny mass the
+  * floor-divisions shed (vs float PageRank) is irrelevant to ranking
+  * and identical everywhere.
   *
-  * Scale shape: each iteration is one join of the edge list with the
-  * current O(nodes) rank table + one map-side-combinable sum at the
-  * dst grain — the textbook distributed PageRank plan. Iterations
-  * compose LAZILY into one Catalyst plan (no driver round trips,
-  * nothing materialized between rounds) and [[Fixpoint]] cuts
-  * lineage every few rounds. Node count rides in as a
+  * Five loop bodies run on the [[Fixpoint]] driver here: the rank walk
+  * (personalized PageRank; global PageRank is the walk seeded with
+  * every node), the distance relaxation (SSSP; BFS is the relaxation
+  * over unit weights), label propagation, k-core peeling, and — in
+  * [[Dedup]] — connected components. Each round-joined edge list is
+  * laid out once by [[bySrc]].
+  *
+  * Scale shape of the rank walk: each iteration is one join of the
+  * edge list with the current rank table + one map-side-combinable sum
+  * at the dst grain — the textbook distributed PageRank plan.
+  * Iterations compose LAZILY into one Catalyst plan (no driver round
+  * trips, nothing materialized between rounds) and [[Fixpoint]] cuts
+  * lineage every few rounds. The seed count rides in as a
   * driver-computed literal — one COUNT, the kmeans-centroid
   * bounded-state pattern.
   */
 object Graph {
 
   val Scale = 1000000000000L // rank fixed-point: 1.0 == 10^12
+
+  private val Level = StorageLevel.MEMORY_AND_DISK_SER
 
   /** Materialize a managed plan's result into its OWN result-sized
     * storage (a [[Fixpoint.cut]]) and release every intermediate the
@@ -44,6 +54,32 @@ object Graph {
     plan.release()
     out
   }
+
+  /** The edge layout every round join reads, built once: the edge list
+    * cached PRE-PARTITIONED and PRE-SORTED on `src`. A cached frame's
+    * output partitioning and ordering satisfy the per-round sort-merge
+    * join's requirement, so the rounds × |E| exchange becomes one and
+    * the edge side needs no per-round sort either — only the
+    * node-grain table pays per-round shuffle+sort (guide §2.4).
+    * `derive` adds columns over that same layout before the persist:
+    * the rank walk folds the out-degree in as a window count, whose
+    * hashpartitioning(src)+sort(src) requirements are exactly this
+    * layout, so each round needs ONE join (edges ⋈ rank) and no
+    * separately cached degree table.
+    */
+  private def bySrc(edges: DataFrame,
+      derive: DataFrame => DataFrame = identity): DataFrame =
+    derive(edges.repartition(col("src")).sortWithinPartitions(col("src")))
+      .persist(Level)
+
+  /** Every node of a (src, dst) edge list, once, as `id`. */
+  private def nodesOf(e: DataFrame): DataFrame =
+    e.select(col("src").as("id")).unionAll(e.select(col("dst").as("id"))).distinct()
+
+  /** Both directed edges (src, dst) of every undirected (u, v) pair. */
+  private def symmetric(pairs: DataFrame): DataFrame =
+    pairs.select(col("u").as("src"), col("v").as("dst"))
+      .unionAll(pairs.select(col("v").as("src"), col("u").as("dst")))
 
   /** `iters` rounds of damped PageRank over a DIRECTED edge list
     * (src, dst). Returns (id, r) with r in [[Scale]] fixed-point.
@@ -77,68 +113,30 @@ object Graph {
   def componentSummary(pairs: DataFrame): DataFrame =
     eagerReleased(componentSummaryPlan(pairs))
 
-  /** Shared per-round edge layout for the rank walks: the edge list
-    * cached PRE-PARTITIONED and PRE-SORTED on `src` (a cached frame's
-    * output partitioning/ordering satisfies the per-round join's
-    * requirement, so the iters × |E| exchange becomes one — guide
-    * §2.4), with the out-degree FOLDED IN as a window count over the
-    * same partitioning+ordering (zero extra exchange: the window's
-    * hashpartitioning(src)+sort(src) requirements are exactly the
-    * layout being built). Each round then needs ONE join (edges ⋈
-    * rank) instead of two (edges ⋈ rank ⋈ deg) — iters−1 joins and a
-    * separately cached degree table gone.
+  /** Managed form of [[pageRank]]: the personalized walk
+    * ([[personalizedPageRankPlan]]) seeded with EVERY node. With k = n
+    * seeds the teleport base and the start mass are the global ones,
+    * the walk's full outer join with the seed set keeps every node,
+    * and a rank-0 row the walk drops (possible only at
+    * `dampingPct = 100`) adds 0 to its neighbours; the final node join
+    * restores its exact zero. Rounds compose lazily
+    * ([[Fixpoint.Lazy]]).
     */
-  private def edgesWithDeg(edges: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.storage.StorageLevel
-    edges.select(col("src"), col("dst")).repartition(col("src"))
-      .sortWithinPartitions(col("src"))
-      .withColumn("deg", count(lit(1)).over(Window.partitionBy(col("src"))))
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
-  }
+  def pageRankPlan(edges: DataFrame, iters: Int, dampingPct: Int = 85): DedupPlan =
+    rankWalk(edges, identity, iters, dampingPct, "pagerank")
 
-  /** Managed form: the edge list and its two tiny derivations (node
-    * set, out-degrees) are each referenced once per iteration plus the
-    * node-count job — without a persist the whole upstream (here: a
-    * full distinct over lineitem) re-executes 3·iters+ times. Cached
-    * MEMORY_AND_DISK_SER and released via the [[DedupPlan]] ownership
-    * contract, same as every other managed plan in the engine. Rounds
-    * compose lazily ([[Fixpoint.Lazy]]).
-    */
-  def pageRankPlan(edges: DataFrame, iters: Int, dampingPct: Int = 85): DedupPlan = {
-    require(iters >= 1, "need iters >= 1")
-    require(dampingPct >= 0 && dampingPct <= 100, "dampingPct in [0,100]")
-    import org.apache.spark.storage.StorageLevel
-    val e = edgesWithDeg(edges)
-    val nodes = e.select(col("src").as("id"))
-      .unionAll(e.select(col("dst").as("id"))).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
-    val n = nodes.count() // one job, one long — bounded driver state
-    val base = (100L - dampingPct) * Scale / (100L * n)
-    val r = Fixpoint.run(nodes.select(col("id"), lit(Scale / n).as("r")),
-        iters, Fixpoint.Lazy) { (_, rank) =>
-      val contrib = e.join(rank, e("src") === rank("id"))
-        .select(col("dst").as("id"), expr("r div deg").as("c"))
-        .groupBy(col("id")).agg(sum(col("c")).as("sc"))
-      nodes.join(contrib, Seq("id"), "left")
-        .select(col("id"),
-          (lit(base) + expr(s"($dampingPct * coalesce(sc, 0)) div 100")).as("r"))
-    }
-    r.plan(r.result, "pagerank", Seq(e, nodes))
-  }
-
-  /** PERSONALIZED PageRank — [[pageRankPlan]] with the teleport mass
-    * restricted to a SEED set: ranks measure relevance *to the seeds*
-    * (random walks restart at a seed, never uniformly), the
-    * recommendation / trust-propagation / related-items form of the
-    * algorithm. Nodes the seeds cannot reach hold rank exactly 0 —
-    * integer arithmetic makes that statement exact, not epsilon —
-    * so the output is naturally LOCALIZED: on a 100 TB graph the
-    * non-zero frontier is the seeds' neighborhood, not the node set.
+  /** PERSONALIZED PageRank — the teleport mass restricted to a SEED
+    * set: ranks measure relevance *to the seeds* (random walks restart
+    * at a seed, never uniformly), the recommendation /
+    * trust-propagation / related-items form of the algorithm. Nodes
+    * the seeds cannot reach hold rank exactly 0 — integer arithmetic
+    * makes that statement exact, not epsilon — so the output is
+    * naturally LOCALIZED: on a 100 TB graph the non-zero frontier is
+    * the seeds' neighborhood, not the node set.
     *
-    * Same managed-plan scale shape as the global form (edge list
-    * cached pre-partitioned on src, per-round map-side-combinable
-    * contribution sum); the seed set is node-grain, persisted, and
+    * Scale shape: the edge list cached pre-partitioned on src with its
+    * out-degree ([[bySrc]]), a per-round map-side-combinable
+    * contribution sum; the seed set is node-grain, persisted, and
     * joins into each round's rank rebuild as the teleport indicator
     * (a broadcast-sized join at any realistic seed count).
     */
@@ -147,16 +145,29 @@ object Graph {
     eagerReleased(personalizedPageRankPlan(edges, seeds, iters, dampingPct))
 
   def personalizedPageRankPlan(edges: DataFrame, seeds: DataFrame,
-      iters: Int, dampingPct: Int = 85): DedupPlan = {
+      iters: Int, dampingPct: Int = 85): DedupPlan =
+    rankWalk(edges, _ => seeds.select(col("id")).distinct(), iters, dampingPct,
+      "personalized-pagerank")
+
+  /** The one rank walk: `seedsOf` picks the distinct teleport set
+    * from the node set (all of it for global PageRank). The edge
+    * layout and the seed set are each referenced once per round plus
+    * the seed-count job — without a persist the whole upstream (here:
+    * a full distinct over lineitem) re-executes every round. They and
+    * the node set, which the output joins back, are cached
+    * MEMORY_AND_DISK_SER and released via the [[DedupPlan]] ownership
+    * contract.
+    */
+  private def rankWalk(edges: DataFrame, seedsOf: DataFrame => DataFrame,
+      iters: Int, dampingPct: Int, strategy: String): DedupPlan = {
     require(iters >= 1, "need iters >= 1")
     require(dampingPct >= 0 && dampingPct <= 100, "dampingPct in [0,100]")
-    import org.apache.spark.storage.StorageLevel
-    val e = edgesWithDeg(edges)
-    val sd = seeds.select(col("id")).distinct()
-      .withColumn("__sd", lit(1))
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
-    val k = sd.count()
-    require(k > 0, "personalizedPageRank: empty seed set")
+    val e = bySrc(edges.select(col("src"), col("dst")),
+      _.withColumn("deg", count(lit(1)).over(Window.partitionBy(col("src")))))
+    val nodes = nodesOf(e).persist(Level)
+    val sd = seedsOf(nodes).withColumn("__sd", lit(1)).persist(Level)
+    val k = sd.count() // one job, one long — bounded driver state
+    require(k > 0, s"$strategy: empty seed set")
     val base = (100L - dampingPct) * Scale / (100L * k)
     // FRONTIER-SIZED rounds (guide §2.6 — the r16 q50 anti-scaling
     // fix): the walk is localized by construction (integer zeros are
@@ -179,13 +190,11 @@ object Graph {
             + expr(s"($dampingPct * coalesce(sc, 0)) div 100")).as("r"))
         .where(col("r") > 0)
     }
-    // exact zeros for everything the walk never reached — the same
-    // (id, r)-for-every-node output the node-grain form returned
-    val nodes = e.select(col("src").as("id"))
-      .unionAll(e.select(col("dst").as("id"))).distinct()
+    // exact zeros for everything the walk never reached: one
+    // (id, r) row for every node
     val out = nodes.join(r.result, Seq("id"), "left")
       .select(col("id"), coalesce(col("r"), lit(0L)).as("r"))
-    r.plan(out, "personalized-pagerank", Seq(e, sd))
+    r.plan(out, strategy, Seq(e, nodes, sd))
   }
 
   /** Triangle count over an undirected edge list given as distinct
@@ -211,11 +220,15 @@ object Graph {
     */
   def triangleCountPlan(pairs: DataFrame): DedupPlan = {
     val (_, e, ws, caches) = triangleBase(pairs)
-    val tri = ws.agg(coalesce(sum(size(col("ws")).cast("long")), lit(0L))
-      .as("n_triangles"))
-    val out = e.agg(count(lit(1)).as("n_edges")).crossJoin(tri)
-    DedupPlan(out, "triangles", caches)
+    DedupPlan(census(e, ws), "triangles", caches)
   }
+
+  /** The 1-row census off the oriented edges and their closing sets:
+    * (n_edges, n_triangles).
+    */
+  private def census(e: DataFrame, ws: DataFrame): DataFrame =
+    e.agg(count(lit(1)).as("n_edges")).crossJoin(
+      ws.agg(coalesce(sum(size(col("ws")).cast("long")), lit(0L)).as("n_triangles")))
 
   /** Shared machinery behind [[triangleCountPlan]],
     * [[localClusteringPlan]] and [[triangleProfilePlan]]: the degree
@@ -237,12 +250,11 @@ object Graph {
     */
   private def triangleBase(
       pairs: DataFrame): (DataFrame, DataFrame, DataFrame, Seq[DataFrame]) = {
-    import org.apache.spark.storage.StorageLevel
     val p = pairs.select(col("u"), col("v"))
     val deg = p.select(col("u").as("id"))
       .unionAll(p.select(col("v").as("id")))
       .groupBy(col("id")).agg(count(lit(1)).as("d"))
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
+      .persist(Level)
     val flip = struct(col("du"), col("u")) > struct(col("dv"), col("v"))
     val e = p
       .join(deg.select(col("id").as("u"), col("d").as("du")), Seq("u"))
@@ -250,10 +262,10 @@ object Graph {
       .select(
         when(flip, col("v")).otherwise(col("u")).as("u"),
         when(flip, col("u")).otherwise(col("v")).as("v"))
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
+      .persist(Level)
     val nbrs = e.groupBy(col("u").as("id"))
       .agg(sort_array(collect_list(col("v"))).as("ns"))
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
+      .persist(Level)
     // inner join on v: an edge whose head has no out-neighbors cannot
     // close a triangle — dropped here, not null-handled downstream
     val ws = e
@@ -304,13 +316,9 @@ object Graph {
   }
 
   def triangleProfilePlan(pairs: DataFrame): TriangleProfile = {
-    import org.apache.spark.storage.StorageLevel
     val (deg, e, ws0, caches) = triangleBase(pairs)
-    val ws = ws0.persist(StorageLevel.MEMORY_AND_DISK_SER)
-    val tri = ws.agg(coalesce(sum(size(col("ws")).cast("long")), lit(0L))
-      .as("n_triangles"))
-    val census = e.agg(count(lit(1)).as("n_edges")).crossJoin(tri)
-    TriangleProfile(census, lccFrom(deg, cornerCounts(ws)), caches :+ ws)
+    val ws = ws0.persist(Level)
+    TriangleProfile(census(e, ws), lccFrom(deg, cornerCounts(ws)), caches :+ ws)
   }
 
   /** Per-node LOCAL CLUSTERING COEFFICIENT — [[triangleCountPlan]]'s
@@ -342,46 +350,21 @@ object Graph {
   }
 
   /** BFS hop distance — min hops from a SEED node set to every node
-    * reachable within `maxHops`, over a directed edge list. The third
-    * canonical iterative-graph shape next to score propagation
-    * (pageRank) and label convergence (connectedComponents):
-    * FRONTIER EXPANSION. Each round touches only the just-reached
-    * frontier — one edge join keyed on src, one distinct, one
-    * anti-join against the reached set — so total work is
-    * O(Σ frontier-adjacent edges), never rounds × |E|; exactly the
-    * incremental property a 100 TB reachability probe needs
-    * (neighborhood queries, contamination blast radius, supply-chain
-    * reach).
-    *
-    * The reached set is cut every round ([[Fixpoint]]): each round's
-    * frontier filter, anti-join, and final output all read one flat
-    * LogicalRDD instead of a union tree that grows O(rounds²) in plan
-    * nodes. Levels are exact integers; output one row per REACHED
-    * node: (id, lvl).
+    * reachable within `maxHops`, over a directed edge list: FRONTIER
+    * EXPANSION, the reachability probe behind neighborhood queries,
+    * contamination blast radius and supply-chain reach. It runs as the
+    * distance relaxation ([[ssspStatus]]) over unit weights: with
+    * every weight 1, round h improves exactly the nodes BFS first
+    * reaches at hop h, so each round touches only the just-reached
+    * frontier — O(Σ frontier-adjacent edges), never rounds × |E| —
+    * and the loop exits early once the frontier is empty. Levels are
+    * exact integers; output one row per REACHED node: (id, lvl);
+    * `maxHops = 0` returns the seeds at level 0.
     */
   def bfsLevelsPlan(edges: DataFrame, seeds: DataFrame, maxHops: Int): DedupPlan = {
     require(maxHops >= 0, "need maxHops >= 0")
-    import org.apache.spark.storage.StorageLevel
-    // pre-partitioned on src for the same reason as pageRankPlan: the
-    // per-round frontier join requires hashpartitioning(src), and the
-    // cached layout satisfies it — rounds stop re-exchanging the edges
-    val e = edges.select(col("src"), col("dst")).repartition(col("src"))
-      .sortWithinPartitions(col("src")) // cached pre-SORTED on the join
-      // key too: the per-round sort-merge join then needs neither an
-      // exchange nor a sort on the (large) edge side — only the
-      // node-grain table pays per-round shuffle+sort (guide §2.4)
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
-    val r = Fixpoint.run(seeds.select(col("id")).distinct()
-        .select(col("id"), lit(0L).as("lvl")), maxHops, Fixpoint.EachRound) {
-        (h, lvl) =>
-      val frontier = lvl.where(col("lvl") === h - 1).select(col("id"))
-      val next = e.join(frontier, e("src") === frontier("id"))
-        .select(col("dst").as("id")).distinct()
-        .join(lvl, Seq("id"), "left_anti")
-        .select(col("id"), lit(h.toLong).as("lvl"))
-      lvl.unionAll(next)
-    }
-    r.plan(r.result, "bfs_levels", Seq(e))
+    relax(edges.select(col("src"), col("dst")).withColumn("w", lit(1L)), seeds,
+      maxHops, "lvl", "bfs_levels")._1
   }
 
   /** Component census over an undirected (u, v) pair list: component
@@ -393,9 +376,8 @@ object Graph {
     * here the co-purchase self-join — would execute twice).
     */
   def componentSummaryPlan(pairs: DataFrame): DedupPlan = {
-    import org.apache.spark.storage.StorageLevel
     val e = pairs.select(col("u"), col("v"))
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
+      .persist(Level)
     val nodes = e.select(col("u").as("doc_id"))
       .unionAll(e.select(col("v").as("doc_id"))).distinct()
     // managed CC form: forward its finalizer so release() also frees
@@ -451,17 +433,16 @@ object Graph {
 
   /** The gate's graph: the undirected part↔supplier bipartite graph
     * induced by lineitem ("which suppliers ship which parts"), each
-    * distinct pair contributing both directed edges.
+    * distinct pair contributing both directed edges, with the public
+    * `p<partkey>` / `s<suppkey>` string ids: [[partSupplierEdgesL]]
+    * rendered by [[renderPsId]]. The long encoding is injective, so
+    * rendering after its distinct still yields distinct pairs.
     */
-  def partSupplierEdges(li: DataFrame): DataFrame = {
-    val pairs = li.select(
-      concat(lit("p"), col("l_partkey")).as("p"),
-      concat(lit("s"), col("l_suppkey")).as("s")).distinct()
-    pairs.select(col("p").as("src"), col("s").as("dst"))
-      .unionAll(pairs.select(col("s").as("src"), col("p").as("dst")))
-  }
+  def partSupplierEdges(li: DataFrame): DataFrame =
+    partSupplierEdgesL(li)
+      .select(renderPsId(col("src")).as("src"), renderPsId(col("dst")).as("dst"))
 
-  /** LONG-keyed twin of [[partSupplierEdges]] — the iterative gates'
+  /** LONG-keyed form of [[partSupplierEdges]] — the iterative gates'
     * internal form (guide §2.3, narrower types): every round's join/
     * aggregation key is an 8-byte long (part k → 2k, supplier k →
     * 2k+1) instead of a rendered `p…`/`s…` string, so the distinct,
@@ -471,13 +452,10 @@ object Graph {
     * range: TPC-H keys are ≥ 1 and far below 2⁶², so 2k+1 cannot
     * overflow.
     */
-  private def partSupplierEdgesL(li: DataFrame): DataFrame = {
-    val pairs = li.select(
-      (col("l_partkey").cast("long") * 2).as("p"),
-      (col("l_suppkey").cast("long") * 2 + 1).as("s")).distinct()
-    pairs.select(col("p").as("src"), col("s").as("dst"))
-      .unionAll(pairs.select(col("s").as("src"), col("p").as("dst")))
-  }
+  private[operators] def partSupplierEdgesL(li: DataFrame): DataFrame =
+    symmetric(li.select(
+      (col("l_partkey").cast("long") * 2).as("u"),
+      (col("l_suppkey").cast("long") * 2 + 1).as("v")).distinct())
 
   /** Decode a [[partSupplierEdgesL]] node id back to the public
     * `p<partkey>` / `s<suppkey>` string form. INTEGER division only
@@ -503,8 +481,8 @@ object Graph {
     * point.
     *
     * Scale shape matches [[pageRankPlan]]: edges cached PRE-PARTITIONED
-    * on src so the per-round label join never re-exchanges the edge
-    * list; each round is that join + a map-side-combinable (dst,
+    * on src ([[bySrc]]) so the per-round label join never re-exchanges
+    * the edge list; each round is that join + a map-side-combinable (dst,
     * label) count + a min(struct) argmax at the node grain; each
     * round is cut ([[Fixpoint.EachRound]]). Labels live at the node
     * grain — O(|V|) state per round, never edge-sized.
@@ -514,16 +492,8 @@ object Graph {
 
   def labelPropagationPlan(edges: DataFrame, iters: Int): DedupPlan = {
     require(iters >= 1, "need iters >= 1")
-    import org.apache.spark.storage.StorageLevel
-    val e = edges.select(col("src"), col("dst")).repartition(col("src"))
-      .sortWithinPartitions(col("src")) // cached pre-SORTED on the join
-      // key too: the per-round sort-merge join then needs neither an
-      // exchange nor a sort on the (large) edge side — only the
-      // node-grain table pays per-round shuffle+sort (guide §2.4)
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
-    val nodes = e.select(col("src").as("id"))
-      .unionAll(e.select(col("dst").as("id"))).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
+    val e = bySrc(edges.select(col("src"), col("dst")))
+    val nodes = nodesOf(e).persist(Level)
     // each round's label frame is consumed TWICE by the next round
     // (vote join + keep-own coalesce), so every round is cut
     val r = Fixpoint.run(nodes.select(col("id"), col("id").as("lbl")),
@@ -563,32 +533,29 @@ object Graph {
     * tractable on a 100 TB edge list where a fixpoint re-scan of the
     * full graph per round would not be.
     *
-    * Eager convenience form; see [[kCorePlan]].
+    * Eager convenience form of [[kCoreStatus]].
     */
   def kCore(pairs: DataFrame, k: Int, rounds: Int): DataFrame =
-    eagerReleased(kCorePlan(pairs, k, rounds))
+    eagerReleased(kCoreStatus(pairs, k, rounds)._1)
 
-  /** Managed form of [[kCore]]. Scale shape: the symmetrized edge
-    * list is cached PRE-PARTITIONED on src (the [[pageRankPlan]]
-    * layout — the per-round src-side semi-join never re-exchanges
-    * it); each round is two semi-joins against the O(|V|)-and-
-    * shrinking alive set (src side exchange-free by layout, dst side
-    * exchanges only the current — already peeled — edge subset) plus
-    * one map-side-combinable degree count. Per-round alive sets are
-    * node-grain, consumed twice (both semi-joins), and cut every round
-    * ([[Fixpoint.EachRound]]).
-    */
-  def kCorePlan(pairs: DataFrame, k: Int, rounds: Int): DedupPlan =
-    kCoreStatus(pairs, k, rounds)._1
-
-  /** [[kCorePlan]] plus the CONVERGENCE bit: `true` iff the peel
-    * provably reached the k-core fixpoint within `rounds`. The alive
-    * set is monotone non-increasing, so two consecutive rounds with
-    * the SAME survivor count have the same survivor SET — a fixpoint
-    * (and the empty set is trivially one). A `false` here means the
-    * returned frame is a PARTIAL peel — the BFS-frontier-emptiness
-    * contract applied to the shrinking-vertex-set shape; without it a
-    * deep peel that hasn't converged is silently wrong-by-truncation.
+  /** Managed form of [[kCore]] plus the CONVERGENCE bit: `true` iff
+    * the peel provably reached the k-core fixpoint within `rounds`.
+    * The alive set is monotone non-increasing, so two consecutive
+    * rounds with the SAME survivor count have the same survivor SET —
+    * a fixpoint (and the empty set is trivially one). A `false` here
+    * means the returned frame is a PARTIAL peel — the
+    * BFS-frontier-emptiness contract applied to the shrinking-vertex-
+    * set shape; without it a deep peel that hasn't converged is
+    * silently wrong-by-truncation.
+    *
+    * Scale shape: the symmetrized edge list is cached PRE-PARTITIONED
+    * on src ([[bySrc]] — the per-round src-side semi-join never
+    * re-exchanges it); each round is two semi-joins against the
+    * O(|V|)-and-shrinking alive set (src side exchange-free by layout,
+    * dst side exchanges only the current — already peeled — edge
+    * subset) plus one map-side-combinable degree count. Per-round alive
+    * sets are node-grain, consumed twice (both semi-joins), and cut
+    * every round ([[Fixpoint.EachRound]]).
     *
     * The check rides on counts of the per-round survivor cuts
     * (node-grain, already materialized for the next round's two
@@ -599,12 +566,7 @@ object Graph {
   def kCoreStatus(pairs: DataFrame, k: Int, rounds: Int): (DedupPlan, Boolean) = {
     require(k >= 1, "need k >= 1")
     require(rounds >= 1, "need rounds >= 1")
-    import org.apache.spark.storage.StorageLevel
-    val e = pairs.select(col("u").as("src"), col("v").as("dst"))
-      .unionAll(pairs.select(col("v").as("src"), col("u").as("dst")))
-      .repartition(col("src"))
-      .sortWithinPartitions(col("src")) // pre-sorted: see pageRankPlan
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
+    val e = bySrc(symmetric(pairs))
     // read the survivor count off each round's cut: equal consecutive
     // counts on a monotone-shrinking set ⇒ fixpoint; empty ⇒ fixpoint
     var prevN = -1L // unknown before the first peel
@@ -628,7 +590,6 @@ object Graph {
     }
     (r.plan(r.result, "kcore", Seq(e)), r.converged)
   }
-
 
   /** LINK PREDICTION over an undirected (u < v) edge list: score every
     * NON-adjacent node pair at distance 2 by shared-neighborhood
@@ -664,17 +625,15 @@ object Graph {
       minCommon: Long = 2L): DedupPlan = {
     require(maxHubDegree >= 1, "need maxHubDegree >= 1")
     require(minCommon >= 1, "need minCommon >= 1")
-    import org.apache.spark.storage.StorageLevel
     val p = pairs.select(col("u"), col("v"))
-    val sym = p.select(col("u").as("src"), col("v").as("dst"))
-      .unionAll(p.select(col("v").as("src"), col("u").as("dst")))
+    val sym = symmetric(p)
     val deg = sym.groupBy(col("src").as("id")).agg(count(lit(1)).as("d"))
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
+      .persist(Level)
     // center-annotated half-edges: consumed twice by the self-join
     val half = sym
       .join(deg.where(col("d") <= maxHubDegree)
         .select(col("id").as("src"), col("d").as("dc")), Seq("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
+      .persist(Level)
     val wedges = half.as("a").join(half.as("b"),
         col("a.src") === col("b.src") && col("a.dst") < col("b.dst"))
       .select(col("a.dst").as("u"), col("b.dst").as("v"), col("a.dc").as("dc"))
@@ -695,9 +654,9 @@ object Graph {
   /** WEIGHTED single-source shortest paths — min total edge weight
     * from a seed set to every node reachable within `rounds`
     * relaxation rounds, over a directed (src, dst, w) edge list with
-    * NON-NEGATIVE integer weights. [[bfsLevelsPlan]]'s weighted
-    * sibling and the fifth iterative-graph shape in the module:
-    * MONOTONE DISTANCE RELAXATION (distributed Bellman-Ford). Output
+    * NON-NEGATIVE integer weights: MONOTONE DISTANCE RELAXATION
+    * (distributed Bellman-Ford), the loop [[bfsLevelsPlan]] also runs,
+    * over unit weights. Output
     * one row per reached node: (id, dist); integer weights make every
     * distance exact, so cross-engine equality is bit-level, not
     * epsilon.
@@ -727,11 +686,17 @@ object Graph {
   def ssspStatus(edges: DataFrame, seeds: DataFrame,
       rounds: Int): (DedupPlan, Boolean) = {
     require(rounds >= 1, "need rounds >= 1")
-    import org.apache.spark.storage.StorageLevel
-    val e = edges.select(col("src"), col("dst"), col("w"))
-      .repartition(col("src"))
-      .sortWithinPartitions(col("src")) // pre-sorted: see pageRankPlan
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
+    relax(edges, seeds, rounds, "dist", "sssp")
+  }
+
+  /** The one distance relaxation behind [[ssspStatus]] and
+    * [[bfsLevelsPlan]], naming the distance column `out`. It accepts
+    * 0 rounds (the seeds at distance 0), which BFS's `maxHops = 0`
+    * needs.
+    */
+  private def relax(edges: DataFrame, seeds: DataFrame, rounds: Int,
+      out: String, strategy: String): (DedupPlan, Boolean) = {
+    val e = bySrc(edges.select(col("src"), col("dst"), col("w")))
     // round state: every reached node's distance, `improved` marking
     // the frontier (the seeds, before the first round); the frontier
     // emptiness read off each cut is the convergence probe
@@ -756,7 +721,8 @@ object Graph {
           (col("dist").isNull ||
             (col("nd").isNotNull && col("nd") < col("dist"))).as("improved"))
     }
-    (r.plan(r.result.select(col("id"), col("dist")), "sssp", Seq(e)), r.converged)
+    (r.plan(r.result.select(col("id"), col("dist").as(out)), strategy, Seq(e)),
+      r.converged)
   }
 
   /** The q51 gate body: inverse-support shortest paths over the
@@ -767,10 +733,9 @@ object Graph {
     * one-traversal discipline as [[componentSummaryPlan]].
     */
   private def ssspGate(li: DataFrame, rounds: Int): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     val cp = copurchaseEdgesWeighted(li)
       .withColumn("w", expr("1000000 DIV sup"))
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
+      .persist(Level)
     val e = cp.select(explode(array(
         struct(col("u").as("src"), col("v").as("dst"), col("w").as("w")),
         struct(col("v").as("src"), col("u").as("dst"), col("w").as("w"))))
@@ -858,12 +823,9 @@ object Graph {
 
     // 3 synchronous label-propagation rounds over the symmetrized
     // co-purchase graph: deterministic community labels per product
-    "q46_label_prop" -> ((s, dir) => {
-      val cp = copurchaseEdges(table(s, dir, "lineitem"))
-      val sym = cp.select(col("u").as("src"), col("v").as("dst"))
-        .unionAll(cp.select(col("v").as("src"), col("u").as("dst")))
-      labelPropagation(sym, iters = 3).orderBy("id")
-    }))
+    "q46_label_prop" -> ((s, dir) =>
+      labelPropagation(symmetric(copurchaseEdges(table(s, dir, "lineitem"))),
+        iters = 3).orderBy("id")))
 
   def oracles: Map[String, String] = Map(
     "q40_pagerank" -> {

@@ -1099,12 +1099,14 @@ object TextAnalysis {
       bpeTrain(Sampling.fixedK(
         table(s, dir, "documents"), col("doc_id"), 200, "bpe"), 5)
         .orderBy("rank")),
-    // apply the learned merges: per-doc piece counts before/after.
+    // the bpe_annotate pipeline step's default arm on the trained
+    // table: per-doc token and piece counts plus the merged-piece
+    // fraction, one projection with the pieces computed once
     "ta_bpe_encode" -> ((s, dir) =>
-      bpeEncodeNative(table(s, dir, "documents"), trainedMerges(s, dir))
+      bpeAnnotate(table(s, dir, "documents"), trainedMerges(s, dir))
+        .select("doc_id", "n_tokens", "n_pieces", "merged_frac")
         .orderBy("doc_id")),
-    // the same encoder and trained table under the kernel's own name,
-    // gated against the SAME DuckDB replay
+    // apply the learned merges: per-doc piece counts before/after
     "ta_bpe_encode_native" -> ((s, dir) =>
       bpeEncodeNative(table(s, dir, "documents"), trainedMerges(s, dir))
         .orderBy("doc_id")),
@@ -1243,12 +1245,18 @@ object TextAnalysis {
         s"SELECT CAST($r AS BIGINT) AS rank, w1 AS left_tok, " +
           s"w2 AS right_tok, CAST(n AS BIGINT) AS n FROM m$r")
         .mkString("\nUNION ALL\n") + "\nORDER BY rank"),
+    // annotation replay: the encode replay's token and piece counts,
+    // and the coverage replay's merged pieces (chr(31)) over all pieces
     "ta_bpe_encode" -> (bpeCtes(5) +
-      """
-        |SELECT dk.doc_id,
+      """,
+        |pc AS (SELECT doc_id,
+        |  string_split(trim(rep, '|'), '||') AS ps FROM d5)
+        |SELECT pc.doc_id,
         | CAST(len(string_split(trim(d0.rep, '|'), '||')) AS BIGINT) AS n_tokens,
-        | CAST(len(string_split(trim(dk.rep, '|'), '||')) AS BIGINT) AS n_pieces
-        |FROM d5 dk JOIN d0 USING (doc_id) ORDER BY doc_id""".stripMargin),
+        | CAST(len(ps) AS BIGINT) AS n_pieces,
+        | CAST(len(list_filter(ps, x -> contains(x, chr(31)))) AS DOUBLE)
+        |   / len(ps) AS merged_frac
+        |FROM pc JOIN d0 USING (doc_id) ORDER BY doc_id""".stripMargin),
     // id-encoding replay: the k-round rep's pieces with position,
     // mapped through the top-50 vocab (left join, OOV -> -1), the id
     // sequence reassembled in piece order
@@ -1323,8 +1331,8 @@ object TextAnalysis {
         | CAST(len(list_filter(ps, x -> contains(x, chr(31)))) AS DOUBLE)
         |   / len(ps) AS merged_frac
         |FROM pc ORDER BY doc_id""".stripMargin),
-    // identical replay: the native kernel must reproduce the replace
-    // chain bit-for-bit
+    // the replace chain replayed: the native kernel must reproduce it
+    // bit-for-bit
     "ta_bpe_encode_native" -> (bpeCtes(5) +
       """
         |SELECT dk.doc_id,

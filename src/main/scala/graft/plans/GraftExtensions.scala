@@ -1,7 +1,7 @@
 package graft.plans
 
 import graft.functions.{BpeEncodeIds, BpeEncodeMinRank, BpeEncodePieces, DotLong, TokenStats, TopKAgg, UnicodeNormalize}
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 
 /** Session-extension registration — the idiomatic injection point for
   * the engine's native expressions (set
@@ -12,41 +12,22 @@ import org.apache.spark.sql.SparkSessionExtensions
   * the extension surface is deliberately just expressions.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(DotLong.descriptor)
-    ext.injectFunction(UnicodeNormalize.descriptor)
-    ext.injectFunction(TopKAgg.descriptor)
-    ext.injectFunction(BpeEncodePieces.descriptor)
-    ext.injectFunction(BpeEncodeMinRank.descriptor)
-    ext.injectFunction(BpeEncodeIds.descriptor)
-    ext.injectFunction(TokenStats.descriptor)
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach(ext.injectFunction)
 }
 
 object GraftExtensions {
+  /** Every native expression the engine registers, listed once for
+    * both registration paths.
+    */
+  val functions: Seq[SparkSessionExtensions#FunctionDescription] = Seq(
+    DotLong.descriptor, UnicodeNormalize.descriptor, TopKAgg.descriptor,
+    BpeEncodePieces.descriptor, BpeEncodeMinRank.descriptor,
+    BpeEncodeIds.descriptor, TokenStats.descriptor)
+
   /** Imperative registration for sessions built without the conf. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      DotLong.descriptor._1, DotLong.descriptor._2, DotLong.descriptor._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      UnicodeNormalize.descriptor._1,
-      UnicodeNormalize.descriptor._2,
-      UnicodeNormalize.descriptor._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      TopKAgg.descriptor._1, TopKAgg.descriptor._2, TopKAgg.descriptor._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      BpeEncodePieces.descriptor._1,
-      BpeEncodePieces.descriptor._2,
-      BpeEncodePieces.descriptor._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      BpeEncodeMinRank.descriptor._1,
-      BpeEncodeMinRank.descriptor._2,
-      BpeEncodeMinRank.descriptor._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      BpeEncodeIds.descriptor._1,
-      BpeEncodeIds.descriptor._2,
-      BpeEncodeIds.descriptor._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      TokenStats.descriptor._1, TokenStats.descriptor._2, TokenStats.descriptor._3)
-  }
+  def register(spark: SparkSession): Unit =
+    functions.foreach { case (id, info, builder) =>
+      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
+    }
 }

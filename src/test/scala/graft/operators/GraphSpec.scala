@@ -380,7 +380,7 @@ class GraphSpec extends SparkSpec {
     val p = (0 until 15).map(i => (f"a$i%02d", f"a${i + 1}%02d"))
       .toDF("u", "v")
     Seq(3, 6).foreach { rounds =>
-      val plan = Graph.kCorePlan(p, k = 2, rounds = rounds)
+      val plan = Graph.kCoreStatus(p, k = 2, rounds = rounds)._1
       val got = plan.df.collect().map(x => x.getString(0) -> x.getLong(1)).toMap
       assert(got == (rounds to 15 - rounds).map(i => f"a$i%02d" -> 2L).toMap)
       // the result reads one round's cut, not the composed peel
@@ -404,8 +404,8 @@ class GraphSpec extends SparkSpec {
     val (lp4, lp12) = (depth(Graph.labelPropagationPlan(sym, iters = 4)),
       depth(Graph.labelPropagationPlan(sym, iters = 12)))
     assert(lp12 <= lp4 + 5, s"label propagation: 4 rounds $lp4 lines, 12 rounds $lp12")
-    val (kc4, kc12) = (depth(Graph.kCorePlan(pairs, k = 2, rounds = 4)),
-      depth(Graph.kCorePlan(pairs, k = 2, rounds = 12)))
+    val (kc4, kc12) = (depth(Graph.kCoreStatus(pairs, k = 2, rounds = 4)._1),
+      depth(Graph.kCoreStatus(pairs, k = 2, rounds = 12)._1))
     assert(kc12 <= kc4 + 5, s"k-core: 4 rounds $kc4 lines, 12 rounds $kc12")
   }
 
@@ -484,7 +484,7 @@ class GraphSpec extends SparkSpec {
       ("labelPropagationPlan",
         () => Graph.labelPropagationPlan(e, iters = 5),
         () => Graph.labelPropagation(e, iters = 5)),
-      ("kCorePlan", () => Graph.kCorePlan(pairs, k = 2, rounds = 6),
+      ("kCoreStatus", () => Graph.kCoreStatus(pairs, k = 2, rounds = 6)._1,
         () => Graph.kCore(pairs, k = 2, rounds = 6)),
       ("ssspStatus", () => Graph.ssspStatus(we, seeds, rounds = 6)._1,
         () => Graph.sssp(we, seeds, rounds = 6)),
