@@ -50,8 +50,8 @@ object Canonicalizer {
 
   /** Canonical text of a whole row over the given columns (default:
     * all). Fast display form: separator-joined. NOT injective when a
-    * string value can contain FieldSep — use [[canonRowStrict]] where
-    * false-equal is unacceptable.
+    * string value can contain FieldSep; the comparator hashes native
+    * values instead ([[rowHash]]), which keeps column boundaries.
     */
   def canonRow(df: DataFrame, cols: Seq[String] = Nil): Column = {
     val names = if (cols.nonEmpty) cols else df.schema.fieldNames.toSeq
@@ -61,31 +61,6 @@ object Canonicalizer {
     }
     concat_ws(FieldSep, fields: _*)
   }
-
-  /** Injective canonical text: the pre-rendered fields wrapped in JSON
-    * (exact escaping — `("a","b")` and `("a","b")` stay
-    * distinct, unlike the separator-joined form). Still a pure
-    * codegen'd expression; this is the comparator's default.
-    */
-  def canonRowStrict(df: DataFrame, cols: Seq[String] = Nil): Column = {
-    val names = if (cols.nonEmpty) cols else df.schema.fieldNames.toSeq
-    val fields = names.zipWithIndex.map { case (n, i) =>
-      canonCol(df.col(n), df.schema(n).dataType).as(s"c$i")
-    }
-    to_json(struct(fields: _*))
-  }
-
-  /** 64-bit hash of the canonical row — the unit of bag-equality.
-    * xxhash64 is codegen'd and an order-of-magnitude cheaper than md5;
-    * md5 remains available for parity fingerprints (Parity.scala).
-    */
-  def canonHash(df: DataFrame, cols: Seq[String] = Nil): Column =
-    xxhash64(canonRow(df, cols))
-
-  /** df + `__canon` and `__h` columns appended (strict/injective form). */
-  def withCanon(df: DataFrame, cols: Seq[String] = Nil): DataFrame =
-    df.withColumn("__canon", canonRowStrict(df, cols))
-      .withColumn("__h", xxhash64(col("__canon")))
 
   /** True when hashing the native value with xxhash64 is unsafe or
     * impossible for this type, so the column must hash its canonical
@@ -120,8 +95,8 @@ object Canonicalizer {
   private def isAtomic(dt: DataType): Boolean = !needsJsonHash(dt)
 
   /** Direct row hash over the NATIVE column values — the comparator's
-    * hot path. Same equivalence classes as hashing the strict canonical
-    * text (equal values, equal null pattern, column boundaries kept),
+    * hot path. Same equivalence classes as an injective canonical text
+    * (equal values, equal null pattern, column boundaries kept),
     * but skips the render entirely: no date_format, no JSON assembly —
     * timestamps hash as their internal micros, decimals as unscaled
     * values, all inside whole-stage codegen at a fraction of the

@@ -159,6 +159,12 @@ final case class DiffReport(
   *     reference's Python set-diff which ignores multiplicity,
   *     /root/reference/main.py:116-137).
   *
+  * The row hashes, the bucket, the per-bucket cell and the mismatch
+  * rule of stages 1–3 are `graft.diff.Fingerprint`: one fingerprint
+  * algebra, which [[FingerprintStore]] and the streaming diffs
+  * ([[graft.streaming.Streaming.diffStreams]]) share, so every path
+  * calls a bucket clean on the same evidence.
+  *
   * At 100 TB: stage-2 output is O(numBuckets), independent of input;
   * the expensive re-scan in stage 3 reads only `mismatched/numBuckets`
   * of the data and keeps the orphan rows of decoded buckets, and the
@@ -173,23 +179,6 @@ object Comparator {
   private def sameType(a: org.apache.spark.sql.types.DataType,
       b: org.apache.spark.sql.types.DataType): Boolean =
     org.apache.spark.sql.graftshim.TypeBridge.sameTypeIgnoreNullability(a, b)
-
-  /** Column names the comparator derives on its inputs: the two row
-    * hashes, the bucket, the bag delta, the orphan row number and the
-    * orphan copy count. An input column with one of these names would
-    * be silently overwritten or consumed, so [[compare]] and
-    * [[compareAuto]] reject it (case-insensitively, as Spark resolves
-    * names).
-    */
-  val ReservedColumns: Seq[String] =
-    Seq("__h", "__h2", "__bucket", "__d", "__rn", "__copies")
-
-  private def rejectReserved(src: DataFrame, tgt: DataFrame): Unit =
-    for ((side, df) <- Seq("source" -> src, "target" -> tgt); c <- df.columns)
-      if (ReservedColumns.exists(_.equalsIgnoreCase(c)))
-        throw new IllegalArgumentException(
-          s"$side column '$c' uses a name reserved for the comparator's " +
-            s"internal columns (${ReservedColumns.mkString(", ")}); rename it")
 
   def schemaGate(src: DataFrame, tgt: DataFrame, check: SchemaCheck): Unit = {
     val (s, t) = (src.schema, tgt.schema)
@@ -213,18 +202,12 @@ object Comparator {
     }
   }
 
-  /** Canonical row + bucket assignment. Pure narrow transformation —
-    * the per-row canonicalize+hash rides the scan stage; its map-side
-    * partial aggregation means the only shuffle is O(numBuckets).
-    * (Measured: forcing a pre-repartition for extra scan parallelism
-    * does not pay for its shuffle even on single-row-group local
-    * files; on real multi-file data scan splits provide parallelism.)
+  /** [[compare]]'s hashed and bucketed rows: `df` + `__h`, `__h2`,
+    * `__bucket` (the fingerprint algebra's row hashes and bucket).
     */
   def withBuckets(df: DataFrame, numBuckets: Int,
       valueForms: Map[String, Column] = Map.empty): DataFrame =
-    df.withColumn("__h", Canonicalizer.rowHash(df, 42L, valueForms = valueForms))
-      .withColumn("__h2", Canonicalizer.rowHash(df, 0x9E3779B9L, valueForms = valueForms))
-      .withColumn("__bucket", pmod(col("__h"), lit(numBuckets.toLong)))
+    Fingerprint.withBuckets(df, numBuckets, "input", valueForms)
 
   /** Hash inputs for the positions whose source and target types
     * differ — only [[SchemaCheck.ArityOnly]] lets such a position
@@ -247,23 +230,10 @@ object Comparator {
     (forms(src, pairs), forms(tgt, pairs.map(_.swap)))
   }
 
-  /** Per-bucket commutative fingerprint: one row per non-empty bucket.
-    * Map-side partial aggregation applies (hash agg before shuffle).
-    * Sums run in DECIMAL(38,0): a long sum of 64-bit hashes overflows
-    * (an error under Spark 4's default ANSI mode) while 38 digits hold
-    * exact sums of |v|≤2⁶³ for ~10¹⁹ rows per bucket.
+  /** Per-bucket commutative fingerprint of a [[withBuckets]] frame:
+    * one row per non-empty bucket, (`__bucket`, cnt, hsum, h2sum).
     */
-  def fingerprints(bucketed: DataFrame): DataFrame = fingerprintsWith(bucketed)
-
-  private def fingerprintsWith(bucketed: DataFrame, extra: Column*): DataFrame = {
-    val dec38 = DecimalType(38, 0)
-    bucketed
-      .groupBy(col("__bucket"))
-      .agg(
-        count(lit(1)).as("cnt"),
-        sum(col("__h").cast(dec38)).as("hsum") +:
-          sum(col("__h2").cast(dec38)).as("h2sum") +: extra: _*)
-  }
+  def fingerprints(bucketed: DataFrame): DataFrame = Fingerprint.cells(bucketed)
 
   /** The decode's purity checksum of a row hash: 24 bits of an
     * independent hash of `h`. Summed per bucket it is the
@@ -386,28 +356,24 @@ object Comparator {
       src: DataFrame,
       tgt: DataFrame,
       opts: CompareOptions = CompareOptions()): DiffReport = {
-    rejectReserved(src, tgt)
     schemaGate(src, tgt, opts.schemaCheck)
     opts.progress(
       s"plan: ${opts.numBuckets} buckets over ${src.columns.length} columns (schema ${opts.schemaCheck})")
 
     val (srcForms, tgtForms) = crossTypeForms(src, tgt)
-    val sb0 = withBuckets(src, opts.numBuckets, srcForms)
-    val tb0 = withBuckets(tgt, opts.numBuckets, tgtForms)
+    val sb0 = Fingerprint.withBuckets(src, opts.numBuckets, "source", srcForms)
+    val tb0 = Fingerprint.withBuckets(tgt, opts.numBuckets, "target", tgtForms)
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
     val (sb, tb) =
       if (opts.persistScans) (sb0.persist(lvl), tb0.persist(lvl)) else (sb0, tb0)
 
-    // the stored fingerprint plus the decode's purity checksum
-    val sf = fingerprintsWith(sb, sum(keyCheck(col("__h"))).as("csum"))
-    val tf = fingerprintsWith(tb, sum(keyCheck(col("__h"))).as("csum"))
-
-    def prefixed(f: DataFrame, p: String) =
-      f.select(col("__bucket") +: f.columns.tail.map(c => col(c).as(p + c)).toIndexedSeq: _*)
-    // cached narrow: the decimal sums are consumed by the decode here
-    // and never stored
-    val joined = decodeBuckets(prefixed(sf, "s_")
-      .join(prefixed(tf, "t_"), Seq("__bucket"), "full_outer"), opts.numBuckets)
+    // the stored fingerprint plus the decode's purity checksum; cached
+    // narrow: the decimal sums are consumed by the decode here and
+    // never stored
+    val csum = sum(keyCheck(col("__h"))).as("csum")
+    val joined = decodeBuckets(
+      Fingerprint.joined(Fingerprint.cells(sb, csum), Fingerprint.cells(tb, csum)),
+      opts.numBuckets)
       .cache()
 
     val t0 = System.nanoTime()
@@ -560,14 +526,13 @@ object Comparator {
         coalesce(col("s_cnt"), lit(0L)).as("s_cnt"),
         coalesce(col("t_cnt"), lit(0L)).as("t_cnt"),
         delta("hsum", zero).as("dh"), delta("h2sum", zero).as("dh2"),
-        delta("csum", lit(0L)).as("dc"))
+        delta("csum", lit(0L)).as("dc"), Fingerprint.mismatch("s_", "t_").as("mismatch"))
       .withColumn("k", when(col("s_cnt") =!= col("t_cnt"),
         (col("s_cnt") - col("t_cnt")).cast(dec38)))
       .withColumn("q", quotient("dh"))
       .withColumn("q2", quotient("dh2"))
       .select(col("__bucket"), col("s_cnt"), col("t_cnt"),
-        (col("s_cnt") =!= col("t_cnt") || col("dh") =!= 0 || col("dh2") =!= 0).as("mismatch"),
-        when(pure, col("q")).as("kh"), when(pure, col("q2")).as("kh2"))
+        col("mismatch"), when(pure, col("q")).as("kh"), when(pure, col("q2")).as("kh2"))
   }
 
   /** Bag diff keyed on the two independent 64-bit row hashes carried by
@@ -649,7 +614,7 @@ object Comparator {
     * (`side` + data columns). `__copies` is RESERVED: a column of
     * that name is read as the per-row copy count that
     * [[DiffReport.orphansWithCopies]] carries, never as data (the
-    * comparator rejects it on its inputs; see [[ReservedColumns]]),
+    * comparator rejects it on its inputs, like its other internal names),
     * and must be integral (anything else is an
     * `IllegalArgumentException`).
     * Output: (side, action, dml). One narrow codegen'd projection
@@ -784,7 +749,8 @@ object Comparator {
       opts: CompareOptions = CompareOptions(),
       srcRowsHint: Option[Long] = None,
       tgtRowsHint: Option[Long] = None): DiffReport = {
-    rejectReserved(src, tgt) // before planning, which may run a count
+    // before planning, which may run a count
+    Fingerprint.rejectReserved("source" -> src, "target" -> tgt)
     compare(src, tgt,
       opts.copy(numBuckets =
         planBuckets(src, tgt, targetRowsPerBucket, srcRowsHint, tgtRowsHint)))

@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
 object FingerprintStore {
 
   def write(df: DataFrame, numBuckets: Int, path: String): Unit =
-    Comparator.fingerprints(Comparator.withBuckets(df, numBuckets))
+    Fingerprint.cells(Fingerprint.withBuckets(df, numBuckets, "input"))
       .withColumn("num_buckets", lit(numBuckets))
       .write.mode("overwrite").parquet(path)
 
@@ -417,23 +417,15 @@ object FingerprintStore {
     MerkleDiff(frontier.sorted, nodesRead, exhaustive)
   }
 
-  /** (mismatchedBuckets, storedRowCount, liveRowCount). */
+  /** (mismatchedBuckets, storedRowCount, liveRowCount): the stored
+    * cells against `df`'s, bucketed as the store was, by the batch
+    * compare's mismatch rule.
+    */
   def compareWithStored(df: DataFrame, path: String): (Long, Long, Long) = {
     val (stored, nb) = read(df.sparkSession, path)
-    val live = Comparator.fingerprints(Comparator.withBuckets(df, nb))
-    val j = stored
-      .withColumnRenamed("cnt", "s_cnt").withColumnRenamed("hsum", "s_hsum")
-      .withColumnRenamed("h2sum", "s_h2sum")
-      .join(live.withColumnRenamed("cnt", "l_cnt").withColumnRenamed("hsum", "l_hsum")
-        .withColumnRenamed("h2sum", "l_h2sum"), Seq("__bucket"), "full_outer")
-    val r = j.agg(
-      sum(when(
-        !(coalesce(col("s_cnt"), lit(0L)) === coalesce(col("l_cnt"), lit(0L))) ||
-        !(coalesce(col("s_hsum"), lit(0)) <=> coalesce(col("l_hsum"), lit(0))) ||
-        !(coalesce(col("s_h2sum"), lit(0)) <=> coalesce(col("l_h2sum"), lit(0))), 1L)
-        .otherwise(0L)).as("bad"),
-      coalesce(sum("s_cnt"), lit(0L)),
-      coalesce(sum("l_cnt"), lit(0L))).head()
+    val live = Fingerprint.cells(Fingerprint.withBuckets(df, nb, "live"))
+    val r = Fingerprint.joined(stored, live).agg(count(when(Fingerprint.mismatch("s_", "t_"), 1)),
+      coalesce(sum("s_cnt"), lit(0L)), coalesce(sum("t_cnt"), lit(0L))).head()
     (r.getLong(0), r.getLong(1), r.getLong(2))
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.canon.Canonicalizer
+import graft.diff.Fingerprint
 import graft.operators.Tokens
 import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset}
@@ -43,21 +43,6 @@ object Streaming {
         sum(col("value").cast(org.apache.spark.sql.types.DecimalType(18, 6)))
           .cast("double").as("sum_value"))
       .select(col("w.start").as("hour"), col("event_type"), col("n"), col("sum_value"))
-
-  /** SLIDING-window counts — [[windowedCounts]]' overlapping sibling
-    * (1-hour windows advancing every 15 minutes): each event lands in
-    * 4 windows, the shape a latency-sensitive rate monitor wants
-    * (a tumbling window reports a spike up to a full hour late).
-    * State = (horizon / slide) windows per key — 4× the tumbling
-    * state, still watermark-bounded. The same expression tree runs on
-    * a static frame, so the batch twin is this function verbatim.
-    */
-  def slidingCounts(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "2 hours")
-      .groupBy(window(col("ts"), "1 hour", "15 minutes").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("w.start").as("w_start"), col("event_type"), col("n"))
 
   /** Batch sessionization: per user, a >30-min gap starts a new
     * session. Single shuffle on user_id; windows are partition-local.
@@ -343,18 +328,16 @@ object Streaming {
       .select(col("w.start").as("w_start"), col("token"), col("n"))
 
   /** Incremental dataset fingerprint: the streaming twin of
-    * [[graft.diff.Comparator.fingerprints]] — per-bucket running
-    * (count, hash-sum) updated per micro-batch. Comparing two streams'
-    * fingerprint tables gives a continuously-maintained dataset diff at
-    * O(numBuckets) state, any scale.
+    * [[graft.diff.Comparator.fingerprints]] — the same per-bucket cell
+    * (cnt, hsum, h2sum), running sums updated per micro-batch.
+    * Comparing two streams' fingerprint tables gives a
+    * continuously-maintained dataset diff at O(numBuckets) state, any
+    * scale. The cell gained `h2sum` when the streaming and batch
+    * fingerprints became one: a query started from a checkpoint
+    * written by the earlier (cnt, hsum) aggregate cannot restart.
     */
-  def incrementalFingerprints(df: DataFrame, numBuckets: Int): DataFrame = {
-    val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
-    val c = df.withColumn("__h", Canonicalizer.rowHash(df, 42L))
-    c.withColumn("__bucket", pmod(col("__h"), lit(numBuckets.toLong)))
-      .groupBy(col("__bucket"))
-      .agg(count(lit(1)).as("cnt"), sum(col("__h").cast(dec38)).as("hsum"))
-  }
+  def incrementalFingerprints(df: DataFrame, numBuckets: Int): DataFrame =
+    Fingerprint.cells(Fingerprint.withBuckets(df, numBuckets, "input"))
 
   /** Continuous distribution drift — the streaming twin of
     * [[graft.operators.Profiler.histogramDrift]]: both streams union
@@ -536,29 +519,28 @@ object Streaming {
       .select(col("key"), col("w.start").cast("date").as("day"), col("n"))
 
   /** Continuous two-stream diff: union both streams with a side tag
-    * and keep ONE stateful aggregation of per-(bucket, side)
-    * fingerprints — a live `mismatch` flag per bucket, O(numBuckets)
-    * state total. The streaming generalization of
-    * [[graft.diff.Comparator.compare]]'s fingerprint join: when both
-    * streams have delivered the same bag of rows, every bucket's
-    * mismatch is false; a bucket stays flagged while the sides
-    * disagree (e.g. one stream lags).
+    * and keep ONE stateful aggregation of per-bucket cells, one per
+    * side (`s_`/`t_` + cnt, hsum, h2sum; each side's hashes masked to
+    * null on the other side's rows, so a side with no rows in a bucket
+    * holds cnt 0 and null sums) — a live `mismatch` flag per bucket by
+    * the batch compare's rule, O(numBuckets) state total. The streaming
+    * generalization of [[graft.diff.Comparator.compare]]'s fingerprint
+    * join: when both streams have delivered the same bag of rows, every
+    * bucket's mismatch is false; a bucket stays flagged while the
+    * sides disagree (e.g. one stream lags). The cells gained `h2sum`
+    * when the streaming and batch fingerprints became one: a query
+    * started from a checkpoint written by the earlier (cnt, hsum)
+    * aggregate cannot restart.
     */
   def diffStreams(src: DataFrame, tgt: DataFrame, numBuckets: Int): DataFrame = {
-    val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
-    def prep(df: DataFrame, side: String): DataFrame =
-      df.withColumn("__h", Canonicalizer.rowHash(df, 42L))
-        .withColumn("__bucket", pmod(col("__h"), lit(numBuckets.toLong)))
-        .select(col("__bucket"), col("__h"), lit(side).as("__side"))
-    prep(src, "s").unionByName(prep(tgt, "t"))
-      .groupBy(col("__bucket"))
-      .agg(
-        sum(when(col("__side") === "s", 1L).otherwise(0L)).as("s_cnt"),
-        sum(when(col("__side") === "t", 1L).otherwise(0L)).as("t_cnt"),
-        sum(when(col("__side") === "s", col("__h").cast(dec38)).otherwise(lit(0).cast(dec38))).as("s_hsum"),
-        sum(when(col("__side") === "t", col("__h").cast(dec38)).otherwise(lit(0).cast(dec38))).as("t_hsum"))
-      .withColumn("mismatch",
-        col("s_cnt") =!= col("t_cnt") || !(col("s_hsum") <=> col("t_hsum")))
+    def tagged(df: DataFrame, side: String): DataFrame =
+      Fingerprint.withBuckets(df, numBuckets, side)
+        .select(col("__bucket"), col("__h"), col("__h2"), lit(side).as("__side"))
+    def on(side: String) = Fingerprint.cell(side.take(1) + "_", Some(col("__side") === side))
+    val aggs = on("source") ++ on("target")
+    tagged(src, "source").unionByName(tagged(tgt, "target"))
+      .groupBy(col("__bucket")).agg(aggs.head, aggs.tail: _*)
+      .withColumn("mismatch", Fingerprint.mismatch("s_", "t_"))
   }
 
   /** Streaming CDC — the ingest twin of

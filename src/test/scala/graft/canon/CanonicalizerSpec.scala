@@ -66,10 +66,7 @@ class CanonicalizerSpec extends SparkSpec {
     val f1 = df1.select(Canonicalizer.canonRow(df1).as("c")).as[String].head()
     val f2 = df2.select(Canonicalizer.canonRow(df2).as("c")).as[String].head()
     assert(f1 == f2)
-    // …strict form distinguishes, so the comparator does too
-    val s1 = df1.select(Canonicalizer.canonRowStrict(df1).as("c")).as[String].head()
-    val s2 = df2.select(Canonicalizer.canonRowStrict(df2).as("c")).as[String].head()
-    assert(s1 != s2)
+    // …the comparator's row hash keeps column boundaries, so it does not
     val rep = graft.diff.Comparator.compare(df1, df2,
       graft.diff.CompareOptions(numBuckets = 4))
     assert(!rep.identical)

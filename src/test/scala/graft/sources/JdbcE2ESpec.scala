@@ -200,4 +200,33 @@ class JdbcE2ESpec extends SparkSpec {
     assert(rep.orphanSrc == 51 && rep.orphanTgt == 0)
     rep.release()
   }
+
+  test("JDBC e2e: a read that fails mid-partition exits 2 and prints no verdict") {
+    // Derby raises on the row a = 2500 only; given bounds mean no
+    // planning query runs, so the failure comes from one of the four
+    // partition reads inside the fingerprint pass
+    initDb("fsrcdb"); initDb("ftgtdb")
+    def side(db: String) =
+      s"""  db:
+         |    type: jdbc
+         |    url: "${url(db)}"
+         |    driver: $Driver
+         |    qry: SELECT a, b, c, 1/(a - 2500) AS z FROM t_test
+         |    partition_column: a
+         |    num_partitions: 4
+         |    lower_bound: 1
+         |    upper_bound: $Rows
+         |""".stripMargin
+    val cfg = java.nio.file.Files.createTempFile("graft_jdbc", ".yaml")
+    java.nio.file.Files.write(cfg, (s"source:\n${side("fsrcdb")}target:\n${side("ftgtdb")}" +
+      "num_buckets: 64\n").getBytes("UTF-8"))
+    val spec = ConfigLoader.load(cfg.toString)
+    assert(Sources.resolve(spark, spec.source).rdd.getNumPartitions == 4)
+    val out = new java.io.ByteArrayOutputStream()
+    val status = Console.withOut(out)(Main.exec(Array("-f", cfg.toString), Some(spark)))
+    val lines = out.toString("UTF-8").linesIterator.toSeq
+    assert(status == 2, lines)
+    assert(!lines.exists(_.startsWith("Datasets are")), lines)
+    assert(!spark.sparkContext.isStopped)
+  }
 }

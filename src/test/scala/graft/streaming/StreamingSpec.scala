@@ -551,10 +551,10 @@ class StreamingSpec extends SparkSpec {
       mem.addData(b); q.processAllAvailable()
     } finally q.stop()
     val streamed = spark.table("fp").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDecimal(2))).toSet
-    val batch = Streaming.incrementalFingerprints(
-      eventsDf, numBuckets = 32).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDecimal(2))).toSet
+      .map(r => (r.getLong(0), r.getLong(1), r.getDecimal(2), r.getDecimal(3))).toSet
+    val batch = graft.diff.Comparator.fingerprints(
+      graft.diff.Comparator.withBuckets(eventsDf, numBuckets = 32)).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDecimal(2), r.getDecimal(3))).toSet
     assert(streamed == batch && streamed.nonEmpty)
   }
 
